@@ -215,7 +215,6 @@ def main() -> None:
     stages["tree_build"] = kernel_s + (time.time() - t0)
     stages["tree_build_collect"] = 0.0  # fused into degree_collect
     stages["tree_build_kernel"] = kernel_s
-    stages["tree_build_select"] = seq_t.get("select_s", 0.0)  # Boruvka share (fallback paths only)
 
     parts_meta = {}
     stages["tree_collect"] = 0.0  # parent/weight arrays never left the driver

@@ -1,48 +1,54 @@
 #!/usr/bin/env python3
 """Profile the elimination-tree kernel in isolation (no Spark).
 
-Generates the same skewed distribution as bench.synth_edges at com-lj
-scale (35M undirected edges, V=4M), converts to deduped (lo, hi)
-pos-space pairs, then measures:
+Generates the same skewed distribution as bench.synth_edges (PROF_EDGES
+raw edges over PROF_V vertices; defaults 4M / 500k), converts it to
+deduped (lo, hi) pos-space pairs, then times ``tree._eliminate`` on both
+of its paths:
 
-  1. _msf_select wall + retention (selected / input edges)
-  2. the interpreted union-find sweep WITH selection
-  3. the sweep WITHOUT selection (the round-2 driver path)
+  1. in this process: the compiled counting-sort sweep (or the
+     interpreted sweep if the C library is unavailable here);
+  2. in a child run with ``SPARK_GRAFT_NO_CSWEEP=1``: the interpreted
+     sweep, the fallback on hosts without a C compiler.
 
-Prints one JSON line. Used to ground the BASELINE.md kernel-rate claims
-(VERDICT r2 tasks 1 and 3).
+Prints one JSON line with both walls, the interpreted/compiled slowdown
+and whether the two paths built the same tree. Run as
+``python scripts/profile_tree_kernel.py``; a run with
+``SPARK_GRAFT_NO_CSWEEP=1`` set times the interpreted leg alone. The
+defaults finish in about a minute; the interpreted leg dominates.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import subprocess
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from sheep_spark import tree  # noqa: E402
+from sheep_spark import _csweep, tree  # noqa: E402
 
-E = int(os.environ.get("PROF_EDGES", str(35_000_000)))
-V = int(os.environ.get("PROF_V", str(4_000_000)))
-SKIP_NOSELECT = os.environ.get("PROF_SKIP_NOSELECT") == "1"
+E = int(os.environ.get("PROF_EDGES", str(4_000_000)))
+V = int(os.environ.get("PROF_V", str(500_000)))
 
 
-def _warm_memory_pool(gb: float = 8.0) -> None:
-    """Pre-touch a pool of pages and free it. This sandbox backs fresh
-    pages lazily at ~60 MB/s first touch (measured; warm pages run at
-    4+ GB/s), so any phase that allocates big fresh arrays pays a fake
-    one-time cost a real host doesn't have. Touch-and-free once, then
-    the allocator reuses the warm pool."""
-    block = np.ones(int(gb * 125_000_000), dtype=np.int64)
+def _warm_memory_pool() -> None:
+    """Pre-touch a pool of pages and free it, sized to the run. Fresh
+    pages can be backed lazily at a far lower rate than warm ones, so
+    any phase that allocates big fresh arrays would pay a one-time cost
+    unrelated to the kernel; touch-and-free once, then the allocator
+    reuses the warm pool."""
+    block = np.ones(12 * E, dtype=np.int64)
     del block
 
 
-def main() -> None:
-    _warm_memory_pool()
+def _pos_pairs() -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.default_rng(7)
     # same shape as bench.synth_edges: src uniform, dst ~ u^2.5 hubs
     src = rng.integers(0, V, E, dtype=np.int64)
@@ -51,50 +57,53 @@ def main() -> None:
     lo = np.minimum(src, dst)[keep]
     hi = np.maximum(src, dst)[keep]
     pairs = np.unique(lo * np.int64(V) + hi)
-    lo, hi = pairs // V, pairs % V
     # pos space: the profile uses vid order directly (the sweep only
     # depends on the ORDER being total, which vids are)
-    n_edges = len(lo)
+    return pairs // V, pairs % V
 
-    out: dict = {"n_edges_undirected": n_edges, "n_vertices": V}
 
-    from sheep_spark import _csweep
-
-    # Default kernel: the compiled counting-sort + sweep when available
-    # (r6 late), with fused pre/pst bincounts; phases from inside C.
+def _leg(lo: np.ndarray, hi: np.ndarray) -> dict:
     tm: dict = {}
-    t0 = time.time()
+    t0 = time.perf_counter()
     kid, par = tree._eliminate(lo, hi, V, timings=tm)
-    out["kernel_s"] = round(time.time() - t0, 2)
-    out["kernel_detail"] = tm
-    out["tree_edges"] = len(kid)
-    out["kernel_rate_Medges_per_s"] = round(n_edges / out["kernel_s"] / 1e6, 2)
-    out["sort_sweep_compiled"] = _csweep.loaded_sort_sweep() is not None
+    wall = time.perf_counter() - t0
+    parent = np.full(V, -1, dtype=np.int64)
+    parent[kid] = par
+    return {
+        "compiled": _csweep.loaded() is not None,
+        "kernel_s": round(wall, 3),
+        "kernel_detail": tm,
+        "tree_edges": len(kid),
+        "kernel_rate_Medges_per_s": round(len(lo) / wall / 1e6, 2),
+        "parent_sha1": hashlib.sha1(parent.tobytes()).hexdigest(),
+    }
 
-    if not SKIP_NOSELECT:
-        # Legacy path for comparison: Boruvka select + packed sort +
-        # (C or interpreted) sweep — what the kernel runs when the
-        # sort-sweep .so is unavailable.
-        real_ss = _csweep.loaded_sort_sweep
-        _csweep.loaded_sort_sweep = lambda: None
-        try:
-            tm2: dict = {}
-            t0 = time.time()
-            kid2, par2 = tree._eliminate(lo, hi, V, timings=tm2)
-            out["legacy_select_sweep_s"] = round(time.time() - t0, 2)
-            out["legacy_detail"] = tm2
-        finally:
-            _csweep.loaded_sort_sweep = real_ss
-        assert set(zip(kid.tolist(), par.tolist())) == set(
-            zip(kid2.tolist(), par2.tolist())
-        ), "kernel paths disagree!"
-        out["outputs_identical"] = True
 
-    print(json.dumps(out))
+def main() -> None:
+    _warm_memory_pool()
+    lo, hi = _pos_pairs()
+    head = {"n_edges_undirected": len(lo), "n_vertices": V}
+    leg = _leg(lo, hi)
+    if os.environ.get("SPARK_GRAFT_NO_CSWEEP") == "1":
+        print(json.dumps({**head, **leg}))
+        return
+    child = subprocess.run(
+        [sys.executable, os.path.abspath(__file__)],
+        env={**os.environ, "SPARK_GRAFT_NO_CSWEEP": "1"},
+        check=True, capture_output=True, text=True,
+    )
+    interp = json.loads(child.stdout.strip().splitlines()[-1])
+    print(json.dumps({
+        **head,
+        "compiled": leg,
+        "interpreted": {k: interp[k] for k in leg},
+        "interpreted_slowdown": round(interp["kernel_s"] / leg["kernel_s"], 1),
+        "outputs_identical": interp["parent_sha1"] == leg["parent_sha1"],
+    }))
 
 
 if __name__ == "__main__":
     from bench import ensure_malloc_retention
 
-    ensure_malloc_retention()  # sandbox first-touch artifact; see bench.py
+    ensure_malloc_retention()  # re-exec with the allocator settings bench.py uses
     main()

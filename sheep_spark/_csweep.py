@@ -1,21 +1,26 @@
-"""Optional C implementations of the two driver-side sequential loops.
+"""Compiled C kernels for the driver-side sequential loops.
 
-The elimination sweep (tree.py ``_eliminate``) and the FFD tree packing
-(partitioner.py ``forward_partition``) are inherently sequential passes
-— the two kernels numpy cannot vectorize — and their interpreted loops
-run at ~1M steps/s/core, the documented serial floor of the driver tree
-build. This module compiles the EXACT same loops (integer-for-integer
-identical to the Python versions; the FFD kid tie-break spelled out as
-the total order python's stable sort produces) to a tiny shared library
-at first use and calls them via ctypes on the numpy buffers, ~30-50x
-faster.
+Three entry points; the first two share one union-find sweep
+(``sheep_bucket_sweep``):
 
-Strictly an accelerator, never a dependency: any failure (no compiler,
-read-only tmp, load error) silently yields the interpreted fallback, so
-the engine still runs on nodes without a toolchain; set
-SPARK_GRAFT_NO_CSWEEP=1 to force the fallback (used by the equivalence
-tests). The compiled artifact is cached per source-hash in the temp dir
-and the rename is atomic, so concurrent executor workers race safely.
+- ``sheep_sort_sweep`` — the elimination-tree kernel behind
+  ``tree._eliminate``: counting-sort the pos-space edges by hi, then
+  sweep the buckets ascending; pre/pst weights fall out of the histogram
+  and scatter passes.
+- ``sheep_seq_tree`` — the fused driver funnel behind
+  ``graph.driver_sequence_tree_arrays``: degree histogram, counting rank,
+  pos-space transform, then the same counting sort and sweep.
+- ``sheep_ffd`` — the FFD tree packing behind
+  ``partitioner.forward_partition``.
+
+Each produces exactly the output of its interpreted counterpart in
+Python, which is the fallback when the library is unavailable. The
+library is compiled with gcc at first use, cached per source hash in the
+temp dir (atomic rename, so concurrent executor workers race safely) and
+loaded via ctypes. A failed compile or load emits one ``RuntimeWarning``
+carrying the reason, and the interpreted paths run (the tree kernel
+~50-100x slower); ``SPARK_GRAFT_NO_CSWEEP=1`` skips the library on
+purpose, silently.
 """
 
 from __future__ import annotations
@@ -31,35 +36,6 @@ import numpy as np
 _C_SRC = r"""
 #include <stdint.h>
 #include <stdlib.h>
-
-/* Elimination sweep over (lo, hi) pairs already sorted by hi.
-   Exact port of tree.py::_eliminate's loop: for each edge, find the
-   root of lo's component with path halving; if it differs from hi,
-   emit (root -> hi) and union. uf must arrive initialized to the
-   identity permutation; kid_out/par_out must hold min(n_edges,
-   n_vertices) slots. Returns the number of pairs emitted. */
-int64_t sheep_sweep(const int64_t *lo, const int64_t *hi, int64_t n_edges,
-                    int64_t *uf, int64_t *kid_out, int64_t *par_out) {
-    int64_t n_out = 0;
-    for (int64_t i = 0; i < n_edges; i++) {
-        int64_t x = hi[i];
-        int64_t r = lo[i];
-        int64_t p = uf[r];
-        while (p != r) {       /* path halving, as in the Python sweep */
-            int64_t pp = uf[p];
-            uf[r] = pp;
-            r = pp;
-            p = uf[r];
-        }
-        if (r != x) {
-            kid_out[n_out] = r;
-            par_out[n_out] = x;
-            n_out++;
-            uf[r] = x;
-        }
-    }
-    return n_out;
-}
 
 /* Kid ordering for the FFD cut step: weight DESC, jnid ASC — the same
    total order python's STABLE list.sort(key=-comp) produces over the
@@ -171,23 +147,56 @@ static double sheep_now(void) {
     return ts.tv_sec + ts.tv_nsec * 1e-9;
 }
 
+/* The elimination sweep (jtree.cpp:34-55) over edges counting-sorted
+   by hi: bucket x holds the lo ends of the edges whose hi is x, and
+   cnt[x] is that bucket's END offset into lo_s. Walking the buckets
+   ascending inserts vertices in sequence order; for each edge, find
+   the root of lo's component with path halving and, if it is not x,
+   emit (root -> x) and union. uf must arrive as the identity on
+   [0, n_buckets); kid_out/par_out need min(n_edges, n_buckets) slots.
+   Returns the number of (kid, parent) pairs emitted. */
+static int64_t sheep_bucket_sweep(const int32_t *lo_s, const int32_t *cnt,
+                                  int32_t *uf, int64_t n_buckets,
+                                  int64_t n_edges,
+                                  int64_t *kid_out, int64_t *par_out) {
+    int64_t n_out = 0, pos = 0;
+    for (int64_t x = 0; x < n_buckets; x++) {
+        int64_t end = cnt[x];
+        for (; pos < end; pos++) {
+            if (pos + 16 < n_edges) __builtin_prefetch(&uf[lo_s[pos + 16]], 0, 1);
+            int32_t r = lo_s[pos];
+            int32_t p = uf[r];
+            while (p != r) {       /* path halving */
+                int32_t pp = uf[p];
+                uf[r] = pp;
+                r = pp;
+                p = uf[r];
+            }
+            if (r != (int32_t)x) {
+                kid_out[n_out] = r;
+                par_out[n_out] = x;
+                n_out++;
+                uf[r] = (int32_t)x;
+            }
+        }
+    }
+    return n_out;
+}
+
 /* Counting-sort the edges by hi (bucket = hi value, O(E + V) — the hi
    of every edge in bucket x is x itself, so only lo is materialized
-   sorted), then run the elimination sweep over the buckets ascending.
-   One call replaces _msf_select + np.sort + sheep_sweep AND the two
-   full-width bincounts of build_tree_arrays: pre_w[v] = #edges with
-   hi == v falls out of the histogram pass, pst_w[v] = #edges with
-   lo == v accumulates during the scatter. Requires ids < 2^31
+   sorted), then run sheep_bucket_sweep. pre_w[v] = #edges with hi == v
+   falls out of the histogram pass and pst_w[v] = #edges with lo == v
+   accumulates during the scatter. Requires ids and n_edges < 2^31
    (int32 internals — the kernel is memory-bound, so halving element
-   width halves its traffic) and n_edges < 2^31 (offsets live in cnt's
-   int32 slots). uf is initialized to the identity HERE; lo_s is an
-   n_edges int32 scratch, cnt an (n_vertices+1) int32 scratch,
-   kid/par int64 outs with min(n_edges, n_vertices) slots, pre_w/pst_w
-   n_vertices int64 outs, phases a double[2] out (sort wall, sweep
-   wall). Returns the number of (kid, parent) pairs emitted, or -2 if
-   an id falls outside [0, n_vertices) — checked BEFORE each use (the
-   predictable branch is ~free), where the numpy paths would raise
-   IndexError and unchecked C would corrupt memory. */
+   width halves its traffic; offsets live in cnt's int32 slots). uf is
+   initialized to the identity HERE; lo_s is an n_edges int32 scratch,
+   cnt an (n_vertices+1) int32 scratch, kid/par int64 outs with
+   min(n_edges, n_vertices) slots, pre_w/pst_w n_vertices int64 outs,
+   phases a double[2] out (sort wall, sweep wall). Returns the number
+   of (kid, parent) pairs emitted, or -2 if an id falls outside
+   [0, n_vertices) — checked BEFORE each use (the predictable branch
+   is ~free), so bad input never touches memory out of bounds. */
 int64_t sheep_sort_sweep(const int64_t *lo, const int64_t *hi,
                          int64_t n_edges, int64_t n_vertices,
                          int32_t *lo_s, int32_t *cnt, int32_t *uf,
@@ -221,29 +230,8 @@ int64_t sheep_sort_sweep(const int64_t *lo, const int64_t *hi,
     }
     phases[0] = sheep_now() - t0;
     t0 = sheep_now();
-    /* cnt[x] is now the END offset of bucket x; walk buckets ascending
-       — exactly the hi-sorted sweep of sheep_sweep, with hi implied */
-    int64_t n_out = 0, pos = 0;
-    for (int64_t x = 0; x < n_vertices; x++) {
-        int64_t end = cnt[x];
-        for (; pos < end; pos++) {
-            if (pos + 16 < n_edges) __builtin_prefetch(&uf[lo_s[pos + 16]], 0, 1);
-            int32_t r = lo_s[pos];
-            int32_t p = uf[r];
-            while (p != r) {       /* path halving, as everywhere else */
-                int32_t pp = uf[p];
-                uf[r] = pp;
-                r = pp;
-                p = uf[r];
-            }
-            if (r != (int32_t)x) {
-                kid_out[n_out] = r;
-                par_out[n_out] = x;
-                n_out++;
-                uf[r] = (int32_t)x;
-            }
-        }
-    }
+    int64_t n_out = sheep_bucket_sweep(lo_s, cnt, uf, n_vertices, n_edges,
+                                       kid_out, par_out);
     phases[1] = sheep_now() - t0;
     return n_out;
 }
@@ -356,62 +344,45 @@ int64_t sheep_seq_tree(const void *src_v, const void *dst_v, int64_t elem,
     }
     phases[1] = sheep_now() - t0;
     t0 = sheep_now();
-    int64_t n_out = 0, pos = 0;
-    for (int64_t x = 0; x < n; x++) {
-        int64_t end = cnt[x];
-        for (; pos < end; pos++) {
-            if (pos + 16 < n_edges) __builtin_prefetch(&uf[lo_s[pos + 16]], 0, 1);
-            int32_t r = lo_s[pos];
-            int32_t p = uf[r];
-            while (p != r) {
-                int32_t pp = uf[p];
-                uf[r] = pp;
-                r = pp;
-                p = uf[r];
-            }
-            if (r != (int32_t)x) {
-                kid_out[n_out] = r;
-                par_out[n_out] = x;
-                n_out++;
-                uf[r] = (int32_t)x;
-            }
-        }
-    }
+    int64_t n_out = sheep_bucket_sweep(lo_s, cnt, uf, n, n_edges,
+                                       kid_out, par_out);
     phases[2] = sheep_now() - t0;
     *out_n = n;
     return n_out;
 }
 """
 
-_cached_fn = None
-_cached_ffd = None
 _cached_sort_sweep = None
+_cached_ffd = None
 _cached_seq_tree = None
 _load_attempted = False
 
 
-def _compile() -> str | None:
-    """Compile the kernel once per source version; atomic cache in tmp."""
+def _compile() -> tuple[str | None, str]:
+    """Compile the kernels once per source version; atomic cache in tmp.
+    Returns (path to the .so, "") or (None, why the compile failed)."""
     tag = hashlib.md5(_C_SRC.encode()).hexdigest()[:16]
     tmpdir = tempfile.gettempdir()
     so_path = os.path.join(tmpdir, f"sheep_csweep_{tag}.so")
     if os.path.exists(so_path):
-        return so_path
+        return so_path, ""
     c_path = os.path.join(tmpdir, f"sheep_csweep_{tag}_{os.getpid()}.c")
     build_path = so_path + f".build_{os.getpid()}"
     try:
         with open(c_path, "w") as f:
             f.write(_C_SRC)
-        subprocess.run(
+        proc = subprocess.run(
             ["gcc", "-O2", "-shared", "-fPIC", "-o", build_path, c_path],
-            check=True,
             capture_output=True,
+            text=True,
             timeout=60,
         )
+        if proc.returncode != 0:
+            return None, f"gcc exited {proc.returncode}: {proc.stderr.strip()}"
         os.rename(build_path, so_path)  # atomic: concurrent compiles race safely
-        return so_path
-    except Exception:
-        return None
+        return so_path, ""
+    except (OSError, subprocess.TimeoutExpired) as exc:  # no gcc, read-only tmp
+        return None, f"{type(exc).__name__}: {exc}"
     finally:
         for p in (c_path, build_path):
             try:
@@ -421,14 +392,19 @@ def _compile() -> str | None:
 
 
 def loaded():
-    """The compiled sweep as a python callable, or None (fallback).
+    """The compiled counting-sort + sweep as a python callable, or None
+    when the C library did not load (interpreted fallbacks in use).
 
-    Signature: fn(lo, hi, uf, kid_out, par_out) -> n_out, where all five
-    are int64 C-contiguous numpy arrays, lo/hi sorted by hi, uf the
-    identity permutation of n_vertices (mutated in place).
-    """
+    Signature: fn(lo, hi, n_vertices, kid_out, par_out, pre_w, pst_w)
+    -> (n_out, sort_s, sweep_s); lo/hi C-contiguous int64 inputs in ANY
+    order and n_vertices, n_edges < 2^31 (caller's guard); kid_out/
+    par_out int64 with min(n_edges, n_vertices) slots; pre_w/pst_w int64
+    n_vertices slots receiving bincount(hi)/bincount(lo). Raises
+    ValueError if an id falls outside [0, n_vertices). Scratch
+    (sorted-lo, counts, union-find) is allocated per call inside the
+    wrapper."""
     _load()
-    return _cached_fn
+    return _cached_sort_sweep
 
 
 def loaded_ffd():
@@ -444,20 +420,6 @@ def loaded_ffd():
     return _cached_ffd
 
 
-def loaded_sort_sweep():
-    """The compiled counting-sort + sweep as a python callable, or None.
-
-    Signature: fn(lo, hi, n_vertices, kid_out, par_out, pre_w, pst_w)
-    -> (n_out, sort_s, sweep_s); lo/hi C-contiguous int64 inputs in ANY
-    order with values in [0, n_vertices) and n_vertices, n_edges < 2^31
-    (caller's guard); kid_out/par_out int64 with min(n_edges,
-    n_vertices) slots; pre_w/pst_w int64 n_vertices slots receiving
-    bincount(hi)/bincount(lo) as a free byproduct. Scratch (sorted-lo,
-    counts, union-find) is allocated per call inside the wrapper."""
-    _load()
-    return _cached_sort_sweep
-
-
 def loaded_seq_tree():
     """The fused sequence+tree kernel as a python callable, or None.
 
@@ -471,22 +433,18 @@ def loaded_seq_tree():
 
 
 def _load() -> None:
-    global _cached_fn, _cached_ffd, _cached_sort_sweep, _cached_seq_tree
-    global _load_attempted
+    global _cached_sort_sweep, _cached_ffd, _cached_seq_tree, _load_attempted
     if _load_attempted:
         return
     _load_attempted = True
     if os.environ.get("SPARK_GRAFT_NO_CSWEEP") == "1":
         return
-    so_path = _compile()
-    if so_path is None:
-        return
+    so_path, err = _compile()
     p64 = ctypes.POINTER(ctypes.c_int64)
     try:
+        if so_path is None:
+            raise OSError(err)
         lib = ctypes.CDLL(so_path)
-        raw = lib.sheep_sweep
-        raw.restype = ctypes.c_int64
-        raw.argtypes = [p64, p64, ctypes.c_int64, p64, p64, p64]
         raw_ffd = lib.sheep_ffd
         raw_ffd.restype = ctypes.c_int64
         raw_ffd.argtypes = [
@@ -509,19 +467,16 @@ def _load() -> None:
             p64, p32, p32, p32, p32, p32, p32,
             p64, p64, p64, p64, p64, pdb,
         ]
-    except Exception:
-        return
+    except (OSError, AttributeError) as exc:  # compile, load or symbol failure
+        import warnings
 
-    def fn(lo: np.ndarray, hi: np.ndarray, uf: np.ndarray,
-           kid_out: np.ndarray, par_out: np.ndarray) -> int:
-        return raw(
-            lo.ctypes.data_as(p64),
-            hi.ctypes.data_as(p64),
-            len(lo),
-            uf.ctypes.data_as(p64),
-            kid_out.ctypes.data_as(p64),
-            par_out.ctypes.data_as(p64),
+        warnings.warn(
+            "sheep_spark C kernels unavailable, running the interpreted "
+            f"fallbacks (much slower): {exc}",
+            RuntimeWarning,
+            stacklevel=3,
         )
+        return
 
     def fn_ffd(parent: np.ndarray, comp: np.ndarray, kid_order: np.ndarray,
                par_sorted: np.ndarray, max_component: int, parts: np.ndarray,
@@ -562,8 +517,8 @@ def _load() -> None:
         )
         if n_out == -2:
             raise ValueError(
-                "sheep_sort_sweep: an edge endpoint falls outside "
-                f"[0, {n_vertices}) — pos-space input expected"
+                f"an edge endpoint falls outside [0, {n_vertices}) — "
+                "pos-space input expected"
             )
         return n_out, float(phases[0]), float(phases[1])
 
@@ -623,7 +578,6 @@ def _load() -> None:
             "phases": (float(phases[0]), float(phases[1]), float(phases[2])),
         }
 
-    _cached_fn = fn
     _cached_ffd = fn_ffd
     _cached_sort_sweep = fn_sort_sweep
     _cached_seq_tree = fn_seq_tree

@@ -163,7 +163,8 @@ def vertices_from_edges(edges_sym: DataFrame,
         pos = np.empty(n, dtype=np.int64)
         pos[order] = np.arange(n, dtype=np.int64)
         return deg.sparkSession.createDataFrame(
-            pd.DataFrame({"vid": vid, "degree": degree, "pos": pos})
+            pd.DataFrame({"vid": vid, "degree": degree, "pos": pos}),
+            "vid long, degree long, pos long",  # explicit: an empty graph infers nothing
         )
     finally:
         deg.unpersist()

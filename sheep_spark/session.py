@@ -152,13 +152,3 @@ def _ship_package(spark: SparkSession) -> None:
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         zf.write(full, rel)
     spark.sparkContext.addPyFile(zip_path)
-
-
-def tune_for_sf(spark: SparkSession, n_rows_hint: int) -> None:
-    """Adjust shuffle width to input size (tiny inputs → fewer partitions).
-
-    On a real cluster this is AQE's job; locally it keeps small tests from
-    paying 200-task overheads.
-    """
-    if n_rows_hint < 100_000:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")

@@ -1,4 +1,4 @@
-"""Distributed elimination-tree ("JTree") construction.
+"""Elimination-tree ("JTree") construction.
 
 Reference semantics (dmargo/sheep):
 
@@ -13,26 +13,29 @@ Reference semantics (dmargo/sheep):
   :203-250 ``mpi_merge``): per jnid ascending, re-adopt each partial's
   tree children through a fresh union-find, summing pst_weights.
 
-Key identity exploited here: a partial tree *is* an edge set
-{(kid_root → parent)} and sheep's merge of partials is exactly the
-partial-build run on the union of those edge sets. So the whole
-map/reduce pipeline is: repartition edge list → per-partition union-find
-kernel (Arrow-vectorized ingress, numpy state) emitting ≤V-1 tree edges →
-repeat with fan-in F until one partition remains. That is a log_F-depth
-reduction tree — the DataFrame equivalent of sheep's MPI_Reduce custom op
-— expressed entirely as ``mapInArrow`` stages, so Catalyst/AQE manage the
-shuffles.
+One kernel, ``_eliminate``, runs that insert as a union-find sweep over
+pos-space (lo, hi) edges taken in hi order. It has two paths: the
+compiled counting-sort sweep (``_csweep.sheep_sort_sweep``) whenever the
+C library loaded, else one interpreted numpy sweep, which is also the
+reference oracle beside ``serial_tree_oracle``. Both take ids and edge
+counts below 2^31 and raise ValueError on anything else.
 
-pst_weight needs no kernel at all: it is ``groupBy(lo).count()`` over the
-deduped (lo, hi) pos-space edge list (jtree.cpp:47-49 counts later
-neighbors).
+Two strategies call it. The driver strategy (at most
+DRIVER_TREE_MAX_EDGES edges) collects the edges once and sweeps them in
+one call, the analogue of sheep's rank-0 funnel. The map/reduce strategy
+uses the identity that a partial tree *is* an edge set
+{(kid_root → parent)} and that sheep's merge of partials is the partial
+build run on the union of those edge sets: repartition the edge list,
+sweep each partition into ≤V-1 tree edges, and repeat with fan-in F
+until one partition remains — a log_F-depth reduction, the DataFrame
+equivalent of sheep's MPI_Reduce custom op, expressed as ``mapInArrow``
+stages. Each task remaps its slice to dense local ids
+(_eliminate_arrow), so per-task state is O(vertices in the slice), not
+O(global V) as in sheep's per-rank JNode arrays (jnode.cpp:203-250).
 
-Scale bound: each kernel invocation remaps its slice to dense local ids
-(_eliminate_arrow), so per-task state is O(vertices present in the
-slice) — ~32 MB for a 2M-edge slice even at V=10^9 — strictly better
-than sheep's per-rank model (every MPI rank holds the full JNode array,
-jnode.cpp:203-250). Edges — the 100 TB object — stream through Arrow
-batches and are never materialized per worker.
+pst_weight needs no kernel: it counts later neighbors (jtree.cpp:47-49),
+i.e. ``bincount(lo)`` on the driver or ``groupBy(lo).count()`` over the
+deduped pos-space edge list.
 """
 
 from __future__ import annotations
@@ -46,238 +49,45 @@ from pyspark.sql import functions as F
 
 TREE_EDGE_SCHEMA = "lo long, hi long"
 
-# _eliminate runs the numpy Boruvka pre-selection only above this input
-# size; below it the plain Python sweep is cheaper (selection costs a few
-# O(E) numpy/hash passes per round, each ~20-40x cheaper per edge than
-# the interpreted sweep).
-MSF_SELECT_MIN_EDGES = 1_500_000
-
-# Stop selecting when a Boruvka round shrinks the remaining edge set by
-# less than this fraction. A selection round costs ~1/20 of the sweep per
-# edge, so even a 5%-per-round reduction still pays; the old 0.75 exit
-# bailed on round 2 for typical power-law graphs and retained ~all edges
-# (the source of round 2's impossible "99.3% union-effective" claim —
-# retention was the SELECTOR quitting, not the input being effective).
-_MSF_EXIT_FRACTION = 0.95
-
-
-def _find(uf: np.ndarray, x: int) -> int:
-    """Union-find find with path halving; root's value is the set's
-    representative = the latest-inserted jnid (unionfind.h semantics:
-    the representative stored at the root is the greatest element)."""
-    while uf[x] != x:
-        uf[x] = uf[uf[x]]
-        x = uf[x]
-    return x
-
-
-# Weight-ordered chunk size for the selection (r6, filter-Kruskal): the
-# sorted edge list is consumed lightest-chunk-first against the evolving
-# component labels, so the expensive full-width gather/scatter rounds
-# only ever touch one chunk (bounded working set, cache-resident label
-# traffic) and each heavier chunk is first reduced by ONE gather+filter
-# pass that drops its (majority of) already-intra-component edges.
-MSF_SELECT_CHUNK_EDGES = 8_000_000
-
-
-def _msf_select(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
-                chunk_edges: int | None = None) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized Boruvka selection of the union-EFFECTIVE edges.
-
-    The elimination sweep processes edges in hi-ascending order and an
-    edge produces a tree adoption iff its endpoints' components differ
-    at its turn — i.e. the effective edges are exactly a minimum
-    spanning forest under weight = hi (Kruskal). By the MST threshold-
-    partition property, *any* MSF under that weight induces the same
-    component partition below every threshold, so sweeping ONLY the
-    selected ≤V-1 edges yields the identical (kid, parent) set while the
-    O(E) bulk is handled here at numpy speed: per round, parallel edges
-    between the same component pair are deduped to the minimum, each
-    component picks its minimum-weight incident edge (hash-pass
-    first-per-group over the weight-ordered slots), 2-cycles are broken,
-    labels contract by pointer jumping. O(log V) rounds, no Python
-    per-edge loop.
-
-    Run to (near-)completion the selection returns EXACTLY the MSF
-    (every Boruvka pick is an MSF edge by the cut property; nothing else
-    survives contraction), i.e. ≤V-1 edges, every one union-effective.
-    The early exit dumps the remainder unselected — exact either way,
-    because an edge is only ever DROPPED when its endpoints are already
-    connected by selected (= MSF) edges, which by the cycle property
-    proves it union-ineffective.
-
-    Chunking (r6): edges are processed in weight-ascending chunks of
-    ``chunk_edges`` against the shared label array (filter-Kruskal).
-    Exactness is the same cycle-property argument: a heavier chunk's
-    edge is dropped only when the labels — built exclusively from
-    LIGHTER selected edges — already connect its endpoints. Chunk size
-    ≥ input length reproduces the old single-chunk behavior bit-for-bit;
-    any chunking yields the same sweep output (tested with tiny chunks).
-    """
-    import pandas as pd
-
-    if chunk_edges is None:
-        chunk_edges = MSF_SELECT_CHUNK_EDGES
-
-    # ONE global sort by weight=hi. Tie-break among equal-hi edges is
-    # free to be anything (same-hi edges commute: the sweep's output pair
-    # for each is (component-max, hi) regardless of order — asserted by
-    # test_msf_select_preserves_sweep_output), so prefer a VALUE sort of
-    # the packed (hi, lo) key — ~4× faster than a stable argsort at 35M.
-    # Below 2^31 vertices every round array drops to int32 (r5): the
-    # selection is memory-bandwidth-bound, so halving element width
-    # halves the traffic of the gathers/scatters that dominate it.
-    if n_vertices < 2**31:
-        idt = np.int32
-        packed = np.sort((hi.astype(np.int64) << 31) | lo.astype(np.int64))
-        srt_hi = (packed >> 31).astype(np.int32)
-        srt_lo = (packed & ((1 << 31) - 1)).astype(np.int32)
-        del packed
-    else:
-        idt = np.int64
-        order0 = np.argsort(hi, kind="stable")
-        srt_lo = lo[order0]
-        srt_hi = hi[order0]
-
-    label = np.arange(n_vertices, dtype=idt)
-    labels_identity = True  # no contraction has happened yet
-    sel_lo: list[np.ndarray] = []
-    sel_hi: list[np.ndarray] = []
-    for start in range(0, len(srt_lo), chunk_edges):
-        cur_lo = srt_lo[start:start + chunk_edges]
-        cur_hi = srt_hi[start:start + chunk_edges]
-        prev_len = None
-        first_round = labels_identity
-        while len(cur_lo):
-            if first_round:
-                # labels are identity: skip the gather, the intra-component
-                # filter (no self loops survive to pos space; a stray one
-                # would be selected then skipped by the sweep — harmless),
-                # and the pair dedup (duplicate edges can't BOTH be selected:
-                # the duplicate's slots hit already-claimed components).
-                a, b = cur_lo, cur_hi
-            else:
-                a = label[cur_lo]
-                b = label[cur_hi]
-                keep = a != b
-                if not keep.any():
-                    break
-                cur_lo, cur_hi = cur_lo[keep], cur_hi[keep]
-                a, b = a[keep], b[keep]
-                # Component-pair dedup: of parallel edges between the same
-                # two components only the minimum can be in the MSF (swap
-                # argument: exchanging it for a heavier parallel edge
-                # strictly lowers the tree weight), and slot order IS weight
-                # order, so keep-first is keep-min. Bounds late rounds by
-                # #component-pairs and makes the early exit measure true
-                # progress.
-                if n_vertices < 3_000_000_000:  # pair key fits int64
-                    pk = np.minimum(a, b).astype(np.int64) * n_vertices + np.maximum(a, b)
-                    first_pair = ~pd.Series(pk).duplicated().to_numpy()
-                    if not first_pair.all():
-                        cur_lo, cur_hi = cur_lo[first_pair], cur_hi[first_pair]
-                        a, b = a[first_pair], b[first_pair]
-                # Early exit when rounds stop paying: a selection round costs
-                # a few O(E) numpy passes (~1/20 of the interpreted sweep per
-                # edge), so keep going while it removes ≥5%/round. The
-                # remainder is handed to the sweep unselected — exact (see
-                # docstring).
-                if prev_len is not None and len(cur_lo) > _MSF_EXIT_FRACTION * prev_len:
-                    sel_lo.append(cur_lo)
-                    sel_hi.append(cur_hi)
-                    break
-            first_round = False
-            labels_identity = False
-            prev_len = len(cur_lo)
-            n_e = len(a)
-            # min-weight incident edge per component WITHOUT a per-round sort:
-            # interleave (a0,b0,a1,b1,...) so slot order == weight order, then
-            # first occurrence per component. Labels are < n_vertices, so a
-            # direct-address scatter (reverse order → first write wins) beats
-            # a hash pass ~5× when the round is big; small rounds use the
-            # hash to avoid the O(V) table fill.
-            comps2 = np.empty(2 * n_e, dtype=idt)
-            comps2[0::2] = a
-            comps2[1::2] = b
-            if 8 * n_e >= n_vertices:
-                idx = np.arange(2 * n_e, dtype=idt if 2 * n_e < 2**31 else np.int64)
-                firstslot = np.full(n_vertices, -1, dtype=idx.dtype)
-                firstslot[comps2[::-1]] = idx[::-1]  # repeated idx: last write (= first slot) wins
-                slots = np.flatnonzero(firstslot[comps2] == idx)
-            else:
-                slots = np.flatnonzero(~pd.Series(comps2).duplicated().to_numpy())
-            e = slots >> 1                    # each component's min edge id
-            c = comps2[slots]
-            o = comps2[slots ^ 1]             # the other endpoint's label
-            sel = np.unique(e)
-            sel_lo.append(cur_lo[sel])
-            sel_hi.append(cur_hi[sel])
-            # hook c → o; weights are made distinct by the input-order
-            # tie-break, so hook cycles have length exactly 2 — break them,
-            # then contract by pointer jumping.
-            p = np.arange(n_vertices, dtype=idt)
-            p[c] = o
-            mutual = (p[p[c]] == c) & (c < p[c])
-            p[c[mutual]] = c[mutual]
-            while True:
-                pp = p[p]
-                if np.array_equal(pp, p):
-                    break
-                p = pp
-            label = p[label]
-    if not sel_lo:
-        return lo[:0], hi[:0]
-    return np.concatenate(sel_lo), np.concatenate(sel_hi)
-
-
 def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
-               select: bool = True,
                timings: dict | None = None,
                weights_out: dict | None = None) -> tuple[np.ndarray, np.ndarray]:
-    """Union-find elimination sweep over (lo, hi) pairs sorted by hi.
+    """Union-find elimination sweep over pos-space (lo, hi) edges.
 
     Returns (kid, parent) tree-edge arrays. Exact semantics of
     jtree.cpp:34-55 restricted to this edge subset: processing hi
     ascending == inserting vertices in sequence order; adopting
-    find(lo) == adopting the neighbor's component root.
+    find(lo) == adopting the neighbor's component root. Edges may come
+    in any order and may repeat; equal-hi edges commute, so the output
+    pairs do not depend on their order.
 
-    Fastest path (r6 late): when ids fit int32, ONE compiled call
-    (_csweep.sheep_sort_sweep) counting-sorts the edges by hi (O(E+V),
-    replacing the packed np.sort) and sweeps every edge at C speed —
-    measured 2.2-2.4 s vs 4.4 s for select + packed sort + C sweep at
-    35M edges / V=4M, identical (kid, parent) sets (equal-hi order is
-    free to differ: same-hi edges commute, the law the packed value
-    sort already relied on). Boruvka selection is SKIPPED there: its
-    numpy rounds cost more than the C sweep's extra traffic once the
-    sort is O(E). ``weights_out`` (dict) receives the fused
-    ``pre_weight``/``pst_weight`` bincounts that fall out of that
-    kernel's histogram/scatter passes for free.
-
-    ``select=True`` runs the vectorized Boruvka pass (_msf_select)
-    first on the FALLBACK paths, dropping union-ineffective edges at
-    numpy speed so the interpreted sweep touches only the surviving
-    ≤V-1 forest edges (plus an exactly-handled early-exit remainder).
-    On any graph with E ≫ V the sweep input shrinks ~E/V×: at most V-1
-    edges can ever cause a union. (Round 2 disabled it on the driver
-    path off a mis-measured "99.3% union-effective" figure; that was
-    _msf_select's old 0.75 early-exit quitting after one round, i.e.
-    selection RETENTION, not input effectiveness — on a 4.0M-vertex
-    35M-edge graph ≤11.4% of edges can union.)
+    Two paths, one contract. With the C library loaded, one compiled
+    call (_csweep.sheep_sort_sweep) counting-sorts the edges by hi and
+    sweeps them; ``timings`` gets its sort_s/sweep_s phases. Otherwise
+    an interpreted sweep over a stable argsort runs — the reference
+    oracle for the compiled one. Both raise ValueError when an id falls
+    outside [0, n_vertices) or a call has 2^31 or more vertices or
+    edges (the compiled kernel's state is int32). ``weights_out`` (dict)
+    receives ``pre_weight`` = bincount(hi) and ``pst_weight`` =
+    bincount(lo) over n_vertices.
     """
-    import time as _time
-
     from . import _csweep
 
-    ss_fn = _csweep.loaded_sort_sweep()
-    if ss_fn is not None and n_vertices < 2**31 and len(lo) < 2**31:
-        lo_c = np.ascontiguousarray(lo, dtype=np.int64)
-        hi_c = np.ascontiguousarray(hi, dtype=np.int64)
-        cap = min(len(lo_c), n_vertices)
+    if n_vertices >= 2**31 or len(lo) >= 2**31:
+        raise ValueError(
+            f"elimination kernel takes fewer than 2^31 vertices and edges per "
+            f"call, got {n_vertices} vertices and {len(lo)} edges"
+        )
+    lo = np.ascontiguousarray(lo, dtype=np.int64)
+    hi = np.ascontiguousarray(hi, dtype=np.int64)
+    ss_fn = _csweep.loaded()
+    if ss_fn is not None:
+        cap = min(len(lo), n_vertices)
         kid_out = np.empty(cap, dtype=np.int64)
         par_out = np.empty_like(kid_out)
         pre_w = np.empty(n_vertices, dtype=np.int64)
         pst_w = np.empty(n_vertices, dtype=np.int64)
-        n_out, sort_s, sweep_s = ss_fn(lo_c, hi_c, n_vertices,
+        n_out, sort_s, sweep_s = ss_fn(lo, hi, n_vertices,
                                        kid_out, par_out, pre_w, pst_w)
         if timings is not None:
             timings["sort_s"] = round(sort_s, 2)
@@ -287,85 +97,28 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
             weights_out["pst_weight"] = pst_w
         return kid_out[:n_out], par_out[:n_out]
 
-    if select and len(lo) >= MSF_SELECT_MIN_EDGES:
-        t0 = _time.monotonic()
-        lo, hi = _msf_select(lo, hi, n_vertices)
-        if timings is not None:
-            timings["select_s"] = round(_time.monotonic() - t0, 2)
-
-    c_fn = _csweep.loaded()
-    if c_fn is not None:
-        # Compiled sweep (r6): the same union-find loop at C speed
-        # replaces the interpreted tail — the one serial pass numpy
-        # cannot vectorize (measured 0.4 s vs ~4.6 s over the 4.0M
-        # selected edges at the 35M-edge scale point). Selection above
-        # stays worthwhile: it feeds the sweep ~9x fewer edges and its
-        # rounds cost less than the extra memory-bound sweep traffic
-        # (A/B at 35M: select+sweep 6.2 s vs sweep-all 7.6 s).
-        # Identical output pairs; falls through to the interpreted
-        # paths whenever the compiled kernel is unavailable.
-        t0 = _time.monotonic()
-        if n_vertices < 2**31:
-            # pos-space ids are < n_vertices, so a packed VALUE sort
-            # stands in for the stable argsort (~4x faster); equal-hi
-            # order is free to differ — same-hi edges commute
-            # (test_msf_select_preserves_sweep_output), the same law
-            # _msf_select's own value sort already relies on.
-            packed = np.sort((hi.astype(np.int64) << 31) | lo.astype(np.int64))
-            hi_s = packed >> 31
-            lo_s = packed & ((1 << 31) - 1)
-            del packed
-        else:
-            order = np.argsort(hi, kind="stable")
-            lo_s = np.ascontiguousarray(lo[order], dtype=np.int64)
-            hi_s = np.ascontiguousarray(hi[order], dtype=np.int64)
-        if timings is not None:
-            timings["sort_s"] = round(_time.monotonic() - t0, 2)
-        t0 = _time.monotonic()
-        uf = np.arange(n_vertices, dtype=np.int64)
-        cap = min(len(lo_s), n_vertices)
-        kid_out = np.empty(cap, dtype=np.int64)
-        par_out = np.empty_like(kid_out)
-        n_out = c_fn(lo_s, hi_s, uf, kid_out, par_out)
-        if timings is not None:
-            timings["sweep_s"] = round(_time.monotonic() - t0, 2)
-        return kid_out[:n_out], par_out[:n_out]
-
+    if len(lo) and (min(lo.min(), hi.min()) < 0
+                    or max(lo.max(), hi.max()) >= n_vertices):
+        raise ValueError(
+            f"an edge endpoint falls outside [0, {n_vertices}) — "
+            "pos-space input expected"
+        )
+    if weights_out is not None:
+        weights_out["pre_weight"] = np.bincount(hi, minlength=n_vertices).astype(np.int64)
+        weights_out["pst_weight"] = np.bincount(lo, minlength=n_vertices).astype(np.int64)
     order = np.argsort(hi, kind="stable")
-    # python lists: ~2x faster element access than numpy scalars in the
-    # interpreted sweep; fall back to numpy when the pointer-per-int list
-    # overhead would dominate task/driver memory (ADVICE r2: gate on the
-    # EDGE count too — two 100M-element int lists cost ~7-10 GB)
-    use_lists = n_vertices <= 50_000_000 and len(lo) <= 30_000_000
-    if use_lists:
-        lo_l = lo[order].tolist()
-        hi_l = hi[order].tolist()
-        uf = list(range(n_vertices))
-        kids: list[int] = []
-        pars: list[int] = []
-        ka, pa = kids.append, pars.append
-        for x, r in zip(hi_l, lo_l):
-            p = uf[r]
-            while p != r:  # path halving
-                pp = uf[p]
-                uf[r] = pp
-                r = pp
-                p = uf[r]
-            if r != x:
-                ka(r)
-                pa(x)
-                uf[r] = x
-        return np.asarray(kids, dtype=np.int64), np.asarray(pars, dtype=np.int64)
     lo = lo[order]
     hi = hi[order]
     uf = np.arange(n_vertices, dtype=np.int64)
     kid_out = np.empty(min(len(lo), n_vertices), dtype=np.int64)
     par_out = np.empty_like(kid_out)
     n_out = 0
-    find = _find
     for i in range(len(lo)):
         x = int(hi[i])
-        r = find(uf, int(lo[i]))
+        r = int(lo[i])
+        while uf[r] != r:  # path halving; the root is its component's latest jnid
+            uf[r] = uf[uf[r]]
+            r = int(uf[r])
         if r != x:
             kid_out[n_out] = r
             par_out[n_out] = x
@@ -374,8 +127,8 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
     return kid_out[:n_out], par_out[:n_out]
 
 
-def _eliminate_arrow(batches: Iterator[pa.RecordBatch], n_vertices: int,
-                     select: bool = True) -> Iterator[pa.RecordBatch]:
+def _eliminate_arrow(batches: Iterator[pa.RecordBatch],
+                     n_vertices: int) -> Iterator[pa.RecordBatch]:
     """Per-task kernel wrapper: remap the slice's vertices to dense local
     ids before the sweep, map tree edges back after. The sweep depends
     only on the ORDER of jnids (sort + comparisons), and np.unique's
@@ -393,7 +146,7 @@ def _eliminate_arrow(batches: Iterator[pa.RecordBatch], n_vertices: int,
     hi = np.concatenate(his).astype(np.int64, copy=False)
     verts = np.unique(np.concatenate([lo, hi]))
     kid_l, par_l = _eliminate(
-        np.searchsorted(verts, lo), np.searchsorted(verts, hi), len(verts), select
+        np.searchsorted(verts, lo), np.searchsorted(verts, hi), len(verts)
     )
     yield pa.RecordBatch.from_arrays(
         [pa.array(verts[kid_l]), pa.array(verts[par_l])], names=["lo", "hi"]
@@ -415,8 +168,8 @@ def build_parent_edges(
     fan_in and re-run the same kernel on their union until one remains.
 
     ``n_edges`` (a hint, no job run) scales n_partials so a stage-1
-    slice stays ~2M edges — the sweet spot where the per-task Python
-    sweep stays low-latency; at 1.5B edges that means ~750 partials,
+    slice stays ~2M edges, so each task's sweep stays short (even on
+    the interpreted fallback); at 1.5B edges that means ~750 partials,
     not defaultParallelism.
     """
     spark = edges_pos_df.sparkSession
@@ -425,11 +178,10 @@ def build_parent_edges(
         if n_edges is not None:
             n_partials = max(n_partials, int(n_edges // 2_000_000) + 1)
 
-    # Boruvka pre-selection runs in EVERY kernel (above the size gate):
-    # stage-1 slices shrink toward their local vertex count, merge rounds
-    # compress their union of fan_in forests ~fan_in×.
+    # every stage runs the same _eliminate kernel on slice-local ids:
+    # stage 1 sweeps raw edges, each merge round the union of fan_in forests
     def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _eliminate_arrow(it, n_vertices, select=True)
+        return _eliminate_arrow(it, n_vertices)
 
     t = edges_pos_df.select("lo", "hi").repartition(n_partials).mapInArrow(
         kernel, TREE_EDGE_SCHEMA
@@ -448,59 +200,34 @@ def build_parent_edges(
 DRIVER_TREE_MAX_EDGES = 100_000_000
 
 
-def build_parent_edges_driver(edges_pos_df: DataFrame, n_vertices: int,
-                              timings: dict | None = None) -> DataFrame:
-    """Single-sweep tree build on the driver: Arrow-collect the (lo, hi)
-    pairs, one _eliminate, ship the ≤V-1 tree edges back via Arrow.
-
-    This is the deliberate analogue of sheep's rank-0 funnel (the
-    partition step already centralizes O(V); this centralizes O(E) for
-    graphs under DRIVER_TREE_MAX_EDGES). Beyond the cap,
-    build_parent_edges distributes; results are identical (same kernel,
-    same order laws). Boruvka pre-selection (select=True, the default)
-    cuts the interpreted sweep's input from E to ≤V-1 — on a 35M-edge /
-    4.0M-vertex graph that is a ~9× smaller sweep; see BASELINE.md for
-    the measured retention and stage walls.
-    """
-    import time
-
-    import pandas as pd
-
-    spark = edges_pos_df.sparkSession
-    lo, hi = _collect_pos_pairs(edges_pos_df, timings)
-    t0 = time.monotonic()
-    kid, par = _eliminate(lo, hi, n_vertices)
-    if timings is not None:
-        timings["kernel_s"] = round(time.monotonic() - t0, 2)
-    return spark.createDataFrame(pd.DataFrame({"lo": kid, "hi": par}))
-
-
-def collect_int64_columns(df: DataFrame, cols: tuple[str, ...],
-                          timings: dict | None = None) -> tuple[np.ndarray, ...]:
-    """Collect the named columns as int64 numpy arrays via toArrow
-    (Spark 4; no pandas copy), toPandas fallback. Shared by the driver
-    funnels (tree build, degree-sequence rank)."""
+def _collect_columns(df: DataFrame, cols: tuple[str, ...], timings: dict | None,
+                     widen: bool) -> tuple[np.ndarray, ...]:
+    """Arrow-collect the named columns (Spark 4 toArrow, no pandas copy;
+    toPandas fallback) as C-contiguous numpy arrays, widened to int64
+    when ``widen``."""
     import time
 
     t0 = time.monotonic()
     sel = df.select(*cols)
     if hasattr(sel, "toArrow"):
         tbl = sel.toArrow()
-        out = tuple(
-            tbl.column(c).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            for c in cols
-        )
+        out = tuple(tbl.column(c).to_numpy(zero_copy_only=False) for c in cols)
     else:
         pdf = sel.toPandas()
-        out = tuple(pdf[c].to_numpy(np.int64) for c in cols)
+        out = tuple(pdf[c].to_numpy() for c in cols)
+    out = tuple(
+        a.astype(np.int64, copy=False) if widen else np.ascontiguousarray(a) for a in out
+    )
     if timings is not None:
         timings["collect_s"] = round(time.monotonic() - t0, 2)
     return out
 
 
-def _collect_pos_pairs(edges_pos_df: DataFrame, timings: dict | None = None):
-    """(lo, hi) int64 arrays for the driver-strategy kernels."""
-    return collect_int64_columns(edges_pos_df, ("lo", "hi"), timings)
+def collect_int64_columns(df: DataFrame, cols: tuple[str, ...],
+                          timings: dict | None = None) -> tuple[np.ndarray, ...]:
+    """Collect the named columns as int64 numpy arrays. Shared by the
+    driver funnels (tree build, degree-sequence rank, jxn)."""
+    return _collect_columns(df, cols, timings, widen=True)
 
 
 def collect_native_columns(df: DataFrame, cols: tuple[str, ...],
@@ -510,22 +237,7 @@ def collect_native_columns(df: DataFrame, cols: tuple[str, ...],
     no widening pass, half the driver-side footprint. Consumers that
     need int64 widen at their own entry (the fused C kernel reads
     either width directly)."""
-    import time
-
-    t0 = time.monotonic()
-    sel = df.select(*cols)
-    if hasattr(sel, "toArrow"):
-        tbl = sel.toArrow()
-        out = tuple(
-            np.ascontiguousarray(tbl.column(c).to_numpy(zero_copy_only=False))
-            for c in cols
-        )
-    else:
-        pdf = sel.toPandas()
-        out = tuple(np.ascontiguousarray(pdf[c].to_numpy()) for c in cols)
-    if timings is not None:
-        timings["collect_s"] = round(time.monotonic() - t0, 2)
-    return out
+    return _collect_columns(df, cols, timings, widen=False)
 
 
 def build_tree_arrays(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
@@ -543,17 +255,7 @@ def build_tree_arrays(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
         timings["kernel_s"] = round(time.monotonic() - t0, 2)
     parent_full = np.full(n_vertices, -1, dtype=np.int64)
     parent_full[kid] = par
-    return {
-        "parent": parent_full,
-        # the compiled sort-sweep emits both bincounts as byproducts of
-        # its histogram/scatter passes; recompute only on fallback paths
-        "pst_weight": weights.get(
-            "pst_weight", np.bincount(lo, minlength=n_vertices).astype(np.int64)
-        ),
-        "pre_weight": weights.get(
-            "pre_weight", np.bincount(hi, minlength=n_vertices).astype(np.int64)
-        ),
-    }
+    return {"parent": parent_full, **weights}
 
 
 def tree_df_from_arrays(spark, arrays: dict, with_pre_weight: bool = False) -> DataFrame:
@@ -595,7 +297,7 @@ def _build_tree_df_driver(
     """Driver-strategy tree: one collect, one kernel, bincount weights,
     one arrow upload. Output schema identical to the join form."""
     spark = edges_pos_df.sparkSession
-    lo, hi = _collect_pos_pairs(edges_pos_df, timings)
+    lo, hi = collect_int64_columns(edges_pos_df, ("lo", "hi"), timings)
     arrays = build_tree_arrays(lo, hi, n_vertices, timings)
     return tree_df_from_arrays(spark, arrays, with_pre_weight)
 
