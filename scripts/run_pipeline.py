@@ -28,7 +28,10 @@ def main() -> None:
     src = ap.add_mutually_exclusive_group(required=True)
     src.add_argument("--input", help="edge-list file (SNAP text or XS1 binary)")
     src.add_argument("--pages", type=int, help="generate N synthetic Common-Crawl-style pages")
-    src.add_argument("--pages-parquet", help="parquet/Iceberg dir with pages(url,warc_ts,html,text,lang)")
+    src.add_argument(
+        "--pages-parquet",
+        help="parquet directory or catalog table name with pages(url,warc_ts,html,text,lang)",
+    )
     ap.add_argument("--format", choices=["snap", "xs1"], default="snap")
     ap.add_argument("--k", type=int, default=8, help="number of partitions")
     ap.add_argument("--balance", type=float, default=1.03)
@@ -59,7 +62,9 @@ def main() -> None:
         pages = corpus.generate_pages(spark, args.pages)
         edges, _ids = extract.edges_from_pages(pages)
     elif args.pages_parquet:
-        pages = spark.read.parquet(args.pages_parquet)
+        from sheep_spark import catalog
+
+        pages = catalog.read_table(spark, args.pages_parquet)
         edges, _ids = extract.edges_from_pages(pages)
     else:
         raw = gio.read_xs1(spark, args.input) if args.format == "xs1" else gio.read_snap(spark, args.input)

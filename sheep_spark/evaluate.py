@@ -34,8 +34,7 @@ def _mult_hash(col, hash_fn: str):
     return F.pmod(col * F.lit(_HASH_CONSTS[hash_fn]), F.lit(2**32))
 
 
-def joined_edges(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True,
-                 n_vertices: int | None = None,
+def joined_edges(edges_sym: DataFrame, vmeta: DataFrame, n_vertices: int | None = None,
                  once: DataFrame | None = None) -> DataFrame:
     """Symmetrized edges annotated with (pos, part) of both endpoints.
     The broadcast hint is size-guarded (graph.maybe_broadcast); pass
@@ -50,7 +49,7 @@ def joined_edges(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = 
     view's rows, so every downstream aggregation is unchanged."""
     from .graph import maybe_broadcast
 
-    v = maybe_broadcast(vmeta, n_rows=n_vertices) if broadcast_meta else vmeta
+    v = maybe_broadcast(vmeta, n_rows=n_vertices)
     a = v.select(F.col("vid").alias("src"), F.col("pos").alias("pos_a"), F.col("part").alias("part_a"))
     b = v.select(F.col("vid").alias("dst"), F.col("pos").alias("pos_b"), F.col("part").alias("part_b"))
     if once is None:
@@ -72,14 +71,6 @@ def joined_edges(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = 
     )
 
 
-def _sum_distinct_minus_one(pairs: DataFrame, key: str, val: str) -> int:
-    """Σ_key (count distinct val) − 1 — computed as distinct-then-count so
-    partial aggregation absorbs hub skew before the shuffle."""
-    per = pairs.select(key, val).distinct().groupBy(key).agg((F.count("*") - 1).alias("c"))
-    row = per.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("s")).collect()[0]
-    return int(row["s"])
-
-
 #: every metric evaluate() can produce (reference printout order)
 ALL_METRICS = (
     "edges_cut", "vcom_vol", "ecv_down", "ecv_up", "ecv_hash",
@@ -87,16 +78,17 @@ ALL_METRICS = (
 )
 
 
-def evaluate(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True,
-             hash_fn: str = "cormen", num_parts: int | None = None,
-             metrics=None, once: DataFrame | None = None) -> dict:
-    """Partition-quality metric dict in TWO jobs over the edge-join:
-    (1) per-vertex bitmask aggregation carrying the scalar counts as
-    extra aggregates, (2) all per-part max loads via ONE explode scan.
-    The ≤62-part bitmask path (every real sheep config) does NOT cache
+def evaluate(edges_sym: DataFrame, vmeta: DataFrame, hash_fn: str = "cormen",
+             num_parts: int | None = None, metrics=None,
+             once: DataFrame | None = None) -> dict:
+    """Partition-quality metric dict. Two paths:
+
+    ≤62 parts (every real sheep config): ONE job over the edge-join, a
+    per-vertex bitmask aggregation carrying the scalar counts and the
+    per-part ownership counts as extra aggregates. It does NOT cache
     the join: with the vertex side broadcast the join is a pure
-    map-side hash probe, and re-deriving it per job is cheaper at scale
-    than materializing a 9-column E-sized cache (measured at 35M edges:
+    map-side hash probe, cheaper at scale than materializing a
+    9-column E-sized cache (measured at 35M edges:
     the r2 cached 3-job form cost 222 s cold; see BASELINE.md).
 
     ``metrics`` selects a subset of ALL_METRICS (default: all). The
@@ -105,8 +97,10 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True
     work than the full suite). ``n_edges`` (and ``ecv_down_per_edge``
     when ecv_down is requested) are always included.
 
-    >62 parts falls back to the cached metric-tagged union + two-stage
-    distinct — the hub-skew-safe general form.
+    >62 parts: the cached join feeds a metric-tagged union + two-stage
+    distinct (the hub-skew-safe general form) and one explode scan for
+    the edge balances. vertex_balance comes from the O(V) part
+    histogram on both paths.
     """
     requested = tuple(metrics) if metrics is not None else ALL_METRICS
     unknown = set(requested) - set(ALL_METRICS)
@@ -120,37 +114,20 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True
     ).otherwise(F.col("part_b"))
     owners = {"down": down_owner, "up": up_owner, "hash": hash_owner}
     ecv_wanted = [m for m in ("vcom_vol", "ecv_down", "ecv_up", "ecv_hash") if m in requested]
-    bal_wanted = [m for m in ("down_balance", "up_balance", "hash_balance", "vertex_balance")
-                  if m in requested]
-    edge_bal = [m for m in bal_wanted if m != "vertex_balance"]
+    edge_bal = [m for m in ("down_balance", "up_balance", "hash_balance") if m in requested]
 
     # ONE tiny O(V) job yields the part histogram → num_parts, the
-    # broadcast guard's row count, AND vertex_balance. The r5 form ran
-    # three separate jobs for these (maybe_broadcast count, max(part),
-    # and the vmeta leg of the _balances scan).
+    # broadcast guard's row count, AND vertex_balance.
     part_rows = vmeta.groupBy("part").agg(F.count("*").alias("c")).collect()
     n_vertices = sum(int(r["c"]) for r in part_rows)
     if num_parts is None:
         num_parts = max((int(r["part"]) for r in part_rows), default=-1) + 1
 
-    j = joined_edges(edges_sym, vmeta, broadcast_meta, n_vertices=n_vertices, once=once)
+    j = joined_edges(edges_sym, vmeta, n_vertices=n_vertices, once=once)
 
     out: dict = {}
     ecv: dict = {}
-    if num_parts <= 62 and not ecv_wanted and not edge_bal:
-        # No per-vertex set metric and no edge balance requested: the
-        # scalar counts need no groupBy at all — one flat agg over the
-        # edge-join, no E-sized shuffle (ADVICE r3).
-        row = j.agg(
-            F.count("*").alias("n_directed"),
-            F.sum(
-                ((F.col("src") < F.col("dst")) & (F.col("part_a") != F.col("part_b"))).cast("long")
-            ).alias("edges_cut"),
-        ).collect()[0]
-        out["n_edges"] = int(row["n_directed"] or 0) // 2
-        if "edges_cut" in requested:
-            out["edges_cut"] = int(row["edges_cut"] or 0)
-    elif num_parts <= 62:
+    if num_parts <= 62:
         # ONE pass over the edge-join (r6 — the r5 form ran a SECOND
         # E-sized explode scan for the balances; guide §2.4): per
         # (src, part), bit_or each requested ownership rule's part into
@@ -218,7 +195,6 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True
             ecv[m] = sum(int(r[m] or 0) for r in rows)
         for m in edge_bal:
             out[m] = max((int(r[bal_col[m]] or 0) for r in rows), default=0)
-        bal_wanted = [m for m in bal_wanted if m == "vertex_balance"]
     else:
         # >62 parts: cached join + metric-tagged union + two-stage
         # distinct (the persist pays when the same join feeds 5 scans)
@@ -257,20 +233,15 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True
                 )
                 ecv = {r["metric"]: int(r["s"]) for r in per_vertex.collect()}
 
-            if bal_wanted:
-                out.update(_balances(j, vmeta, owners, bal_wanted))
-                bal_wanted = []
+            if edge_bal:
+                out.update(_balances(j, owners, edge_bal))
         finally:
             j.unpersist()
 
     # vertex_balance falls out of the O(V) part histogram already
-    # collected above; only the >62-part fallback ever reaches
-    # _balances (it clears bal_wanted itself).
-    if "vertex_balance" in bal_wanted:
+    # collected above, on both paths
+    if "vertex_balance" in requested:
         out["vertex_balance"] = max((int(r["c"]) for r in part_rows), default=0)
-        bal_wanted = [m for m in bal_wanted if m != "vertex_balance"]
-    if bal_wanted:
-        out.update(_balances(j, vmeta, owners, bal_wanted))
 
     for m in ecv_wanted:
         out[m] = ecv.get(m, 0)
@@ -279,7 +250,9 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True
     return out
 
 
-def _balances(j: DataFrame, vmeta: DataFrame, owners: dict, wanted: list) -> dict:
+def _balances(j: DataFrame, owners: dict, wanted: list) -> dict:
+    """Per-part max edge load for each requested ownership rule, in one
+    explode scan of the (cached) >62-part join."""
     conds = {
         "down_balance": (F.col("pos_a") < F.col("pos_b"), owners["down"]),
         "up_balance": (F.col("pos_a") > F.col("pos_b"), owners["up"]),
@@ -290,16 +263,11 @@ def _balances(j: DataFrame, vmeta: DataFrame, owners: dict, wanted: list) -> dic
         for m, (cond, owner) in conds.items()
         if m in wanted
     ]
-    rows = None
-    if elems:
-        rows = (
-            j.select(F.explode(F.array(*elems)).alias("mp"))
-            .where(F.col("mp").isNotNull())
-            .select("mp.metric", "mp.part")
-        )
-    if "vertex_balance" in wanted:
-        v = vmeta.select(F.lit("vertex_balance").alias("metric"), F.col("part"))
-        rows = v if rows is None else rows.unionAll(v)
+    rows = (
+        j.select(F.explode(F.array(*elems)).alias("mp"))
+        .where(F.col("mp").isNotNull())
+        .select("mp.metric", "mp.part")
+    )
     got = {
         r["metric"]: int(r["m"])
         for r in rows.groupBy("metric", "part")

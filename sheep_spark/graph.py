@@ -348,26 +348,19 @@ def driver_sequence_tree_arrays(canon: DataFrame, timings: dict | None = None,
 def vertices_df_from_arrays(spark: SparkSession, vid, degree, pos) -> DataFrame:
     """``vertices(vid, degree, pos)`` DataFrame from driver arrays (one
     Arrow upload) — schema-identical to ``vertices_from_edges``. Direct
-    pyarrow upload, pandas fallback (r6; see tree_df_from_arrays)."""
+    pyarrow upload (r6; see tree_df_from_arrays)."""
     import numpy as np
     import pyarrow as pa
 
-    try:
-        return spark.createDataFrame(
-            pa.table(
-                {
-                    "vid": pa.array(np.asarray(vid, dtype=np.int64)),
-                    "degree": pa.array(np.asarray(degree, dtype=np.int64)),
-                    "pos": pa.array(np.asarray(pos, dtype=np.int64)),
-                }
-            )
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "vid": pa.array(np.asarray(vid, dtype=np.int64)),
+                "degree": pa.array(np.asarray(degree, dtype=np.int64)),
+                "pos": pa.array(np.asarray(pos, dtype=np.int64)),
+            }
         )
-    except Exception:
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame({"vid": vid, "degree": degree, "pos": pos})
-        )
+    )
 
 
 def edges_pos(edges_sym: DataFrame, vertices: DataFrame,

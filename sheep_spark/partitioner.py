@@ -140,89 +140,6 @@ def forward_partition(
     return np.asarray(parts, dtype=np.int64), max_component
 
 
-def _greedy_fill(order: np.ndarray, weight: np.ndarray, max_component: int) -> np.ndarray:
-    """Greedy sequential fill in the given order (partition.cpp:215-224
-    shape, shared by naive/depth/height variants)."""
-    parts = np.empty(len(order), dtype=np.int64)
-    cur_part, cur_size = 0, 0
-    for j in order:
-        parts[j] = cur_part
-        cur_size += int(weight[j])
-        if cur_size >= max_component:
-            cur_part += 1
-            cur_size = 0
-    return parts
-
-
-def naive_greedy_partition(parent: np.ndarray, weight: np.ndarray, num_parts: int,
-                           balance_factor: float = 1.03) -> np.ndarray:
-    """naivePartition (partition.cpp:253-266): jnid-ascending greedy fill."""
-    max_component = int((int(weight.sum()) // num_parts) * balance_factor)
-    return _greedy_fill(np.arange(len(parent)), weight, max_component)
-
-
-def depth_partition(parent: np.ndarray, weight: np.ndarray, num_parts: int,
-                    balance_factor: float = 1.03) -> np.ndarray:
-    """depthPartition (partition.cpp:202-225): stable sort by depth desc,
-    greedy fill ("somewhat compelling for reducing CV on the cheap")."""
-    n = len(parent)
-    depth = np.zeros(n, dtype=np.int64)
-    for j in range(n - 1, -1, -1):
-        if parent[j] >= 0:
-            depth[j] = depth[parent[j]] + 1
-    order = np.argsort(-depth, kind="stable")
-    max_component = int((int(weight.sum()) // num_parts) * balance_factor)
-    return _greedy_fill(order, weight, max_component)
-
-
-def height_partition(parent: np.ndarray, weight: np.ndarray, num_parts: int,
-                     balance_factor: float = 1.03) -> np.ndarray:
-    """heightPartition (partition.cpp:228-251): sort by height asc
-    (the reference notes it is "practically anti-optimal")."""
-    n = len(parent)
-    height = np.zeros(n, dtype=np.int64)
-    for j in range(n):
-        if parent[j] >= 0:
-            height[parent[j]] = max(height[parent[j]], height[j] + 1)
-    order = np.argsort(height, kind="stable")
-    max_component = int((int(weight.sum()) // num_parts) * balance_factor)
-    return _greedy_fill(order, weight, max_component)
-
-
-def backward_partition(parent: np.ndarray, weight: np.ndarray, num_parts: int,
-                       balance_factor: float = 1.03) -> np.ndarray:
-    """backwardPartition (partition.cpp:159-199): pack along the critical
-    path; the reference itself notes it is "fundamentally broken for
-    multiple components" — kept for parity as an experiment."""
-    n = len(parent)
-    max_component = int((int(weight.sum()) // num_parts) * balance_factor)
-    component_below = weight.astype(np.int64).copy()
-    kids: list[list[int]] = [[] for _ in range(n)]
-    for j in range(n):
-        if parent[j] >= 0:
-            component_below[parent[j]] += component_below[j]
-            kids[parent[j]].append(j)
-    critical = int(np.argmax(component_below))
-    while kids[critical]:
-        critical = max(kids[critical], key=lambda k: component_below[k])
-        component_below[parent[critical]] -= component_below[critical]
-    parts = np.full(n, -1, dtype=np.int64)
-    cur_part, part_size = 0, 0
-    while critical != -1:
-        if part_size + component_below[critical] < max_component:
-            parts[critical] = cur_part
-            part_size += int(component_below[critical])
-        else:
-            cur_part += 1
-            parts[critical] = cur_part
-            part_size = int(component_below[critical])
-        critical = int(parent[critical]) if parent[critical] >= 0 else -1
-    for j in range(n - 1, -1, -1):
-        if parts[j] == -1:
-            parts[j] = parts[parent[j]] if parent[j] >= 0 else cur_part
-    return parts
-
-
 def tree_to_arrays(tree_df: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """Collect tree(jnid,parent,pst_weight) into jnid-indexed numpy arrays
     via Arrow (driver-side, O(V) — same centralization as sheep rank 0)."""
@@ -408,15 +325,15 @@ def vertex_meta_from_arrays(spark: SparkSession, vid: np.ndarray, pos: np.ndarra
     return spark.createDataFrame(pdf)
 
 
-def down_assign(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True) -> DataFrame:
+def down_assign(edges_sym: DataFrame, vmeta: DataFrame) -> DataFrame:
     """``edge_parts(src, dst, part)`` — each undirected edge exactly once
     (src < dst by vid, partition.cpp:615-617), owned by the part of its
-    lower-pos endpoint (partition.cpp:623). ``broadcast_meta=True`` still
-    routes through maybe_broadcast, so an over-limit vmeta falls back to
-    a shuffle join rather than a driver-sized broadcast."""
+    lower-pos endpoint (partition.cpp:623). The vertex side routes
+    through maybe_broadcast, so an over-limit vmeta falls back to a
+    shuffle join rather than a driver-sized broadcast."""
     from .graph import maybe_broadcast
 
-    v = maybe_broadcast(vmeta) if broadcast_meta else vmeta
+    v = maybe_broadcast(vmeta)
     a = v.select(F.col("vid").alias("src"), F.col("pos").alias("pos_a"), F.col("part").alias("part_a"))
     b = v.select(F.col("vid").alias("dst"), F.col("pos").alias("pos_b"), F.col("part").alias("part_b"))
     once = edges_sym.where(F.col("src") < F.col("dst"))

@@ -111,9 +111,7 @@ def _warm_session(spark: SparkSession) -> None:
 
     df = spark.range(1024).select("id", (F.col("id") % 7).alias("k"))
     df.groupBy("k").agg(F.count("*")).collect()  # codegen + shuffle init
-    tiny = df.limit(64)
-    if hasattr(tiny, "toArrow"):
-        tiny.toArrow()  # driver-side Arrow allocator
+    df.limit(64).toArrow()  # driver-side Arrow allocator
 
     def _w(batches):
         import numpy  # noqa: F401  (the Arrow kernels' imports)

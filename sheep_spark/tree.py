@@ -202,19 +202,22 @@ DRIVER_TREE_MAX_EDGES = 100_000_000
 
 def _collect_columns(df: DataFrame, cols: tuple[str, ...], timings: dict | None,
                      widen: bool) -> tuple[np.ndarray, ...]:
-    """Arrow-collect the named columns (Spark 4 toArrow, no pandas copy;
-    toPandas fallback) as C-contiguous numpy arrays, widened to int64
-    when ``widen``."""
+    """Arrow-collect the named columns (toArrow, no pandas copy) as
+    C-contiguous numpy arrays, widened to int64 when ``widen``. A null
+    in any column raises ValueError naming it: numpy has no integer
+    null, so it would otherwise arrive as a bogus id."""
     import time
 
     t0 = time.monotonic()
-    sel = df.select(*cols)
-    if hasattr(sel, "toArrow"):
-        tbl = sel.toArrow()
-        out = tuple(tbl.column(c).to_numpy(zero_copy_only=False) for c in cols)
-    else:
-        pdf = sel.toPandas()
-        out = tuple(pdf[c].to_numpy() for c in cols)
+    tbl = df.select(*cols).toArrow()
+    for c in cols:
+        nulls = tbl.column(c).null_count
+        if nulls:
+            raise ValueError(
+                f"column {c!r} has {nulls} null value(s); "
+                "graph endpoints and ids must be non-null"
+            )
+    out = tuple(tbl.column(c).to_numpy(zero_copy_only=False) for c in cols)
     out = tuple(
         a.astype(np.int64, copy=False) if widen else np.ascontiguousarray(a) for a in out
     )
@@ -265,8 +268,7 @@ def tree_df_from_arrays(spark, arrays: dict, with_pre_weight: bool = False) -> D
     Uploads a pyarrow Table directly (r6): the nullable ``parent``
     column is a masked int64 arrow array, skipping the pandas
     nullable-Int64 detour (measured 2.3 → 0.6 s cold at V=4M, same
-    schema, exceptAll-identical rows); pandas remains the fallback for
-    sessions whose createDataFrame lacks arrow-table support."""
+    schema, exceptAll-identical rows)."""
     parent_full = arrays["parent"]
     cols = {
         "jnid": pa.array(np.arange(len(parent_full), dtype=np.int64)),
@@ -275,19 +277,7 @@ def tree_df_from_arrays(spark, arrays: dict, with_pre_weight: bool = False) -> D
     }
     if with_pre_weight:
         cols["pre_weight"] = pa.array(np.asarray(arrays["pre_weight"], dtype=np.int64))
-    try:
-        return spark.createDataFrame(pa.table(cols))
-    except Exception:
-        import pandas as pd
-
-        data = {
-            "jnid": np.arange(len(parent_full), dtype=np.int64),
-            "parent": pd.Series(parent_full).astype("Int64").mask(parent_full < 0),
-            "pst_weight": arrays["pst_weight"],
-        }
-        if with_pre_weight:
-            data["pre_weight"] = arrays["pre_weight"]
-        return spark.createDataFrame(pd.DataFrame(data))
+    return spark.createDataFrame(pa.table(cols))
 
 
 def _build_tree_df_driver(

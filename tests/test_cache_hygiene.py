@@ -50,19 +50,6 @@ def test_triangle_count_releases_oriented_cache(spark):
     assert _cache_manager_empty(spark)
 
 
-def test_triangles_per_edge_base_releases_oriented_cache(spark):
-    from tests.conftest import edges_df, random_graph
-
-    from sheep_spark import analytics, graph
-
-    spark.catalog.clearCache()
-    edges = edges_df(spark, random_graph(60, 150, seed=8))
-    verts = graph.vertices_from_edges(edges)
-    tris = analytics.triangles_per_edge_base(edges, verts)
-    assert tris.count() >= 0
-    assert _cache_manager_empty(spark)
-
-
 def test_edges_from_pages_releases_href_cache(spark):
     """VERDICT r3 leak fix: the E-row href table must be released; only
     the caller-owned ids frame may remain cached."""

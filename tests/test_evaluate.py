@@ -97,6 +97,12 @@ def test_metrics_subset_fast_mode(spark):
     assert bal_only["up_balance"] == full["up_balance"]
     ecv_only = evaluate.evaluate(sym, vmeta, metrics=("vcom_vol",))
     assert ecv_only["vcom_vol"] == full["vcom_vol"]
+    # subsets with no set metric and no edge balance run the same pass
+    for subset in (("edges_cut",), ("vertex_balance",)):
+        got = evaluate.evaluate(sym, vmeta, metrics=subset)
+        assert set(got) == {"n_edges", *subset}, subset
+        for k in got:
+            assert got[k] == full[k], (subset, k)
     import pytest
 
     with pytest.raises(ValueError):

@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from sheep_spark import graph
@@ -214,3 +215,24 @@ def test_fused_seq_tree_matches_staged(spark):
     empty = spark.createDataFrame([], "src long, dst long")
     out = graph.driver_sequence_tree_arrays(empty)
     assert out["n_vertices"] == 0 and len(out["parent"]) == 0
+
+
+@pytest.mark.parametrize("compiled", [True, False], ids=["compiled", "interpreted"])
+@pytest.mark.parametrize(
+    "funnel, rows, column",
+    [
+        ("vertices_from_edges", [(0, 1), (1, 0), (1, 2), (2, 1), (None, 2)], "vid"),
+        ("driver_sequence_tree_arrays", [(0, 1), (1, 2), (2, None)], "dst"),
+    ],
+)
+def test_null_endpoint_raises(spark, monkeypatch, funnel, rows, column, compiled):
+    """A null endpoint fails at the driver collect with a ValueError
+    naming the column, whether or not the compiled kernel is loaded;
+    numpy has no integer null, so it would otherwise become a bogus id."""
+    from sheep_spark import _csweep
+
+    if not compiled:
+        monkeypatch.setattr(_csweep, "loaded_seq_tree", lambda: None)
+    df = spark.createDataFrame(rows, "src long, dst long")
+    with pytest.raises(ValueError, match=f"column '{column}' has 1 null value"):
+        getattr(graph, funnel)(df)

@@ -79,27 +79,6 @@ def test_isomorphic_ids_dense(spark):
     assert new_ids == list(range(len(iso)))
 
 
-def test_experimental_partitioners_cover_all(spark):
-    import numpy as np
-
-    from sheep_spark import tree as treemod
-
-    edges = random_graph(150, 320, seed=19)
-    pos = degree_pos(edges)
-    parent_l, pst_l = treemod.serial_tree_oracle(edges, pos)
-    parent = np.array([-1 if p is None else p for p in parent_l], dtype=np.int64)
-    weight = np.array(pst_l, dtype=np.int64)
-    for fn in (
-        partitioner.naive_greedy_partition,
-        partitioner.depth_partition,
-        partitioner.height_partition,
-        partitioner.backward_partition,
-    ):
-        parts = fn(parent, weight, 4)
-        assert (parts >= 0).all(), fn.__name__
-        assert len(set(parts.tolist())) >= 2, fn.__name__
-
-
 def test_weight_flag_variants_against_port(spark):
     """get_weight flags (partition.cpp:38-48): vtx adds 1/node, pst adds
     post-degree, pre adds pre-degree (= Σ pre_weight over kids, see
