@@ -82,7 +82,7 @@ def main() -> None:
     stage_load = time.time() - t0
 
     t1 = time.time()
-    t = tree.build_tree(graph.edges_pos(edges, verts), n_vertices)
+    t = tree.build_tree(graph.edges_pos(edges, verts, n_vertices), n_vertices)
     if args.tree_out:
         tree.save_tree(t, args.tree_out)
         t = tree.load_tree(spark, args.tree_out)
@@ -97,7 +97,9 @@ def main() -> None:
     stage_eval = time.time() - t2
 
     if args.output:
-        partitioner.write_partitioned(partitioner.down_assign(edges, vmeta), args.output)
+        partitioner.write_partitioned(
+            partitioner.down_assign(edges, vmeta, n_vertices), args.output
+        )
 
     report = {
         "n_vertices": n_vertices,

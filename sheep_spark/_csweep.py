@@ -187,13 +187,15 @@ static int64_t sheep_bucket_sweep(const int32_t *lo_s, const int32_t *cnt,
    of every edge in bucket x is x itself, so only lo is materialized
    sorted), then run sheep_bucket_sweep. pre_w[v] = #edges with hi == v
    falls out of the histogram pass and pst_w[v] = #edges with lo == v
-   accumulates during the scatter. Requires ids and n_edges < 2^31
-   (int32 internals — the kernel is memory-bound, so halving element
-   width halves its traffic; offsets live in cnt's int32 slots). uf is
-   initialized to the identity HERE; lo_s is an n_edges int32 scratch,
-   cnt an (n_vertices+1) int32 scratch, kid/par int64 outs with
-   min(n_edges, n_vertices) slots, pre_w/pst_w n_vertices int64 outs,
-   phases a double[2] out (sort wall, sweep wall). Returns the number
+   accumulates during the scatter; either may be NULL, which skips its
+   stores (for callers that discard the weights). Requires ids and
+   n_edges < 2^31 (int32 internals — the kernel is memory-bound, so
+   halving element width halves its traffic; offsets live in cnt's
+   int32 slots). uf is initialized to the identity HERE; lo_s is an
+   n_edges int32 scratch, cnt an (n_vertices+1) int32 scratch, kid/par
+   int64 outs with min(n_edges, n_vertices) slots, pre_w/pst_w
+   n_vertices int64 outs or NULL, phases a double[2] out (sort wall,
+   sweep wall). Returns the number
    of (kid, parent) pairs emitted, or -2 if an id falls outside
    [0, n_vertices) — checked BEFORE each use (the predictable branch
    is ~free), so bad input never touches memory out of bounds. */
@@ -212,21 +214,21 @@ int64_t sheep_sort_sweep(const int64_t *lo, const int64_t *hi,
     int64_t run = 0;
     for (int64_t v = 0; v < n_vertices; v++) {
         int32_t c = cnt[v];
-        pre_w[v] = c;
-        pst_w[v] = 0;
+        if (pre_w) pre_w[v] = c;
+        if (pst_w) pst_w[v] = 0;
         uf[v] = (int32_t)v;
         cnt[v] = (int32_t)run;
         run += c;
     }
     for (int64_t i = 0; i < n_edges; i++) {
-        if (i + 64 < n_edges) {
-            __builtin_prefetch(&cnt[hi[i + 64]], 1, 1);
-            __builtin_prefetch(&pst_w[lo[i + 64]], 1, 1);
-        }
+        if (i + 64 < n_edges) __builtin_prefetch(&cnt[hi[i + 64]], 1, 1);
         if ((uint64_t)lo[i] >= (uint64_t)n_vertices) return -2;
         int32_t l = (int32_t)lo[i];
         lo_s[cnt[hi[i]]++] = l;
-        pst_w[l]++;
+        if (pst_w) {
+            if (i + 64 < n_edges) __builtin_prefetch(&pst_w[lo[i + 64]], 1, 1);
+            pst_w[l]++;
+        }
     }
     phases[0] = sheep_now() - t0;
     t0 = sheep_now();
@@ -399,8 +401,9 @@ def loaded():
     -> (n_out, sort_s, sweep_s); lo/hi C-contiguous int64 inputs in ANY
     order and n_vertices, n_edges < 2^31 (caller's guard); kid_out/
     par_out int64 with min(n_edges, n_vertices) slots; pre_w/pst_w int64
-    n_vertices slots receiving bincount(hi)/bincount(lo). Raises
-    ValueError if an id falls outside [0, n_vertices). Scratch
+    n_vertices slots receiving bincount(hi)/bincount(lo), or None to
+    skip that weight. Raises ValueError if an id falls outside
+    [0, n_vertices). Scratch
     (sorted-lo, counts, union-find) is allocated per call inside the
     wrapper."""
     _load()
@@ -496,7 +499,7 @@ def _load() -> None:
 
     def fn_sort_sweep(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
                       kid_out: np.ndarray, par_out: np.ndarray,
-                      pre_w: np.ndarray, pst_w: np.ndarray):
+                      pre_w: np.ndarray | None, pst_w: np.ndarray | None):
         lo_s = np.empty(len(lo), dtype=np.int32)
         cnt = np.empty(n_vertices + 1, dtype=np.int32)
         uf = np.empty(n_vertices, dtype=np.int32)
@@ -511,8 +514,8 @@ def _load() -> None:
             uf.ctypes.data_as(p32),
             kid_out.ctypes.data_as(p64),
             par_out.ctypes.data_as(p64),
-            pre_w.ctypes.data_as(p64),
-            pst_w.ctypes.data_as(p64),
+            None if pre_w is None else pre_w.ctypes.data_as(p64),
+            None if pst_w is None else pst_w.ctypes.data_as(p64),
             phases.ctypes.data_as(pdb),
         )
         if n_out == -2:

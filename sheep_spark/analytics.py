@@ -6,11 +6,18 @@ propagation, triangle counting. All are expressed as DataFrame joins +
 aggregations so Catalyst picks physical strategies; the per-superstep
 shuffle volume is what sheep's low-ECV(down) partitioning minimizes.
 
+Connected components has two paths, split by one ``count()`` of the
+canonical half against ``tree.DRIVER_TREE_MAX_EDGES`` (the envelope of
+the tree build's driver funnel). At or below it the half is collected
+once and labelled by one union-find pass with the elimination kernel
+(``tree._eliminate``) — no Spark rounds at all. Above it, large/small-star
+contraction runs as Spark rounds with ``max_iter`` and checkpoint/resume.
+
 Physical notes
 --------------
-- The edge table is hash-repartitioned on ``src`` ONCE and cached; every
-  superstep's join then reuses that exchange, shuffling only the O(V)
-  rank/label side.
+- The superstep loops' edge table is hash-repartitioned on ``src``
+  ONCE and cached; every superstep's join then reuses that exchange,
+  shuffling only the O(V) rank/label side.
 - Per-superstep lineage is truncated with ``localCheckpoint`` (or durable
   parquet checkpoints via checkpointing.py for resume).
 - Dangling vertices don't exist: the edge table is symmetrized, so every
@@ -24,8 +31,12 @@ import os
 import time
 from contextlib import contextmanager
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import tree
 
 
 @contextmanager
@@ -203,22 +214,65 @@ def _small_star(e: DataFrame) -> DataFrame:
     return rewired.unionAll(self_edge).distinct()
 
 
+def _cc_driver(half: DataFrame) -> DataFrame:
+    """CC on the driver: one union-find pass over the collected
+    canonical half (src > dst) → labels(vid, component).
+
+    Ids are relabelled to dense indices in vid order and swept by the
+    elimination kernel (tree._eliminate) as (min, max) index pairs; its
+    forest's trees are exactly the components (lib/unionfind.h:34-103).
+    Each node's root comes from pointer doubling over that forest, and
+    component = the minimum vid per root, i.e. the first index seen per
+    root. One collect, one kernel call, one Arrow upload with an
+    explicit schema (an empty graph yields typed empty labels)."""
+    src, dst = tree.collect_int64_columns(half, ("src", "dst"))
+    # per-column uniques, then their union: a third of the transient
+    # driver memory of one unique(return_inverse) over both columns
+    vids = np.union1d(np.unique(dst), np.unique(src))
+    n = len(vids)
+    kid, par = tree._eliminate(np.searchsorted(vids, dst), np.searchsorted(vids, src), n)
+    ptr = np.arange(n, dtype=np.int64)
+    ptr[kid] = par
+    while True:  # pointer doubling to each node's root
+        nxt = ptr[ptr]
+        if np.array_equal(nxt, ptr):
+            break
+        ptr = nxt
+    roots, first = np.unique(ptr, return_index=True)
+    min_idx = np.empty(n, dtype=np.int64)
+    min_idx[roots] = first
+    schema = pa.schema([("vid", pa.int64()), ("component", pa.int64())])
+    labels = pa.table({"vid": vids, "component": vids[min_idx[ptr]]}, schema=schema)
+    return half.sparkSession.createDataFrame(labels)
+
+
 def connected_components(
     edges_sym: DataFrame, max_iter: int = 50, checkpointer=None
 ) -> tuple[DataFrame, dict]:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al. 2014) → labels(vid, component),
-    component = min vid in the component — the distributed analogue of
-    the reference's in-memory union-find (lib/unionfind.h:34-103).
+    """Connected components → labels(vid, component), component = min
+    vid in the component, over the canonical half (src > dst) of the
+    edge table. Two paths, chosen by one ``count()`` of that half
+    against ``tree.DRIVER_TREE_MAX_EDGES`` (read at call time — the same
+    envelope as the tree build's driver funnel); ``info["path"]`` says
+    which ran.
 
-    Each round rewires every edge toward the minimum of a local
-    neighborhood; the edge set converges to min-rooted stars in
-    O(log² V) rounds worst-case (O(log V) observed), INDEPENDENT of
-    graph diameter — unlike naive min-label propagation (O(diameter))
-    or single-sided min contraction, which shrinks path graphs by only
-    ~1 vertex per round. Rounds are edge-sized shuffles keyed on
-    vertices. Convergence = the canonical edge set reaches a fixpoint
-    (count + order-insensitive xxhash both stable).
+    ``"driver"`` (at or below the cap): collect the half once and run
+    one union-find pass with the elimination kernel — the reference's
+    in-memory union-find (lib/unionfind.h:34-103) itself. No rounds run,
+    so ``checkpointer`` is neither read nor written and ``max_iter`` is
+    unused; info reports iterations=1, changed=0, converged=True.
+
+    ``"star"`` (above the cap): alternating large-star / small-star
+    contraction (Kiveris et al. 2014). Each round rewires every edge
+    toward the minimum of a local neighborhood; the edge set converges
+    to min-rooted stars in O(log² V) rounds worst-case (O(log V)
+    observed), INDEPENDENT of graph diameter — unlike naive min-label
+    propagation (O(diameter)) or single-sided min contraction, which
+    shrinks path graphs by only ~1 vertex per round. Rounds are
+    edge-sized shuffles keyed on vertices. Convergence = the canonical
+    edge set reaches a fixpoint (count + order-insensitive xxhash both
+    stable). Each round is saved to ``checkpointer`` and a run resumes
+    from its newest round.
 
     If ``max_iter`` rounds pass without a fixpoint (a deliberately
     bounded run, e.g. kill/resume tests), a RuntimeWarning is emitted
@@ -226,6 +280,11 @@ def connected_components(
     labels as final (they previously got silently-wrong labels; ADVICE
     r1). Partial labels are still a function of vid (min-aggregated).
     """
+    half = edges_sym.where(F.col("src") > F.col("dst")).select("src", "dst")
+    if half.count() <= tree.DRIVER_TREE_MAX_EDGES:
+        info = {"iterations": 1, "changed": 0, "converged": True, "path": "driver"}
+        return _cc_driver(half), info
+
     edges, edges_owned = _prepare_edges(edges_sym)
     e = edges.where(F.col("src") > F.col("dst")).select("src", "dst")
     start_iter = 0
@@ -247,7 +306,7 @@ def connected_components(
         return int(row["n"]), int(row["h"])
 
     prev = stats(e)
-    info = {"iterations": 0, "changed": prev[0], "converged": prev[0] == 0}
+    info = {"iterations": 0, "changed": prev[0], "converged": prev[0] == 0, "path": "star"}
     # NOTE (r6): AQE stays ON here, unlike pagerank — CC's edge set
     # shrinks every round and AQE's runtime join re-selection (small
     # rounds become broadcast joins) beats the static plan: toggling it

@@ -325,15 +325,17 @@ def vertex_meta_from_arrays(spark: SparkSession, vid: np.ndarray, pos: np.ndarra
     return spark.createDataFrame(pdf)
 
 
-def down_assign(edges_sym: DataFrame, vmeta: DataFrame) -> DataFrame:
+def down_assign(edges_sym: DataFrame, vmeta: DataFrame,
+                n_vertices: int | None = None) -> DataFrame:
     """``edge_parts(src, dst, part)`` — each undirected edge exactly once
     (src < dst by vid, partition.cpp:615-617), owned by the part of its
     lower-pos endpoint (partition.cpp:623). The vertex side routes
     through maybe_broadcast, so an over-limit vmeta falls back to a
-    shuffle join rather than a driver-sized broadcast."""
+    shuffle join rather than a driver-sized broadcast; pass
+    ``n_vertices`` (vmeta's row count) to skip the guard's count job."""
     from .graph import maybe_broadcast
 
-    v = maybe_broadcast(vmeta)
+    v = maybe_broadcast(vmeta, n_rows=n_vertices)
     a = v.select(F.col("vid").alias("src"), F.col("pos").alias("pos_a"), F.col("part").alias("part_a"))
     b = v.select(F.col("vid").alias("dst"), F.col("pos").alias("pos_b"), F.col("part").alias("part_b"))
     once = edges_sym.where(F.col("src") < F.col("dst"))

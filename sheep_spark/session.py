@@ -99,8 +99,10 @@ def _warm_session(spark: SparkSession) -> None:
     per worker) — so those fixed costs land at session startup instead
     of inside the first real query. A long-lived production driver pays
     these exactly once; a per-query benchmark otherwise charges them all
-    to whichever query runs first. Costs ~2-4 s per NEW session; no data
-    or results are cached. Opt out with SPARK_GRAFT_NO_WARMUP=1."""
+    to whichever query runs first. Costs ~10-15 s per NEW session on a
+    4-core VM (groupBy job 4.6-5.4 s, Python worker pool 2.6-3.0 s,
+    parquet write+read ~2.0 s, Arrow collect 0.5 s); no data or results
+    are cached. Opt out with SPARK_GRAFT_NO_WARMUP=1."""
     if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1":
         return
     app = spark.sparkContext.applicationId

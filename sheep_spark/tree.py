@@ -33,6 +33,10 @@ stages. Each task remaps its slice to dense local ids
 (_eliminate_arrow), so per-task state is O(vertices in the slice), not
 O(global V) as in sheep's per-rank JNode arrays (jnode.cpp:203-250).
 
+The forest's trees are exactly the graph's connected components, so
+``analytics.connected_components`` reuses ``_eliminate`` (below the same
+DRIVER_TREE_MAX_EDGES cap) as its one-pass union-find.
+
 pst_weight needs no kernel: it counts later neighbors (jtree.cpp:47-49),
 i.e. ``bincount(lo)`` on the driver or ``groupBy(lo).count()`` over the
 deduped pos-space edge list.
@@ -69,7 +73,8 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
     outside [0, n_vertices) or a call has 2^31 or more vertices or
     edges (the compiled kernel's state is int32). ``weights_out`` (dict)
     receives ``pre_weight`` = bincount(hi) and ``pst_weight`` =
-    bincount(lo) over n_vertices.
+    bincount(lo) over n_vertices; without it neither is allocated or
+    computed (CC and the map/reduce merge rounds discard them).
     """
     from . import _csweep
 
@@ -85,8 +90,10 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
         cap = min(len(lo), n_vertices)
         kid_out = np.empty(cap, dtype=np.int64)
         par_out = np.empty_like(kid_out)
-        pre_w = np.empty(n_vertices, dtype=np.int64)
-        pst_w = np.empty(n_vertices, dtype=np.int64)
+        pre_w = pst_w = None
+        if weights_out is not None:
+            pre_w = np.empty(n_vertices, dtype=np.int64)
+            pst_w = np.empty(n_vertices, dtype=np.int64)
         n_out, sort_s, sweep_s = ss_fn(lo, hi, n_vertices,
                                        kid_out, par_out, pre_w, pst_w)
         if timings is not None:

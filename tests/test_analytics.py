@@ -1,6 +1,7 @@
 import numpy as np
+import pytest
 
-from sheep_spark import analytics, graph
+from sheep_spark import _csweep, analytics, graph, tree
 from tests.conftest import degree_pos, edges_df, random_graph
 
 
@@ -48,11 +49,13 @@ def test_connected_components_exact(spark):
     assert info["changed"] == 0
 
 
-def test_connected_components_path_graph_logarithmic(spark):
+def test_connected_components_path_graph_logarithmic(spark, monkeypatch):
     """Diameter-independence regression (ADVICE r1): a 400-vertex path has
     diameter 399; star contraction must label it in O(log V) rounds, not
     O(diameter). Single-sided min contraction shrinks paths ~1 vertex
-    per round and would blow the round budget here."""
+    per round and would blow the round budget here. Pinned to the star
+    path (cap 0): below the cap CC runs no rounds at all."""
+    monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", 0)
     n = 400
     sym = edges_df(spark, [(i, i + 1) for i in range(n - 1)])
     labels, info = analytics.connected_components(sym, max_iter=25)
@@ -61,9 +64,10 @@ def test_connected_components_path_graph_logarithmic(spark):
     assert got == {v: 0 for v in range(n)}
 
 
-def test_connected_components_unconverged_warns(spark):
+def test_connected_components_unconverged_warns(spark, monkeypatch):
     import warnings
 
+    monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", 0)  # the star path has rounds
     sym = edges_df(spark, [(i, i + 1) for i in range(64)])
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
@@ -77,20 +81,68 @@ def test_connected_components_random_vs_unionfind(spark):
     sym = edges_df(spark, edges)
     labels, _ = analytics.connected_components(sym)
     got = {r.vid: r.component for r in labels.collect()}
+    assert got == _cc_oracle(_both_directions(edges))
 
+
+def _cc_oracle(rows):
+    """Plain union-find over the rows with src > dst — the canonical half
+    both CC paths read — → {vid: min vid of its component}."""
     uf = {}
 
     def find(x):
-        while uf.get(x, x) != x:
-            uf[x] = uf.get(uf[x], uf[x])
+        while uf.setdefault(x, x) != x:
             x = uf[x]
         return x
 
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
+    for a, b in rows:
+        if a > b:
+            ra, rb = find(a), find(b)
             uf[max(ra, rb)] = min(ra, rb)
-    want = {v: find(v) for v in {v for e in edges for v in e}}
+    return {v: find(v) for v in uf}
+
+
+def _both_directions(edges):
+    return edges + [(b, a) for a, b in edges]
+
+
+CC_SHAPES = {
+    "empty": [],
+    "one_edge": _both_directions([(3, 9)]),
+    "star": _both_directions([(0, v) for v in range(1, 40)]),
+    "path_400": _both_directions([(v, v + 1) for v in range(399)]),
+    "k12": _both_directions([(a, b) for a in range(12) for b in range(a + 1, 12)]),
+    "duplicates_and_self_loop": _both_directions([(0, 1), (0, 1), (1, 2), (2, 2), (5, 6)]) + [(5, 6)],
+    "self_loop_only_vertex": _both_directions([(0, 1), (1, 2)]) + [(7, 7)],
+    "sparse_ids_near_2_40": _both_directions(
+        [(2**40 + 3 * a, 2**40 + 3 * b) for a, b in random_graph(40, 45, seed=5)]
+    ),
+    "one_direction_only": [(5, 1), (9, 5), (3, 8), (12, 11), (20, 30)],
+}
+
+
+@pytest.mark.parametrize("shape", sorted(CC_SHAPES))
+def test_connected_components_driver_and_star_match_unionfind(spark, monkeypatch, shape):
+    """Differential CC: the driver path (compiled sweep, then interpreted
+    sweep) and the star path (pinned by a cap of -1, so even the empty
+    input takes it) must each equal a plain union-find oracle."""
+    rows = CC_SHAPES[shape]
+    df = spark.createDataFrame(rows, "src long, dst long")
+    want = _cc_oracle(rows)
+
+    def run():
+        labels, info = analytics.connected_components(df)
+        assert labels.dtypes == [("vid", "bigint"), ("component", "bigint")]
+        return {r.vid: r.component for r in labels.collect()}, info
+
+    got, info = run()
+    assert info["path"] == "driver" and info["converged"] and info["iterations"] == 1
+    assert got == want
+    with monkeypatch.context() as mp:
+        mp.setattr(_csweep, "loaded", lambda: None)
+        assert run()[0] == want
+    monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", -1)
+    got, info = run()
+    assert info["path"] == "star" and info["converged"]
     assert got == want
 
 

@@ -1,4 +1,4 @@
-from sheep_spark import analytics
+from sheep_spark import analytics, tree
 from sheep_spark.checkpointing import Checkpointer
 from tests.conftest import edges_df, random_graph
 
@@ -30,7 +30,8 @@ def test_pagerank_resume_matches_straight_run(spark, tmp_path):
     assert "l1_delta" in m
 
 
-def test_cc_resume(spark, tmp_path):
+def test_cc_resume(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", 0)  # the star path has rounds
     edges = random_graph(80, 100, seed=37)
     sym = edges_df(spark, edges)
     straight, _ = analytics.connected_components(sym)
@@ -41,6 +42,16 @@ def test_cc_resume(spark, tmp_path):
     resumed, _ = analytics.connected_components(sym, checkpointer=ck)
     got = {r.vid: r.component for r in resumed.collect()}
     assert got == want
+
+
+def test_cc_driver_path_skips_checkpointer(spark, tmp_path):
+    """Below the cap CC runs no rounds: the checkpointer is neither read
+    nor written."""
+    sym = edges_df(spark, random_graph(30, 40, seed=43))
+    ck = Checkpointer(spark, str(tmp_path / "cc"), job="cc")
+    _, info = analytics.connected_components(sym, checkpointer=ck)
+    assert info["path"] == "driver"
+    assert ck.complete_iterations() == []
 
 
 def test_lp_resume(spark, tmp_path):

@@ -235,6 +235,25 @@ def test_sort_sweep_matches_interpreted_and_emits_bincounts():
             run(tree._eliminate, one, np.array([1], np.int64), 2**31)
 
 
+@pytest.mark.parametrize("run", [_compiled, _interpreted], ids=["compiled", "interpreted"])
+def test_weightless_sweep_equals_weighted(run):
+    """Without ``weights_out`` the sweep skips the pre/pst weights (the C
+    kernel gets NULL weight pointers) and must return exactly the
+    (kid, parent) arrays of a weighted call, on both paths."""
+    rng = np.random.default_rng(47)
+    for n, m in [(1, 0), (5, 2), (80, 500), (2000, 20000)]:
+        a = rng.integers(0, n, size=m)
+        b = rng.integers(0, n, size=m)
+        keep = a != b
+        lo = np.minimum(a, b)[keep].astype(np.int64)
+        hi = np.maximum(a, b)[keep].astype(np.int64)
+        w: dict = {}
+        k_w, p_w = run(tree._eliminate, lo, hi, n, weights_out=w)
+        k, p = run(tree._eliminate, lo, hi, n)
+        assert np.array_equal(k, k_w) and np.array_equal(p, p_w)
+        assert np.array_equal(w["pst_weight"], np.bincount(lo, minlength=n))
+
+
 ADVERSARIAL_SHAPES = {
     "empty": [],
     "single_edge": [(3, 9)],
