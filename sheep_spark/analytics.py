@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 
 from . import tree
 
+LABELS_SCHEMA = pa.schema([("vid", pa.int64()), ("component", pa.int64())])
+
 
 @contextmanager
 def _superstep_planning(spark):
@@ -223,8 +225,8 @@ def _cc_driver(half: DataFrame) -> DataFrame:
     forest's trees are exactly the components (lib/unionfind.h:34-103).
     Each node's root comes from pointer doubling over that forest, and
     component = the minimum vid per root, i.e. the first index seen per
-    root. One collect, one kernel call, one Arrow upload with an
-    explicit schema (an empty graph yields typed empty labels)."""
+    root. One collect, one kernel call, one ``tree.upload_columns``
+    (an empty graph yields typed empty labels)."""
     src, dst = tree.collect_int64_columns(half, ("src", "dst"))
     # per-column uniques, then their union: a third of the transient
     # driver memory of one unique(return_inverse) over both columns
@@ -241,9 +243,9 @@ def _cc_driver(half: DataFrame) -> DataFrame:
     roots, first = np.unique(ptr, return_index=True)
     min_idx = np.empty(n, dtype=np.int64)
     min_idx[roots] = first
-    schema = pa.schema([("vid", pa.int64()), ("component", pa.int64())])
-    labels = pa.table({"vid": vids, "component": vids[min_idx[ptr]]}, schema=schema)
-    return half.sparkSession.createDataFrame(labels)
+    return tree.upload_columns(
+        half.sparkSession, {"vid": vids, "component": vids[min_idx[ptr]]}, LABELS_SCHEMA
+    )
 
 
 def connected_components(

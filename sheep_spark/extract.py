@@ -125,15 +125,15 @@ def mint_vertex_ids(edges_raw: DataFrame,
     n = urls.count()
     if n > driver_rank_max:
         return attach_rank(urls, ["url"], out="vid").select("url", "vid")
-    spark = edges_raw.sparkSession
-    if n == 0:
-        return spark.createDataFrame([], "url string, vid long")
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from .tree import upload_columns
 
     vals = sorted(r["url"] for r in urls.collect())
-    return spark.createDataFrame(
-        pd.DataFrame({"url": vals, "vid": np.arange(n, dtype=np.int64)})
+    return upload_columns(
+        edges_raw.sparkSession, {"url": vals, "vid": np.arange(n, dtype=np.int64)},
+        pa.schema([("url", pa.string()), ("vid", pa.int64())]),
     )
 
 

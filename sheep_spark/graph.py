@@ -23,8 +23,11 @@ offsets. This is the distributed equivalent of sheep's parallel sort
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+VERTICES_SCHEMA = pa.schema([("vid", pa.int64()), ("degree", pa.int64()), ("pos", pa.int64())])
 
 # Canonical derived test graph over the TPC-H-ish sandbox tables: a
 # deterministic pseudo-random multigraph folded to V_MOD vertices. It has
@@ -154,7 +157,6 @@ def vertices_from_edges(edges_sym: DataFrame,
             # the try — the finally unpersist never forces a recompute
             return attach_rank(deg, ["degree", "vid"], out="pos")
         import numpy as np
-        import pandas as pd
 
         from .tree import collect_int64_columns
 
@@ -162,10 +164,7 @@ def vertices_from_edges(edges_sym: DataFrame,
         order = np.lexsort((vid, degree))  # primary: degree, tie: vid
         pos = np.empty(n, dtype=np.int64)
         pos[order] = np.arange(n, dtype=np.int64)
-        return deg.sparkSession.createDataFrame(
-            pd.DataFrame({"vid": vid, "degree": degree, "pos": pos}),
-            "vid long, degree long, pos long",  # explicit: an empty graph infers nothing
-        )
+        return vertices_df_from_arrays(deg.sparkSession, vid, degree, pos)
     finally:
         deg.unpersist()
 
@@ -346,21 +345,12 @@ def driver_sequence_tree_arrays(canon: DataFrame, timings: dict | None = None,
 
 
 def vertices_df_from_arrays(spark: SparkSession, vid, degree, pos) -> DataFrame:
-    """``vertices(vid, degree, pos)`` DataFrame from driver arrays (one
-    Arrow upload) — schema-identical to ``vertices_from_edges``. Direct
-    pyarrow upload (r6; see tree_df_from_arrays)."""
-    import numpy as np
-    import pyarrow as pa
+    """``vertices(vid, degree, pos)`` (VERTICES_SCHEMA) from driver
+    arrays in one ``tree.upload_columns`` call; ``vertices_from_edges``
+    uploads its driver rank through here too."""
+    from .tree import upload_columns
 
-    return spark.createDataFrame(
-        pa.table(
-            {
-                "vid": pa.array(np.asarray(vid, dtype=np.int64)),
-                "degree": pa.array(np.asarray(degree, dtype=np.int64)),
-                "pos": pa.array(np.asarray(pos, dtype=np.int64)),
-            }
-        )
-    )
+    return upload_columns(spark, {"vid": vid, "degree": degree, "pos": pos}, VERTICES_SCHEMA)
 
 
 def edges_pos(edges_sym: DataFrame, vertices: DataFrame,

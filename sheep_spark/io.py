@@ -77,11 +77,22 @@ def read_xs1(spark: SparkSession, path: str) -> DataFrame:
 
 def write_xs1(edges: DataFrame, path: str) -> None:
     """Single-file XS1 sink (test-scale; the scale sink is the
-    parquet/partitionBy path in partitioner.write_partitioned)."""
-    pdf = edges.select("src", "dst").toPandas()
-    rec = np.empty(len(pdf), dtype=XS1_DTYPE)
-    rec["tail"] = pdf["src"].to_numpy()
-    rec["head"] = pdf["dst"].to_numpy()
+    parquet/partitionBy path in partitioner.write_partitioned). Endpoints
+    come back through one ``tree.collect_int64_columns`` (a null raises
+    ValueError); an id outside the record's uint32 range [0, 2^32) raises
+    ValueError instead of wrapping."""
+    from .tree import collect_int64_columns
+
+    src, dst = collect_int64_columns(edges, ("src", "dst"))
+    for name, ids in (("src", src), ("dst", dst)):
+        if len(ids) and (ids.min() < 0 or ids.max() >= 2**32):
+            raise ValueError(
+                f"column {name!r} has ids outside [0, 2^32); "
+                "XS1 records store uint32 vertex ids"
+            )
+    rec = np.empty(len(src), dtype=XS1_DTYPE)
+    rec["tail"] = src
+    rec["head"] = dst
     rec["weight"] = 0.0
     with open(path, "wb") as f:
         f.write(rec.tobytes())

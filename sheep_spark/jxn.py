@@ -25,13 +25,17 @@ scale envelope the reference gives it.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
+
+JXN_TREE_SCHEMA = pa.schema(
+    [(c, pa.int64()) for c in ("jnid", "pos", "parent", "pst_weight", "width")]
+)
 
 
 def _adjacency(lo, hi, n: int):
     """Full adjacency (both directions) as CSR numpy arrays."""
-    import numpy as np
-
     deg = np.bincount(lo, minlength=n) + np.bincount(hi, minlength=n)
     indptr = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(deg, out=indptr[1:])
@@ -194,8 +198,6 @@ def _facts(parent: list, pst_weight: list, width: list) -> dict:
     aggregates are numpy reductions and the height cascade is the
     pointer-doubling path-sum from tree.tree_heights — no O(V)
     interpreted loop."""
-    import numpy as np
-
     from .tree import tree_heights
 
     n = len(parent)
@@ -224,28 +226,19 @@ def build_jxn_tree(
     deferral (width_limit); ``parent`` is NULL for roots. ``memory_limit``
     bounds live jxn storage (see jxn_kernel).
     """
-    from .tree import collect_int64_columns
+    from .tree import collect_int64_columns, upload_columns
 
     lo, hi = collect_int64_columns(edges_pos_df, ("lo", "hi"))
     pos_of, parent, pst_w, width, facts = jxn_kernel(
         lo, hi, n_vertices, width_limit=width_limit, memory_limit=memory_limit
     )
-    import pandas as pd
-
-    spark = edges_pos_df.sparkSession
-    pdf = pd.DataFrame(
-        {
-            "jnid": range(len(pos_of)),
-            "pos": pos_of,
-            "parent": [p if p >= 0 else None for p in parent],
-            "pst_weight": pst_w,
-            "width": width,
-        }
-    )
-    df = spark.createDataFrame(
-        pdf.astype({"jnid": "int64", "pos": "int64", "parent": "Int64",
-                    "pst_weight": "int64", "width": "int64"})
-    )
+    df = upload_columns(edges_pos_df.sparkSession, {
+        "jnid": np.arange(len(pos_of), dtype=np.int64),
+        "pos": pos_of,
+        "parent": np.ma.masked_less(np.asarray(parent, dtype=np.int64), 0),
+        "pst_weight": pst_w,
+        "width": width,
+    }, JXN_TREE_SCHEMA)
     return df, facts
 
 

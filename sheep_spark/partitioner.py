@@ -6,8 +6,9 @@
   ``max_component = (total_weight // k) * balance_factor``
   (partition.cpp:54-57, truncated to int), first-fit-decreasing bin-pack
   the children's components; then push labels down the tree and pack
-  roots last-fit (partition.cpp:140-156). Node weight defaults to
-  pst_weight only (partition.h:51-52 defaults → edge-balanced parts).
+  roots last-fit (partition.cpp:140-156). Node weight is pst_weight
+  (get_weight's default flags, partition.h:51-52 → edge-balanced
+  parts); the vtx/pre flags have no caller and are not offered.
 
   Like the reference, this runs serially on rank-0/driver
   (graph2tree.cpp:205-208): the tree is O(V) longs, tiny next to the
@@ -20,13 +21,26 @@
   of its earlier-in-sequence endpoint (partition.cpp:623, :505). With a
   degree-ascending sequence this bounds each part's replication set,
   which is exactly what makes the downstream analytics shuffle-light.
+
+Arrays cross the driver↔JVM boundary only through ``tree``'s transfer
+layer: the tree comes in by one ``collect_int64_columns`` and the parts
+vector goes out by one ``upload_columns`` with an explicit schema (below),
+so an empty graph yields typed empty frames.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import tree
+
+ASSIGN_SCHEMA = pa.schema([("pos", pa.int64()), ("part", pa.int32())])
+VMETA_SCHEMA = pa.schema([("vid", pa.int64()), ("pos", pa.int64()), ("part", pa.int32())])
+VID_PART_SCHEMA = pa.schema([("vid", pa.int64()), ("part", pa.int32())])
+EDGE_PART_SCHEMA = pa.schema([("src", pa.int64()), ("dst", pa.int64()), ("part", pa.int32())])
 
 
 def forward_partition(
@@ -141,73 +155,43 @@ def forward_partition(
 
 
 def tree_to_arrays(tree_df: DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Collect tree(jnid,parent,pst_weight) into jnid-indexed numpy arrays
-    via Arrow (driver-side, O(V) — same centralization as sheep rank 0)."""
-    pdf = tree_df.select("jnid", "parent", "pst_weight").toPandas()
-    n = len(pdf)
-    parent = np.full(n, -1, dtype=np.int64)
-    weight = np.zeros(n, dtype=np.int64)
-    jn = pdf["jnid"].to_numpy()
-    par = pdf["parent"].to_numpy()
-    mask = ~np.isnan(par.astype("float64"))
-    parent[jn[mask]] = par[mask].astype(np.int64)
-    weight[jn] = pdf["pst_weight"].to_numpy().astype(np.int64)
+    """Collect tree(jnid, parent, pst_weight) into jnid-indexed int64
+    (parent with -1 roots, pst_weight) arrays: one Arrow collect, the
+    NULL root parents turned into -1 JVM-side (driver-side, O(V) — same
+    centralization as sheep rank 0)."""
+    jn, par, pst = tree.collect_int64_columns(
+        tree_df.select("jnid", F.coalesce("parent", F.lit(-1)).alias("parent"), "pst_weight"),
+        ("jnid", "parent", "pst_weight"),
+    )
+    parent = np.full_like(par, -1)
+    weight = np.zeros_like(pst)
+    parent[jn] = par
+    weight[jn] = pst
     return parent, weight
 
 
-def tree_weight_array(tree_df: DataFrame, vtx_weight: bool = False,
-                      pst_weight: bool = True, pre_weight: bool = False) -> np.ndarray:
-    """Per-node packing weight under the reference's flag set
-    (get_weight, partition.cpp:38-48): vtx adds 1 per node
-    (vertex-balanced parts), pst adds the post-degree (edge-balanced,
-    the default), pre adds the pre-degree (requires a tree built with
-    ``with_pre_weight=True``; see build_tree for the kids-sum identity)."""
-    cols = ["jnid", "pst_weight"] + (["pre_weight"] if pre_weight else [])
-    pdf = tree_df.select(*cols).toPandas()
-    n = len(pdf)
-    weight = np.zeros(n, dtype=np.int64)
-    jn = pdf["jnid"].to_numpy()
-    if vtx_weight:
-        weight += 1
-    if pst_weight:
-        weight[jn] += pdf["pst_weight"].to_numpy().astype(np.int64)
-    if pre_weight:
-        weight[jn] += pdf["pre_weight"].to_numpy().astype(np.int64)
-    return weight
-
-
 def sheep_partition(tree_df: DataFrame, vertices: DataFrame, num_parts: int,
-                    balance_factor: float = 1.03, vtx_weight: bool = False,
-                    pst_weight: bool = True, pre_weight: bool = False) -> DataFrame:
+                    balance_factor: float = 1.03) -> DataFrame:
     """End-to-end: tree DF → FFD pack on driver → ``assign(vid, part)``.
 
-    jnid→vid re-index mirrors partition.cpp:62-66 (jnid == pos). The
-    weight flags mirror partition.h:51-52 (defaults: pst only =
-    edge-balanced parts; vtx_weight=True gives vertex-balanced packs)."""
+    One collect of the tree (``tree_to_arrays``), the FFD pack weighted
+    by pst_weight (edge-balanced parts, partition.h:51-52 defaults), one
+    upload of the parts vector (``assign_df``). jnid→vid re-index
+    mirrors partition.cpp:62-66 (jnid == pos)."""
     from .graph import maybe_broadcast
 
-    spark = tree_df.sparkSession
     parent, weight = tree_to_arrays(tree_df)
-    if (vtx_weight, pst_weight, pre_weight) != (False, True, False):
-        weight = tree_weight_array(tree_df, vtx_weight, pst_weight, pre_weight)
     parts, _ = forward_partition(parent, weight, num_parts, balance_factor)
-    assign = assign_df(spark, parts)
+    assign = assign_df(tree_df.sparkSession, parts)
     assign = maybe_broadcast(assign, n_rows=len(parts))
     return vertices.select("vid", "pos").join(assign, "pos").select("vid", "part")
 
 
 def assign_df(spark: SparkSession, parts: np.ndarray) -> DataFrame:
-    """jnid-indexed parts vector → assign(pos, part) DataFrame via Arrow
-    (a python tuple list serializes ~10x slower at V=millions)."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "pos": np.arange(len(parts), dtype=np.int64),
-            "part": np.asarray(parts, dtype=np.int32),
-        }
+    """jnid-indexed parts vector → assign(pos long, part int), one upload."""
+    return tree.upload_columns(
+        spark, {"pos": np.arange(len(parts), dtype=np.int64), "part": parts}, ASSIGN_SCHEMA
     )
-    return spark.createDataFrame(pdf)
 
 
 def naive_partition(vertices: DataFrame, num_parts: int) -> DataFrame:
@@ -246,8 +230,6 @@ def fennel_partition(
     be worthwhile", partition.cpp:333-335). The sheep tree partitioner
     is the scale path.
     """
-    import numpy as np
-
     spark = edges_sym.sparkSession
     n_directed = edges_sym.count()
     if n_directed > max_driver_edges:
@@ -258,9 +240,11 @@ def fennel_partition(
             "sheep_partition (tree + FFD) as the at-scale partitioner, or "
             "raise max_driver_edges explicitly if you have the driver RAM."
         )
-    epdf = edges_sym.toPandas()
+    src, dst = tree.collect_int64_columns(edges_sym, ("src", "dst"))
+    if not len(src):  # no edges, no vertices to place
+        return _vid_part_df(spark, {})
     n_nodes = vertices.count()
-    m_directed = float(len(epdf))
+    m_directed = float(len(src))
     k = float(num_parts)
     y = 1.5
     a = (
@@ -272,8 +256,8 @@ def fennel_partition(
     max_component = (total / num_parts) * balance_factor
 
     adj: dict[int, list[int]] = {}
-    for s, d in zip(epdf["src"].to_numpy(), epdf["dst"].to_numpy()):
-        adj.setdefault(int(s), []).append(int(d))
+    for s, d in zip(src.tolist(), dst.tolist()):
+        adj.setdefault(s, []).append(d)
 
     parts: dict[int, int] = {}
     part_size = np.zeros(num_parts)
@@ -296,8 +280,13 @@ def fennel_partition(
                 break
         parts[x] = best_p
         part_size[best_p] += x_weight
-    return spark.createDataFrame(
-        [(int(v), int(p)) for v, p in parts.items()], "vid long, part int"
+    return _vid_part_df(spark, parts)
+
+
+def _vid_part_df(spark: SparkSession, parts: dict[int, int]) -> DataFrame:
+    """{vid: part} → assign(vid long, part int), one upload."""
+    return tree.upload_columns(
+        spark, {"vid": list(parts), "part": list(parts.values())}, VID_PART_SCHEMA
     )
 
 
@@ -313,16 +302,10 @@ def vertex_meta_from_arrays(spark: SparkSession, vid: np.ndarray, pos: np.ndarra
     arrays (``parts`` is jnid-indexed): one gather + one Arrow upload,
     replacing the V⋈V assign join when the partition was packed on the
     driver anyway. Schema/contents identical to ``vertex_meta``."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "vid": np.asarray(vid, dtype=np.int64),
-            "pos": np.asarray(pos, dtype=np.int64),
-            "part": np.asarray(parts, dtype=np.int32)[pos],
-        }
+    pos = np.asarray(pos, dtype=np.int64)
+    return tree.upload_columns(
+        spark, {"vid": vid, "pos": pos, "part": np.asarray(parts)[pos]}, VMETA_SCHEMA
     )
-    return spark.createDataFrame(pdf)
 
 
 def down_assign(edges_sym: DataFrame, vmeta: DataFrame,
@@ -471,7 +454,9 @@ def apply_down_reassign(spark: SparkSession, path: str, moves: DataFrame) -> dic
                 *[f"{path}/part={p}" for p in existing]
             )
         else:
-            current = spark.createDataFrame([], "src long, dst long, part int")
+            current = tree.upload_columns(
+                spark, {"src": [], "dst": [], "part": []}, EDGE_PART_SCHEMA
+            )
         out_minus = current.join(
             moves.select("src", "dst", F.col("part_old").alias("part")),
             ["src", "dst", "part"],

@@ -39,7 +39,16 @@ DRIVER_TREE_MAX_EDGES cap) as its one-pass union-find.
 
 pst_weight needs no kernel: it counts later neighbors (jtree.cpp:47-49),
 i.e. ``bincount(lo)`` on the driver or ``groupBy(lo).count()`` over the
-deduped pos-space edge list.
+deduped pos-space edge list. Either strategy yields the one tree table,
+``TREE_SCHEMA = (jnid, parent, pst_weight)``, parent NULL for roots.
+
+This module also holds the engine's one driver↔JVM transfer layer,
+the analogue of sheep rank 0 broadcasting its flat arrays
+(partition.cpp:69-79): every driver array crosses to the JVM through
+``upload_columns`` (one Arrow table, always with an explicit Arrow schema,
+so an empty upload still has types) and comes back through
+``collect_int64_columns``/``collect_native_columns`` (one Arrow collect
+that raises ValueError on a null).
 """
 
 from __future__ import annotations
@@ -52,6 +61,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TREE_EDGE_SCHEMA = "lo long, hi long"
+TREE_SCHEMA = pa.schema([("jnid", pa.int64()), ("parent", pa.int64()),
+                         ("pst_weight", pa.int64())])
 
 def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
                timings: dict | None = None,
@@ -207,6 +218,16 @@ def build_parent_edges(
 DRIVER_TREE_MAX_EDGES = 100_000_000
 
 
+def upload_columns(spark, columns: dict, schema: pa.Schema) -> DataFrame:
+    """Driver arrays → DataFrame in one Arrow upload; every driver→JVM
+    transfer in the engine goes through here. ``schema`` is an explicit
+    Arrow schema, so an empty upload still has types and each column is
+    cast to its field type (a value that does not fit raises). A
+    nullable column is passed as a numpy masked array; masked entries
+    become nulls."""
+    return spark.createDataFrame(pa.table(columns, schema=schema))
+
+
 def _collect_columns(df: DataFrame, cols: tuple[str, ...], timings: dict | None,
                      widen: bool) -> tuple[np.ndarray, ...]:
     """Arrow-collect the named columns (toArrow, no pandas copy) as
@@ -235,8 +256,9 @@ def _collect_columns(df: DataFrame, cols: tuple[str, ...], timings: dict | None,
 
 def collect_int64_columns(df: DataFrame, cols: tuple[str, ...],
                           timings: dict | None = None) -> tuple[np.ndarray, ...]:
-    """Collect the named columns as int64 numpy arrays. Shared by the
-    driver funnels (tree build, degree-sequence rank, jxn)."""
+    """Collect the named columns as int64 numpy arrays: every driver
+    read of ids or the tree (tree build, degree-sequence rank, jxn, CC,
+    ``partitioner.tree_to_arrays``, fennel, ``io.write_xs1``)."""
     return _collect_columns(df, cols, timings, widen=True)
 
 
@@ -268,54 +290,39 @@ def build_tree_arrays(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
     return {"parent": parent_full, **weights}
 
 
-def tree_df_from_arrays(spark, arrays: dict, with_pre_weight: bool = False) -> DataFrame:
-    """jnid-indexed driver arrays → the canonical tree DataFrame (one
-    Arrow upload; schema identical to the join-form build_tree).
-
-    Uploads a pyarrow Table directly (r6): the nullable ``parent``
-    column is a masked int64 arrow array, skipping the pandas
-    nullable-Int64 detour (measured 2.3 → 0.6 s cold at V=4M, same
-    schema, exceptAll-identical rows)."""
-    parent_full = arrays["parent"]
-    cols = {
-        "jnid": pa.array(np.arange(len(parent_full), dtype=np.int64)),
-        "parent": pa.array(parent_full, mask=parent_full < 0),
-        "pst_weight": pa.array(np.asarray(arrays["pst_weight"], dtype=np.int64)),
-    }
-    if with_pre_weight:
-        cols["pre_weight"] = pa.array(np.asarray(arrays["pre_weight"], dtype=np.int64))
-    return spark.createDataFrame(pa.table(cols))
+def tree_df_from_arrays(spark, arrays: dict) -> DataFrame:
+    """jnid-indexed driver arrays (``parent`` with -1 roots,
+    ``pst_weight``) → the tree table (TREE_SCHEMA) in one
+    ``upload_columns`` call; roots upload as NULL parents."""
+    parent = arrays["parent"]
+    return upload_columns(spark, {
+        "jnid": np.arange(len(parent), dtype=np.int64),
+        "parent": np.ma.masked_less(parent, 0),
+        "pst_weight": arrays["pst_weight"],
+    }, TREE_SCHEMA)
 
 
-def _build_tree_df_driver(
-    edges_pos_df: DataFrame, n_vertices: int, with_pre_weight: bool,
-    timings: dict | None = None,
-) -> DataFrame:
+def _build_tree_df_driver(edges_pos_df: DataFrame, n_vertices: int,
+                          timings: dict | None = None) -> DataFrame:
     """Driver-strategy tree: one collect, one kernel, bincount weights,
-    one arrow upload. Output schema identical to the join form."""
-    spark = edges_pos_df.sparkSession
+    one upload."""
     lo, hi = collect_int64_columns(edges_pos_df, ("lo", "hi"), timings)
     arrays = build_tree_arrays(lo, hi, n_vertices, timings)
-    return tree_df_from_arrays(spark, arrays, with_pre_weight)
+    return tree_df_from_arrays(edges_pos_df.sparkSession, arrays)
 
 
 def build_tree(
     edges_pos_df: DataFrame, n_vertices: int, n_partials: int | None = None,
-    with_pre_weight: bool = False, n_edges: int | None = None,
-    strategy: str = "auto", timings: dict | None = None,
+    n_edges: int | None = None, strategy: str = "auto",
+    timings: dict | None = None,
 ) -> DataFrame:
-    """``tree(jnid, parent, pst_weight[, pre_weight])`` over jnid = 0..V-1.
+    """``tree(jnid, parent, pst_weight)`` (TREE_SCHEMA) over jnid = 0..V-1.
 
     parent is NULL for roots (reference INVALID_JNID, jnode.h:43);
     pst_weight(j) = #neighbors of the vertex at pos j with greater pos
-    (jtree.cpp:47-49), via a plain aggregation.
-
-    ``with_pre_weight`` adds the node's pre-degree (#lower-pos
-    neighbors). Identity with the reference: jnode.h:174-188 accumulates
-    pre_weight on component ROOTS, and get_weight (partition.cpp:38-48)
-    reads it as Σ over kids(id) — every preorder edge of id lands on
-    exactly one kid-root of id, so that sum IS id's pre-degree, which is
-    what ``groupBy(hi).count()`` computes directly.
+    (jtree.cpp:47-49) — the only node weight the partitioner packs
+    (get_weight's default flags, partition.h:51-52). Both strategies
+    return this one schema.
     """
     spark = edges_pos_df.sparkSession
     # strategy: 'driver' = single-sweep rank-0 analogue (fastest under
@@ -336,13 +343,11 @@ def build_tree(
         )
     if strategy == "driver":
         # Fully driver-computed: the edges are already collected for the
-        # sweep, so pst/pre weights are np.bincount (milliseconds) and
-        # the whole tree ships back as ONE arrow upload — no 2E-row
-        # groupBy or V-sized joins JVM-side, and no need to persist the
-        # input (it is scanned exactly once).
-        return _build_tree_df_driver(
-            edges_pos_df, n_vertices, with_pre_weight, timings=timings
-        )
+        # sweep, so pst_weight is np.bincount (milliseconds) and the
+        # whole tree ships back as ONE upload — no 2E-row groupBy or
+        # V-sized joins JVM-side, and no need to persist the input (it
+        # is scanned exactly once).
+        return _build_tree_df_driver(edges_pos_df, n_vertices, timings=timings)
     edges_pos_df = edges_pos_df.persist()
     parents = build_parent_edges(
         edges_pos_df, n_vertices, n_partials, n_edges=n_edges
@@ -350,18 +355,11 @@ def build_tree(
     parents = parents.withColumnRenamed("lo", "jnid").withColumnRenamed("hi", "parent")
     pst = edges_pos_df.groupBy(F.col("lo").alias("jnid")).agg(F.count("*").alias("pst_weight"))
     base = spark.range(n_vertices).select(F.col("id").alias("jnid"))
-    out = (
+    return (
         base.join(parents, "jnid", "left")
         .join(pst, "jnid", "left")
         .select("jnid", "parent", F.coalesce("pst_weight", F.lit(0)).cast("long").alias("pst_weight"))
     )
-    if with_pre_weight:
-        pre = edges_pos_df.groupBy(F.col("hi").alias("jnid")).agg(F.count("*").alias("pre_weight"))
-        out = out.join(pre, "jnid", "left").select(
-            "jnid", "parent", "pst_weight",
-            F.coalesce("pre_weight", F.lit(0)).cast("long").alias("pre_weight"),
-        )
-    return out
 
 
 def serial_tree_oracle(edges: list[tuple[int, int]], pos: dict[int, int]) -> tuple[list, list]:
@@ -475,18 +473,13 @@ def tree_facts_full(tree_df: DataFrame) -> dict:
     """Exact JNodeTable::Facts (jnode.cpp:256-290) without the jxn
     machinery (width = 1 + pst_weight, fill = 0 — the reference's
     default jopts build the same padless tree, jtree.h:86-90). Driver
-    pass over the O(V) collected arrays, like the reference's rank 0;
-    heights via pointer-doubling (tree_heights) — no interpreted O(V)
-    loop remains."""
-    import numpy as np
+    pass over the O(V) arrays of ``partitioner.tree_to_arrays``, like
+    the reference's rank 0; heights via pointer-doubling (tree_heights)
+    — no interpreted O(V) loop remains."""
+    from .partitioner import tree_to_arrays
 
-    pdf = tree_df.select("jnid", "parent", "pst_weight").toPandas().sort_values("jnid")
-    n = len(pdf)
-    pst = pdf["pst_weight"].to_numpy(np.int64)
-    par_f = pdf["parent"].to_numpy("float64", na_value=np.nan)
-    is_root = np.isnan(par_f)
-    par = np.where(is_root, -1, np.nan_to_num(par_f, nan=-1)).astype(np.int64)
-
+    par, pst = tree_to_arrays(tree_df)
+    n = len(par)
     w = pst + 1
     running = np.maximum.accumulate(w) if n else w
     halo = np.flatnonzero(w > 3)
@@ -499,7 +492,7 @@ def tree_facts_full(tree_df: DataFrame) -> dict:
         "fill": 0,
         "vert_height": vmax,
         "edge_height": emax,
-        "root_cnt": int(is_root.sum()),
+        "root_cnt": int((par < 0).sum()),
         "halo_id": int(halo[0]) if len(halo) else None,
         "core_id": int(core[0]) if len(core) else None,
     }

@@ -223,16 +223,23 @@ def test_fused_seq_tree_matches_staged(spark):
     [
         ("vertices_from_edges", [(0, 1), (1, 0), (1, 2), (2, 1), (None, 2)], "vid"),
         ("driver_sequence_tree_arrays", [(0, 1), (1, 2), (2, None)], "dst"),
+        ("write_xs1", [(0, 1), (None, 2)], "src"),
+        ("fennel_partition", [(0, 1), (1, 0), (1, None)], "dst"),
     ],
 )
-def test_null_endpoint_raises(spark, monkeypatch, funnel, rows, column, compiled):
+def test_null_endpoint_raises(spark, monkeypatch, tmp_path, funnel, rows, column, compiled):
     """A null endpoint fails at the driver collect with a ValueError
     naming the column, whether or not the compiled kernel is loaded;
-    numpy has no integer null, so it would otherwise become a bogus id."""
-    from sheep_spark import _csweep
+    numpy has no integer null, so it would otherwise become a bogus id
+    (io.write_xs1 used to write it as vertex 0)."""
+    from sheep_spark import _csweep, io, partitioner
 
     if not compiled:
         monkeypatch.setattr(_csweep, "loaded_seq_tree", lambda: None)
     df = spark.createDataFrame(rows, "src long, dst long")
+    call = {
+        "write_xs1": lambda e: io.write_xs1(e, str(tmp_path / "g.xs1")),
+        "fennel_partition": lambda e: partitioner.fennel_partition(e, e, 2),
+    }.get(funnel) or getattr(graph, funnel)
     with pytest.raises(ValueError, match=f"column '{column}' has 1 null value"):
-        getattr(graph, funnel)(df)
+        call(df)

@@ -1,5 +1,6 @@
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from sheep_spark import graph, io, partitioner, tree
@@ -12,6 +13,17 @@ def test_xs1_roundtrip(spark, tmp_path):
     io.write_xs1(df, p)
     back = io.read_xs1(spark, p)
     assert sorted((r.src, r.dst) for r in back.collect()) == [(1, 2), (3, 4), (5, 1)]
+
+
+@pytest.mark.parametrize("bad", [2**32, -1])
+def test_xs1_write_rejects_ids_outside_uint32(spark, tmp_path, bad):
+    """XS1 records hold uint32 ids: an id that would wrap raises instead
+    of being written as a different vertex."""
+    df = spark.createDataFrame([(1, 2), (3, bad)], "src long, dst long")
+    p = tmp_path / "bad.dat"
+    with pytest.raises(ValueError, match="column 'dst' has ids outside"):
+        io.write_xs1(df, str(p))
+    assert not p.exists()
 
 
 def test_snap_roundtrip(spark, tmp_path):

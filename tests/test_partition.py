@@ -79,51 +79,6 @@ def test_isomorphic_ids_dense(spark):
     assert new_ids == list(range(len(iso)))
 
 
-def test_weight_flag_variants_against_port(spark):
-    """get_weight flags (partition.cpp:38-48): vtx adds 1/node, pst adds
-    post-degree, pre adds pre-degree (= Σ pre_weight over kids, see
-    build_tree docstring). Checked against a direct python recount."""
-    import numpy as np
-
-    from sheep_spark import graph, partitioner, tree
-    from tests.conftest import degree_pos, edges_df, random_graph
-
-    edges = random_graph(60, 140, seed=91)
-    sym = edges_df(spark, edges)
-    verts = graph.vertices_from_edges(sym)
-    pos = degree_pos(edges)
-    n = len(pos)
-    t = tree.build_tree(graph.edges_pos(sym, verts), n, with_pre_weight=True)
-
-    # python recount of pst/pre-degree per jnid
-    pst = [0] * n
-    pre = [0] * n
-    for a, b in edges:
-        lo, hi = sorted((pos[a], pos[b]))
-        pst[lo] += 1
-        pre[hi] += 1
-
-    w_pst = partitioner.tree_weight_array(t)
-    w_vtx = partitioner.tree_weight_array(t, vtx_weight=True, pst_weight=False)
-    w_all = partitioner.tree_weight_array(t, vtx_weight=True, pst_weight=True, pre_weight=True)
-    assert w_pst.tolist() == pst
-    assert w_vtx.tolist() == [1] * n
-    assert w_all.tolist() == [1 + pst[j] + pre[j] for j in range(n)]
-    # vtx+pre+pst == 1 + degree (every edge is pre on one side, pst on the other)
-    deg = [0] * n
-    for a, b in edges:
-        deg[pos[a]] += 1
-        deg[pos[b]] += 1
-    assert (w_all - 1).tolist() == deg
-
-    # vertex-balanced packing balances VERTICES within the FFD bound
-    from pyspark.sql import functions as F
-
-    assign = partitioner.sheep_partition(t, verts, 4, vtx_weight=True, pst_weight=False)
-    counts = [r["cnt"] for r in assign.groupBy("part").agg(F.count("*").alias("cnt")).collect()]
-    assert max(counts) <= int((n // 4) * 1.03) + 1
-
-
 def test_write_isomorphic_matches_python_port(spark, tmp_path):
     """writeIsomorphicGraph parity (partition.cpp:528-586): relabel by
     stable (part, pos) order, each undirected edge once, new-lo first."""
