@@ -102,6 +102,37 @@ def pagerank_supersteps(spark, edges, iters: int) -> tuple[float, int]:
     return time.time() - t0, n_edges
 
 
+def _warm_session(spark) -> None:
+    """Run one tiny job through each lazily initialized subsystem —
+    codegen and shuffle, the driver's Arrow collect, the Python worker
+    pool (numpy/pandas imported once per worker), the parquet writer and
+    reader — so the timed sf-suite queries measure the query, not the
+    session's first use. ~10-15 s on a 4-core VM; nothing is cached."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    df = spark.range(1024).select("id", (F.col("id") % 7).alias("k"))
+    df.groupBy("k").agg(F.count("*")).collect()
+    df.limit(64).toArrow()
+
+    def _w(batches):
+        import numpy  # noqa: F401  (the Arrow kernels' imports)
+        import pandas  # noqa: F401
+
+        yield from batches
+
+    n = spark.sparkContext.defaultParallelism
+    spark.range(n).repartition(n).mapInArrow(_w, "id long").count()
+    path = tempfile.mkdtemp(prefix="sheep_bench_warm_")
+    try:
+        spark.range(16).write.mode("overwrite").parquet(path)
+        spark.read.parquet(path).count()
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def run_sf_suite(spark) -> dict:
     from pyspark.sql import functions as F
 
@@ -672,6 +703,7 @@ def main() -> None:
     t0 = time.time()
     spark = get_spark("bench", cores=CPUS, shuffle_partitions=max(CPUS, 16))
     spark.sparkContext.setLogLevel("ERROR")
+    _warm_session(spark)  # before the suite's per-query clocks
     sf = run_sf_suite(spark)
     spark.stop()
     result["queries"] = sf["queries"]

@@ -34,20 +34,30 @@ CPUS = int(os.environ.get("SPARK_GRAFT_PIPE_CPUS", "32"))
 KS = [2, 8]
 
 
+def _pretouch_conf() -> dict:
+    """Spark conf that pre-touches a 12 GiB driver heap at JVM launch.
+    A host that backs fresh pages slowly (~20 MB/s/thread measured on a
+    4-core VM) otherwise bleeds page-fault sys-time from cache/shuffle
+    growth into the first timed stages; a long-lived production driver
+    pays this once at startup.
+    -Xms is clamped to the driver heap (SPARK_GRAFT_DRIVER_MEM, default
+    32g here): -Xms above -Xmx aborts the JVM at launch."""
+    driver_mem = os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
+    size = driver_mem.strip().lower()
+    units = {"t": 2**20, "g": 2**10, "m": 1, "k": 2**-10}
+    mib = float(size[:-1]) * units[size[-1]] if size[-1] in units else float(size) / 2**20
+    xms = "12g" if mib >= 12 * 2**10 else driver_mem
+    return {"spark.driver.extraJavaOptions": f"-Xms{xms} -XX:+AlwaysPreTouch"}
+
+
 def main() -> None:
     from bench import synth_edges_raw
+    from perfbench.spans import Tracer, install
     from sheep_spark import evaluate, graph, partitioner, tree
     from sheep_spark.session import get_spark
 
-    # Pre-touch the heap's working set at JVM launch (session.py): this
-    # sandbox backs fresh pages at ~20 MB/s/thread, so cache/shuffle
-    # growth otherwise bleeds page-fault sys-time into the first timed
-    # stages. A long-lived production driver pays this once at startup.
-    # The heap default matches (ADVICE r4: -Xms12g with the 8g driver
-    # default aborted the JVM when launched standalone).
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
-    os.environ.setdefault("SPARK_GRAFT_XMS_PRETOUCH", "12g")
-    spark = get_spark("bench-pipeline", cores=CPUS, shuffle_partitions=2 * CPUS)
+    spark = get_spark("bench-pipeline", cores=CPUS, shuffle_partitions=2 * CPUS,
+                      extra_conf=_pretouch_conf())
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm the Python workers before the clock: each of the local[N]
@@ -181,31 +191,30 @@ def main() -> None:
 
     pv = re.search(r"_(\d+)_(\d+)\.parquet/?$", path)
     guard_v = int(pv.group(2)) if pv else V
+    # The fused funnel+tree: one collect, then the entire rank + sort +
+    # sweep body in one compiled call (falls back to the staged
+    # driver_sequence_arrays + build_tree_arrays with identical results).
+    # The benchmark's span tracer times the collect inside the call:
+    # degree_sequence = the collect, tree_build = the rest of the call
+    # (rank + sort + sweep) + the DF upload. Same core sum as timing
+    # each stage separately.
+    tracer = Tracer("bench-pipeline")
+    install(tracer)
+    tracer.enabled = True
     t0 = time.time()
-    seq_t: dict = {}
-    # r6 latest: the fused funnel+tree (one collect, then the entire
-    # rank + sort + sweep body in one compiled call; falls back to the
-    # staged driver_sequence_arrays + build_tree_arrays with identical
-    # results). Stage attribution: degree_sequence = collect + rank
-    # share of the call, tree_build = kernel share + the DF upload —
-    # the same boundaries as the staged form, and the same core sum.
-    arrs = graph.driver_sequence_tree_arrays(
-        canon, timings=seq_t, ids_fit_int32=guard_v < 2**31
-    )
-    n_vertices = arrs["n_vertices"]
+    arrs = graph.driver_sequence_tree_arrays(canon, ids_fit_int32=guard_v < 2**31)
     funnel_wall = time.time() - t0
-    kernel_s = seq_t.get("kernel_s", 0.0)
-    stages["degree_sequence"] = funnel_wall - kernel_s
-    stages["degree_collect"] = seq_t.get("collect_s", 0.0)
-    stages["degree_rank"] = seq_t.get("rank_s", 0.0)
+    tracer.enabled = False
+    n_vertices = arrs["n_vertices"]
+    collect_s = tracer.counters.get("tree.collect_s", 0.0)
+    kernel_s = funnel_wall - collect_s
+    stages["degree_sequence"] = collect_s
+    stages["degree_collect"] = collect_s
+    stages["degree_rank"] = 0.0  # fused: the rank runs inside tree_build_kernel
     stages["edges_pos"] = 0.0  # fused: pos-space edges fall out of the rank pass
 
     t0 = time.time()
-    arrays = {
-        "parent": arrs["parent"],
-        "pst_weight": arrs["pst_weight"],
-        "pre_weight": arrs["pre_weight"],
-    }
+    arrays = {"parent": arrs["parent"], "pst_weight": arrs["pst_weight"]}
     # count() materializes the upload inside the timed stage; no persist —
     # nothing downstream re-reads the DF (the FFD/vmeta steps consume the
     # driver arrays directly) and the 4M-row cache write costs 0.3-0.7 s
@@ -309,9 +318,8 @@ def parity_main() -> None:
     from sheep_spark import graph, tree
     from sheep_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
-    os.environ.setdefault("SPARK_GRAFT_XMS_PRETOUCH", "12g")
-    spark = get_spark("bench-tree-parity", cores=CPUS, shuffle_partitions=2 * CPUS)
+    spark = get_spark("bench-tree-parity", cores=CPUS, shuffle_partitions=2 * CPUS,
+                      extra_conf=_pretouch_conf())
     spark.sparkContext.setLogLevel("ERROR")
 
     def _warm(batches):

@@ -63,16 +63,14 @@ def _pos_pairs() -> tuple[np.ndarray, np.ndarray]:
 
 
 def _leg(lo: np.ndarray, hi: np.ndarray) -> dict:
-    tm: dict = {}
     t0 = time.perf_counter()
-    kid, par = tree._eliminate(lo, hi, V, timings=tm)
+    kid, par = tree._eliminate(lo, hi, V)
     wall = time.perf_counter() - t0
     parent = np.full(V, -1, dtype=np.int64)
     parent[kid] = par
     return {
         "compiled": _csweep.loaded() is not None,
         "kernel_s": round(wall, 3),
-        "kernel_detail": tm,
         "tree_edges": len(kid),
         "kernel_rate_Medges_per_s": round(len(lo) / wall / 1e6, 2),
         "parent_sha1": hashlib.sha1(parent.tobytes()).hexdigest(),

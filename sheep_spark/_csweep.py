@@ -5,8 +5,8 @@ Three entry points; the first two share one union-find sweep
 
 - ``sheep_sort_sweep`` — the elimination-tree kernel behind
   ``tree._eliminate``: counting-sort the pos-space edges by hi, then
-  sweep the buckets ascending; pre/pst weights fall out of the histogram
-  and scatter passes.
+  sweep the buckets ascending; the pst weight falls out of the scatter
+  pass.
 - ``sheep_seq_tree`` — the fused driver funnel behind
   ``graph.driver_sequence_tree_arrays``: degree histogram, counting rank,
   pos-space transform, then the same counting sort and sweep.
@@ -14,7 +14,8 @@ Three entry points; the first two share one union-find sweep
   ``partitioner.forward_partition``.
 
 Each produces exactly the output of its interpreted counterpart in
-Python, which is the fallback when the library is unavailable. The
+Python, which is the fallback when the library is unavailable. None of
+them times itself or returns per-phase walls. The
 library is compiled with gcc at first use, cached per source hash in the
 temp dir (atomic rename, so concurrent executor workers race safely) and
 loaded via ctypes. A failed compile or load emits one ``RuntimeWarning``
@@ -140,13 +141,6 @@ int64_t sheep_ffd(const int64_t *parent, int64_t n, int64_t *comp,
     return n_bins;
 }
 
-#include <time.h>
-
-static double sheep_now(void) {
-    struct timespec ts; clock_gettime(CLOCK_MONOTONIC, &ts);
-    return ts.tv_sec + ts.tv_nsec * 1e-9;
-}
-
 /* The elimination sweep (jtree.cpp:34-55) over edges counting-sorted
    by hi: bucket x holds the lo ends of the edges whose hi is x, and
    cnt[x] is that bucket's END offset into lo_s. Walking the buckets
@@ -185,26 +179,23 @@ static int64_t sheep_bucket_sweep(const int32_t *lo_s, const int32_t *cnt,
 
 /* Counting-sort the edges by hi (bucket = hi value, O(E + V) — the hi
    of every edge in bucket x is x itself, so only lo is materialized
-   sorted), then run sheep_bucket_sweep. pre_w[v] = #edges with hi == v
-   falls out of the histogram pass and pst_w[v] = #edges with lo == v
-   accumulates during the scatter; either may be NULL, which skips its
-   stores (for callers that discard the weights). Requires ids and
+   sorted), then run sheep_bucket_sweep. pst_w[v] = #edges with lo == v
+   accumulates during the scatter; pst_w may be NULL, which skips its
+   stores (for callers that discard the weight). Requires ids and
    n_edges < 2^31 (int32 internals — the kernel is memory-bound, so
    halving element width halves its traffic; offsets live in cnt's
    int32 slots). uf is initialized to the identity HERE; lo_s is an
    n_edges int32 scratch, cnt an (n_vertices+1) int32 scratch, kid/par
-   int64 outs with min(n_edges, n_vertices) slots, pre_w/pst_w
-   n_vertices int64 outs or NULL, phases a double[2] out (sort wall,
-   sweep wall). Returns the number
-   of (kid, parent) pairs emitted, or -2 if an id falls outside
-   [0, n_vertices) — checked BEFORE each use (the predictable branch
-   is ~free), so bad input never touches memory out of bounds. */
+   int64 outs with min(n_edges, n_vertices) slots, pst_w an
+   n_vertices int64 out or NULL. Returns the number of (kid, parent)
+   pairs emitted, or -2 if an id falls outside [0, n_vertices) —
+   checked BEFORE each use (the predictable branch is ~free), so bad
+   input never touches memory out of bounds. */
 int64_t sheep_sort_sweep(const int64_t *lo, const int64_t *hi,
                          int64_t n_edges, int64_t n_vertices,
                          int32_t *lo_s, int32_t *cnt, int32_t *uf,
                          int64_t *kid_out, int64_t *par_out,
-                         int64_t *pre_w, int64_t *pst_w, double *phases) {
-    double t0 = sheep_now();
+                         int64_t *pst_w) {
     for (int64_t v = 0; v <= n_vertices; v++) cnt[v] = 0;
     for (int64_t i = 0; i < n_edges; i++) {
         if (i + 64 < n_edges) __builtin_prefetch(&cnt[hi[i + 64]], 1, 1);
@@ -214,7 +205,6 @@ int64_t sheep_sort_sweep(const int64_t *lo, const int64_t *hi,
     int64_t run = 0;
     for (int64_t v = 0; v < n_vertices; v++) {
         int32_t c = cnt[v];
-        if (pre_w) pre_w[v] = c;
         if (pst_w) pst_w[v] = 0;
         uf[v] = (int32_t)v;
         cnt[v] = (int32_t)run;
@@ -230,12 +220,8 @@ int64_t sheep_sort_sweep(const int64_t *lo, const int64_t *hi,
             pst_w[l]++;
         }
     }
-    phases[0] = sheep_now() - t0;
-    t0 = sheep_now();
-    int64_t n_out = sheep_bucket_sweep(lo_s, cnt, uf, n_vertices, n_edges,
-                                       kid_out, par_out);
-    phases[1] = sheep_now() - t0;
-    return n_out;
+    return sheep_bucket_sweep(lo_s, cnt, uf, n_vertices, n_edges,
+                              kid_out, par_out);
 }
 
 /* Fused sequence + tree: the whole rank-0 funnel body after the Arrow
@@ -244,14 +230,13 @@ int64_t sheep_sort_sweep(const int64_t *lo, const int64_t *hi,
    counting sort's vid-ascending placement IS the tie-break), pos-space
    edge transform, counting sort by hi, union-find sweep — emitting
    deg_full / pos_full (-1 for isolated vertices), the (kid, parent)
-   tree edges and the pos-indexed pre/pst weights. Exactly equal to
+   tree edges and the pos-indexed pst weight. Exactly equal to
    the numpy rank pass + sheep_sort_sweep (asserted by pytest); ~1.4x
    faster at 35M/4M because the gathers, min/max and both sorts fuse
    into three passes over the edges with int32 temporaries. Same
    envelope as sheep_sort_sweep: ids and n_edges < 2^31; out-of-range
    ids return -2 before any use. *out_n receives the non-isolated
-   vertex count n; pre_w/pst_w use slots [0, n); phases = double[3]
-   (hist+rank, edge passes, sweep). ``elem`` is the input element width
+   vertex count n; pst_w uses slots [0, n). ``elem`` is the input element width
    (4 or 8 bytes): the int32 funnel transfer stays narrow end-to-end —
    no driver-side widening pass, half the read traffic in the two
    edge loops. */
@@ -264,14 +249,13 @@ int64_t sheep_seq_tree(const void *src_v, const void *dst_v, int64_t elem,
                        int32_t *cnt,                   /* [m+1] scratch */
                        int32_t *uf,                    /* [m] scratch */
                        int64_t *kid_out, int64_t *par_out,  /* [min(E,m)] */
-                       int64_t *pre_w, int64_t *pst_w,      /* [m] out */
-                       int64_t *out_n, double *phases) {
+                       int64_t *pst_w,                      /* [m] out */
+                       int64_t *out_n) {
     const int32_t *s32 = (const int32_t *)src_v;
     const int32_t *d32 = (const int32_t *)dst_v;
     const int64_t *s64 = (const int64_t *)src_v;
     const int64_t *d64 = (const int64_t *)dst_v;
     if (elem != 4 && elem != 8) return -2;
-    double t0 = sheep_now();
     for (int64_t v = 0; v < m; v++) deg_full[v] = 0;
 #define SHEEP_SEQ_HIST(SRC, DST)                                  \
     for (int64_t i = 0; i < n_edges; i++) {                       \
@@ -314,9 +298,7 @@ int64_t sheep_seq_tree(const void *src_v, const void *dst_v, int64_t elem,
             pos_full[v] = -1;
         }
     }
-    for (int64_t p = 0; p < n; p++) { pre_w[p] = 0; pst_w[p] = 0; }
-    phases[0] = sheep_now() - t0;
-    t0 = sheep_now();
+    for (int64_t p = 0; p < n; p++) pst_w[p] = 0;
     /* pos-space edges + hi histogram (cnt reused: zero [0, n]) */
     for (int64_t p = 0; p <= n; p++) cnt[p] = 0;
 #define SHEEP_SEQ_XFORM(SRC, DST)                                 \
@@ -333,7 +315,7 @@ int64_t sheep_seq_tree(const void *src_v, const void *dst_v, int64_t elem,
 #undef SHEEP_SEQ_XFORM
     run = 0;
     for (int64_t p = 0; p < n; p++) {
-        int32_t c = cnt[p]; pre_w[p] = c; cnt[p] = (int32_t)run; run += c;
+        int32_t c = cnt[p]; cnt[p] = (int32_t)run; run += c;
     }
     for (int64_t i = 0; i < n_edges; i++) {
         if (i + 64 < n_edges) {
@@ -344,13 +326,8 @@ int64_t sheep_seq_tree(const void *src_v, const void *dst_v, int64_t elem,
         lo_s[cnt[hi_t[i]]++] = l;
         pst_w[l]++;
     }
-    phases[1] = sheep_now() - t0;
-    t0 = sheep_now();
-    int64_t n_out = sheep_bucket_sweep(lo_s, cnt, uf, n, n_edges,
-                                       kid_out, par_out);
-    phases[2] = sheep_now() - t0;
     *out_n = n;
-    return n_out;
+    return sheep_bucket_sweep(lo_s, cnt, uf, n, n_edges, kid_out, par_out);
 }
 """
 
@@ -397,13 +374,12 @@ def loaded():
     """The compiled counting-sort + sweep as a python callable, or None
     when the C library did not load (interpreted fallbacks in use).
 
-    Signature: fn(lo, hi, n_vertices, kid_out, par_out, pre_w, pst_w)
-    -> (n_out, sort_s, sweep_s); lo/hi C-contiguous int64 inputs in ANY
-    order and n_vertices, n_edges < 2^31 (caller's guard); kid_out/
-    par_out int64 with min(n_edges, n_vertices) slots; pre_w/pst_w int64
-    n_vertices slots receiving bincount(hi)/bincount(lo), or None to
-    skip that weight. Raises ValueError if an id falls outside
-    [0, n_vertices). Scratch
+    Signature: fn(lo, hi, n_vertices, kid_out, par_out, pst_w) -> n_out;
+    lo/hi C-contiguous int64 inputs in ANY order and n_vertices,
+    n_edges < 2^31 (caller's guard); kid_out/par_out int64 with
+    min(n_edges, n_vertices) slots; pst_w int64 with n_vertices slots
+    receiving bincount(lo), or None to skip the weight. Raises
+    ValueError if an id falls outside [0, n_vertices). Scratch
     (sorted-lo, counts, union-find) is allocated per call inside the
     wrapper."""
     _load()
@@ -427,7 +403,7 @@ def loaded_seq_tree():
     """The fused sequence+tree kernel as a python callable, or None.
 
     Signature: fn(src, dst, m) -> dict(n, kid, par, deg_full, pos_full,
-    pre_w, pst_w, phases) or None when the kernel declines the input
+    pst_w) or None when the kernel declines the input
     (multigraph degree overflow); raises ValueError on out-of-range
     ids. src/dst are C-contiguous int64 with values in [0, m);
     m, n_edges < 2^31 (caller's guard)."""
@@ -455,12 +431,11 @@ def _load() -> None:
             p64, p64, ctypes.c_int64, ctypes.c_void_p,
         ]
         p32 = ctypes.POINTER(ctypes.c_int32)
-        pdb = ctypes.POINTER(ctypes.c_double)
         raw_ss = lib.sheep_sort_sweep
         raw_ss.restype = ctypes.c_int64
         raw_ss.argtypes = [
             p64, p64, ctypes.c_int64, ctypes.c_int64,
-            p32, p32, p32, p64, p64, p64, p64, pdb,
+            p32, p32, p32, p64, p64, p64,
         ]
         raw_st = lib.sheep_seq_tree
         raw_st.restype = ctypes.c_int64
@@ -468,7 +443,7 @@ def _load() -> None:
             ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int64,
             ctypes.c_int64, ctypes.c_int64,
             p64, p32, p32, p32, p32, p32, p32,
-            p64, p64, p64, p64, p64, pdb,
+            p64, p64, p64, p64,
         ]
     except (OSError, AttributeError) as exc:  # compile, load or symbol failure
         import warnings
@@ -499,11 +474,10 @@ def _load() -> None:
 
     def fn_sort_sweep(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
                       kid_out: np.ndarray, par_out: np.ndarray,
-                      pre_w: np.ndarray | None, pst_w: np.ndarray | None):
+                      pst_w: np.ndarray | None) -> int:
         lo_s = np.empty(len(lo), dtype=np.int32)
         cnt = np.empty(n_vertices + 1, dtype=np.int32)
         uf = np.empty(n_vertices, dtype=np.int32)
-        phases = np.zeros(2, dtype=np.float64)
         n_out = raw_ss(
             lo.ctypes.data_as(p64),
             hi.ctypes.data_as(p64),
@@ -514,16 +488,14 @@ def _load() -> None:
             uf.ctypes.data_as(p32),
             kid_out.ctypes.data_as(p64),
             par_out.ctypes.data_as(p64),
-            None if pre_w is None else pre_w.ctypes.data_as(p64),
             None if pst_w is None else pst_w.ctypes.data_as(p64),
-            phases.ctypes.data_as(pdb),
         )
         if n_out == -2:
             raise ValueError(
                 f"an edge endpoint falls outside [0, {n_vertices}) — "
                 "pos-space input expected"
             )
-        return n_out, float(phases[0]), float(phases[1])
+        return n_out
 
     def fn_seq_tree(src: np.ndarray, dst: np.ndarray, m: int):
         if src.dtype != dst.dtype or src.dtype not in (np.int32, np.int64):
@@ -539,10 +511,8 @@ def _load() -> None:
         cap = min(n_edges, m)
         kid_out = np.empty(cap, dtype=np.int64)
         par_out = np.empty_like(kid_out)
-        pre_w = np.empty(m, dtype=np.int64)
         pst_w = np.empty(m, dtype=np.int64)
         out_n = np.zeros(1, dtype=np.int64)
-        phases = np.zeros(3, dtype=np.float64)
         n_out = raw_st(
             src.ctypes.data,
             dst.ctypes.data,
@@ -558,10 +528,8 @@ def _load() -> None:
             uf.ctypes.data_as(p32),
             kid_out.ctypes.data_as(p64),
             par_out.ctypes.data_as(p64),
-            pre_w.ctypes.data_as(p64),
             pst_w.ctypes.data_as(p64),
             out_n.ctypes.data_as(p64),
-            phases.ctypes.data_as(pdb),
         )
         if n_out == -2:
             raise ValueError(
@@ -576,9 +544,7 @@ def _load() -> None:
             "par": par_out[:n_out],
             "deg_full": deg_full,
             "pos_full": pos_full,
-            "pre_w": pre_w[:n],
             "pst_w": pst_w[:n],
-            "phases": (float(phases[0]), float(phases[1]), float(phases[2])),
         }
 
     _cached_ffd = fn_ffd

@@ -27,7 +27,6 @@ Physical notes
 
 from __future__ import annotations
 
-import os
 import time
 from contextlib import contextmanager
 
@@ -51,11 +50,7 @@ def _superstep_planning(spark):
     partitions vs 0.5 s AQE-off on the scale input; sf0.1 suite: 5
     supersteps 6.3 → 5.6 s interleaved A/B). A real 4N-executor cluster
     pays the same serial barrier — it is exactly what the scaling rule
-    punishes. Opt out with SPARK_GRAFT_SUPERSTEP_AQE=1 when a superstep
-    genuinely needs AQE's runtime skew splitting."""
-    if os.environ.get("SPARK_GRAFT_SUPERSTEP_AQE") == "1":
-        yield
-        return
+    punishes."""
     key = "spark.sql.adaptive.enabled"
     try:
         prev = spark.conf.get(key)

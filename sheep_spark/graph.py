@@ -169,8 +169,7 @@ def vertices_from_edges(edges_sym: DataFrame,
         deg.unpersist()
 
 
-def driver_sequence_arrays(canon: DataFrame, timings: dict | None = None,
-                           dense_vid_limit: int = 500_000_000,
+def driver_sequence_arrays(canon: DataFrame, *, dense_vid_limit: int = 500_000_000,
                            ids_fit_int32: bool = False) -> dict:
     """Fused rank-0 funnel over the canonical half: ONE Arrow collect →
     degrees, sequence pos, and pos-space edges as numpy arrays.
@@ -184,7 +183,7 @@ def driver_sequence_arrays(canon: DataFrame, timings: dict | None = None,
     (lo, hi) = sorted endpoint positions per undirected edge.
 
     This is the same centralization sheep's rank 0 performs for its
-    sequence + tree phases, and shares the driver funnel's envelope:
+    sequence + tree steps, and shares the driver funnel's envelope:
     callers gate on DRIVER_TREE_MAX_EDGES and use the distributed
     ``vertices_from_edges``/``edges_pos`` path beyond it.
 
@@ -199,12 +198,11 @@ def driver_sequence_arrays(canon: DataFrame, timings: dict | None = None,
     back to int64 on arrival, so results are bit-identical (asserted by
     test_fused_driver_funnel_int32_transfer).
     """
-    src, dst = _collect_canon_endpoints(canon, timings, ids_fit_int32)
-    return _sequence_from_endpoints(src, dst, dense_vid_limit, timings)
+    src, dst = _collect_canon_endpoints(canon, ids_fit_int32)
+    return _sequence_from_endpoints(src, dst, dense_vid_limit)
 
 
-def _collect_canon_endpoints(canon: DataFrame, timings: dict | None,
-                             ids_fit_int32: bool):
+def _collect_canon_endpoints(canon: DataFrame, ids_fit_int32: bool):
     """Arrow-collect the canonical half's (src, dst) — native width
     (int32 under the narrow transfer, int64 otherwise) — with the
     wrapped-id rejection (shared by the sequence funnel and the fused
@@ -218,7 +216,7 @@ def _collect_canon_endpoints(canon: DataFrame, timings: dict | None,
         canon = canon.select(
             F.col("src").cast("int").alias("src"), F.col("dst").cast("int").alias("dst")
         )
-    src, dst = collect_native_columns(canon, ("src", "dst"), timings)
+    src, dst = collect_native_columns(canon, ("src", "dst"))
     if ids_fit_int32 and len(src) and (int(src.min()) < 0 or int(dst.min()) < 0):
         # ADVICE r5: under non-ANSI SQL config the JVM-side int cast
         # WRAPS an id >= 2^31 instead of erroring, and every downstream
@@ -235,18 +233,14 @@ def _collect_canon_endpoints(canon: DataFrame, timings: dict | None,
     return src, dst
 
 
-def _sequence_from_endpoints(src, dst, dense_vid_limit: int,
-                             timings: dict | None = None) -> dict:
+def _sequence_from_endpoints(src, dst, dense_vid_limit: int) -> dict:
     """The numpy body of driver_sequence_arrays (post-collect). Widens
     narrow-transfer int32 endpoints to int64 at entry so every returned
     array keeps its documented int64 dtype."""
-    import time
-
     import numpy as np
 
     src = np.asarray(src).astype(np.int64, copy=False)
     dst = np.asarray(dst).astype(np.int64, copy=False)
-    t0 = time.monotonic()
     m = int(max(src.max(), dst.max())) + 1 if len(src) else 0
     if len(src) and src.min() >= 0 and dst.min() >= 0 and m <= dense_vid_limit:
         # dense-id fast path: O(E + max_vid) bincounts, no sort of the
@@ -273,20 +267,17 @@ def _sequence_from_endpoints(src, dst, dense_vid_limit: int,
         ps, pd_ = pos[si], pos[di]
     lo = np.minimum(ps, pd_)
     hi = np.maximum(ps, pd_)
-    if timings is not None:
-        timings["rank_s"] = round(time.monotonic() - t0, 2)
     return {"vid": vid, "degree": degree, "pos": pos, "lo": lo, "hi": hi}
 
 
-def driver_sequence_tree_arrays(canon: DataFrame, timings: dict | None = None,
-                                dense_vid_limit: int = 500_000_000,
+def driver_sequence_tree_arrays(canon: DataFrame, *, dense_vid_limit: int = 500_000_000,
                                 ids_fit_int32: bool = False) -> dict:
     """Fused funnel AND tree: one Arrow collect → degrees, sequence
     pos, and the elimination-tree arrays, with the entire post-collect
     body in ONE compiled call when ids are dense and fit int32
     (_csweep.sheep_seq_tree: degree histogram → counting rank →
     pos-space edges → counting sort by hi → union-find sweep, with the
-    pre/pst weights falling out of its histogram passes). The pos-space
+    pst weight falling out of its scatter pass). The pos-space
     (lo, hi) edge list is never materialized driver-side as numpy
     arrays — the kernel consumes its int32 temporaries internally.
 
@@ -297,23 +288,20 @@ def driver_sequence_tree_arrays(canon: DataFrame, timings: dict | None = None,
     envelope/caps as those two (DRIVER_TREE_MAX_EDGES gating is the
     caller's, as before).
 
-    Returns dict(vid, degree, pos, n_vertices, parent, pst_weight,
-    pre_weight); parent is pos-indexed with -1 roots.
+    Returns dict(vid, degree, pos, n_vertices, parent, pst_weight);
+    parent is pos-indexed with -1 roots.
     """
-    import time
-
     import numpy as np
 
     from . import _csweep
     from .tree import build_tree_arrays
 
-    src, dst = _collect_canon_endpoints(canon, timings, ids_fit_int32)
+    src, dst = _collect_canon_endpoints(canon, ids_fit_int32)
     st_fn = _csweep.loaded_seq_tree()
     if st_fn is not None and len(src) and len(src) < 2**31:
         mn = int(min(src.min(), dst.min()))
         m = int(max(src.max(), dst.max())) + 1
         if mn >= 0 and m <= dense_vid_limit and m < 2**31:
-            t0 = time.monotonic()
             res = st_fn(np.ascontiguousarray(src), np.ascontiguousarray(dst), m)
             if res is not None:
                 vid = np.flatnonzero(res["deg_full"])
@@ -322,22 +310,14 @@ def driver_sequence_tree_arrays(canon: DataFrame, timings: dict | None = None,
                 n = res["n"]
                 parent_full = np.full(n, -1, dtype=np.int64)
                 parent_full[res["kid"]] = res["par"]
-                if timings is not None:
-                    ph = res["phases"]
-                    timings["rank_s"] = round(ph[0], 2)
-                    timings["sort_s"] = round(ph[1], 2)
-                    timings["sweep_s"] = round(ph[2], 2)
-                    # kernel = everything after the rank phase,
-                    # including the driver-side assembly gathers
-                    timings["kernel_s"] = round(time.monotonic() - t0 - ph[0], 2)
                 return {
                     "vid": vid, "degree": degree, "pos": pos,
                     "n_vertices": n, "parent": parent_full,
-                    "pst_weight": res["pst_w"], "pre_weight": res["pre_w"],
+                    "pst_weight": res["pst_w"],
                 }
-    arrs = _sequence_from_endpoints(src, dst, dense_vid_limit, timings)
+    arrs = _sequence_from_endpoints(src, dst, dense_vid_limit)
     n = len(arrs["vid"])
-    arrays = build_tree_arrays(arrs["lo"], arrs["hi"], n, timings=timings)
+    arrays = build_tree_arrays(arrs["lo"], arrs["hi"], n)
     return {
         "vid": arrs["vid"], "degree": arrs["degree"], "pos": arrs["pos"],
         "n_vertices": n, **arrays,

@@ -22,6 +22,14 @@
   degree-ascending sequence this bounds each part's replication set,
   which is exactly what makes the downstream analytics shuffle-light.
 
+- ``down_reassign``: the edges whose owner changes between two
+  partition vectors over one sequence, as a delta (no sink rewrite).
+
+- ``write_partitioned``: the partitioned-edge sink, one directory per
+  part (partition.cpp:588-630). The reference's relabelled-graph sink
+  (partition.cpp:528-586) is not offered: no CLI, query or bench leg
+  asks for it.
+
 Arrays cross the driver↔JVM boundary only through ``tree``'s transfer
 layer: the tree comes in by one ``collect_int64_columns`` and the parts
 vector goes out by one ``upload_columns`` with an explicit schema (below),
@@ -40,7 +48,6 @@ from . import tree
 ASSIGN_SCHEMA = pa.schema([("pos", pa.int64()), ("part", pa.int32())])
 VMETA_SCHEMA = pa.schema([("vid", pa.int64()), ("pos", pa.int64()), ("part", pa.int32())])
 VID_PART_SCHEMA = pa.schema([("vid", pa.int64()), ("part", pa.int32())])
-EDGE_PART_SCHEMA = pa.schema([("src", pa.int64()), ("dst", pa.int64()), ("part", pa.int32())])
 
 
 def forward_partition(
@@ -353,8 +360,9 @@ def down_reassign(
     once against the (usually tiny, broadcastable) changed-vertex set:
     shuffle volume ∝ moved edges + V, never E. At 100 TB this is the
     difference between rewriting every partition directory and
-    rewriting only the touched ones (compose with write_partitioned's
-    partitionBy sink + dynamic partition overwrite).
+    rewriting only the touched ones. Applying the delta to a sink is the
+    caller's step; the engine ships none (``q_down_reassign`` reads the
+    delta itself).
     """
     from .graph import maybe_broadcast
 
@@ -388,200 +396,3 @@ def write_partitioned(edge_parts: DataFrame, path: str) -> None:
     """Partitioned-edge sink: one directory per part
     (writePartitionedGraph, partition.cpp:588-630 → write.partitionBy)."""
     edge_parts.write.mode("overwrite").partitionBy("part").parquet(path)
-
-
-def _hadoop_fs(spark: SparkSession, p: str):
-    """(FileSystem, Path, jvm) for any Hadoop scheme (file://, hdfs://,
-    s3a:// ...)."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(p)
-    return hp.getFileSystem(spark._jsc.hadoopConfiguration()), hp, jvm
-
-
-def _reassign_staging_paths(path: str) -> tuple[str, str]:
-    """Staging dir + manifest file live INSIDE the sink, underscore-
-    prefixed — Hadoop's hidden-file filter makes them invisible to any
-    parquet reader of ``path``."""
-    return f"{path}/_reassign_staging", f"{path}/_reassign_manifest.json"
-
-
-def apply_down_reassign(spark: SparkSession, path: str, moves: DataFrame) -> dict:
-    """Apply a ``down_reassign`` delta to an existing ``write_partitioned``
-    sink, rewriting ONLY the touched part directories (dynamic partition
-    overwrite). This is the end-to-end form of the north_star's
-    bounded-shuffle reassignment: at 100 TB a re-pack touches the few
-    directories whose ownership changed instead of rewriting the table.
-
-    Semantics: for every (src, dst, part_old, part_new) move, the edge
-    leaves ``part=part_old`` and lands in ``part=part_new``; untouched
-    directories are byte-identical afterwards. Returns
-    {"parts_rewritten": n, "moves": m}.
-
-    Crash safety (ADVICE r3 — the r3 form had a data-loss window: it
-    localCheckpoint'ed the new content, executor-local and
-    unrecoverable, then overwrote the very directories its plan read).
-    The rewrite is now STAGED: the complete new content of every
-    touched part is first written durably to ``_reassign_staging``
-    (plus a manifest, written only after the staged parquet commits),
-    and the sink is then overwritten FROM the staged copy — no task
-    ever reads a directory the write is replacing, and executor loss
-    mid-write just re-runs tasks from staged parquet. A crash before
-    the manifest commits leaves the sink untouched; a crash after it
-    (mid-overwrite, mid-cleanup) is repaired by
-    ``recover_down_reassign`` — called automatically here —
-    re-applying the staged state idempotently.
-    """
-    recover_down_reassign(spark, path)  # finish any interrupted apply first
-    moves = moves.persist()
-    staging, manifest = _reassign_staging_paths(path)
-    try:
-        touched = sorted(
-            {r.p for r in moves.select(F.col("part_old").alias("p")).distinct().collect()}
-            | {r.p for r in moves.select(F.col("part_new").alias("p")).distinct().collect()}
-        )
-        if not touched:
-            return {"parts_rewritten": 0, "moves": 0}
-        n_moves = moves.count()
-        # moves may target parts that do not exist in the sink yet (e.g.
-        # growing k): read only the directories that are actually there
-        fs, _, jvm = _hadoop_fs(spark, path)
-        existing = []
-        for p in touched:
-            if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/part={p}")):
-                existing.append(p)
-        if existing:
-            current = spark.read.option("basePath", path).parquet(
-                *[f"{path}/part={p}" for p in existing]
-            )
-        else:
-            current = tree.upload_columns(
-                spark, {"src": [], "dst": [], "part": []}, EDGE_PART_SCHEMA
-            )
-        out_minus = current.join(
-            moves.select("src", "dst", F.col("part_old").alias("part")),
-            ["src", "dst", "part"],
-            "left_anti",
-        )
-        incoming = moves.select("src", "dst", F.col("part_new").alias("part"))
-        updated = out_minus.unionByName(incoming)
-        # stage durably (reads sink, writes ONLY staging), then commit
-        # the manifest that gates recovery
-        updated.write.mode("overwrite").partitionBy("part").parquet(staging)
-        import json as _json
-
-        mfs, mp, _ = _hadoop_fs(spark, manifest)
-        out = mfs.create(mp, True)
-        out.write(_json.dumps({"touched": [int(p) for p in touched]}).encode())
-        out.close()
-        n_parts = _apply_staged_reassign(spark, path)
-        return {"parts_rewritten": n_parts, "moves": int(n_moves)}
-    finally:
-        moves.unpersist()
-
-
-def _apply_staged_reassign(spark: SparkSession, path: str) -> int:
-    """Copy the staged per-part state into the sink (dynamic partition
-    overwrite), drop drained directories, clean up. Idempotent: safe to
-    re-run after any interruption."""
-    import json as _json
-
-    staging, manifest = _reassign_staging_paths(path)
-    mfs, mp, jvm = _hadoop_fs(spark, manifest)
-    stream = mfs.open(mp)
-    raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    stream.close()
-    touched = _json.loads(raw)["touched"]
-    sfs, sp, _ = _hadoop_fs(spark, staging)
-    present = [
-        p for p in touched
-        if sfs.exists(jvm.org.apache.hadoop.fs.Path(f"{staging}/part={p}"))
-    ]
-    if present:
-        staged = spark.read.option("basePath", staging).parquet(
-            *[f"{staging}/part={p}" for p in present]
-        )
-        with _partition_overwrite_dynamic(spark):
-            staged.write.mode("overwrite").partitionBy("part").parquet(path)
-    # dynamic overwrite cannot express "this partition is now empty";
-    # drop fully-drained directories explicitly via the Hadoop FS API
-    # (an Iceberg/Delta deployment would issue a RewriteFiles/delete)
-    for p in touched:
-        if p not in present:
-            hp = jvm.org.apache.hadoop.fs.Path(f"{path}/part={p}")
-            hp.getFileSystem(spark._jsc.hadoopConfiguration()).delete(hp, True)
-    # manifest FIRST (it gates recovery — deleting staging first would
-    # make an interrupted cleanup look like "every touched part drained"),
-    # then the now-unreferenced staging dir
-    mfs.delete(mp, False)
-    sfs.delete(sp, True)
-    return len(touched)
-
-
-def recover_down_reassign(spark: SparkSession, path: str) -> dict | None:
-    """Idempotently finish an interrupted ``apply_down_reassign``.
-
-    The manifest is written only after the staged parquet commits, so:
-    no manifest → nothing was in flight (drop any uncommitted staging
-    debris); manifest present → the staged state is complete, re-apply
-    it. Returns {"parts_rewritten": n, "recovered": True} or None.
-    """
-    staging, manifest = _reassign_staging_paths(path)
-    mfs, mp, _ = _hadoop_fs(spark, manifest)
-    if not mfs.exists(mp):
-        sfs, sp, _ = _hadoop_fs(spark, staging)
-        if sfs.exists(sp):
-            sfs.delete(sp, True)
-        return None
-    return {"parts_rewritten": _apply_staged_reassign(spark, path), "recovered": True}
-
-
-class _partition_overwrite_dynamic:
-    """Scoped spark.sql.sources.partitionOverwriteMode=dynamic (only the
-    partitions present in the written frame are replaced)."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
-
-
-def isomorphic_ids(vmeta: DataFrame) -> DataFrame:
-    """Relabel vids contiguously by (part, pos) stable order —
-    writeIsomorphicGraph (partition.cpp:528-586)."""
-    from .graph import attach_rank
-
-    return attach_rank(vmeta, ["part", "pos"], out="new_vid").select("vid", "new_vid")
-
-
-def write_isomorphic(edges_sym: DataFrame, vmeta: DataFrame, path: str,
-                     fmt: str = "parquet", n_vertices: int | None = None) -> None:
-    """The full isomorphic-graph sink (partition.cpp:528-586): relabel
-    every vid to the dense (part, pos)-stable order so part[X] < part[Y]
-    ⇒ X < Y, then write each undirected edge exactly once with the
-    smaller NEW id first, sorted by (src, dst) — the relabeled graph is
-    directly loadable as a new input whose vid order equals the
-    partition order. fmt: 'parquet' (scale sink) or 'snap' (text
-    interop with the reference's readers)."""
-    from .graph import maybe_broadcast
-
-    ids = maybe_broadcast(isomorphic_ids(vmeta), n_rows=n_vertices)
-    once = edges_sym.where(F.col("src") < F.col("dst"))
-    relabeled = (
-        once.join(ids.withColumnRenamed("vid", "src").withColumnRenamed("new_vid", "na"), "src")
-        .join(ids.withColumnRenamed("vid", "dst").withColumnRenamed("new_vid", "nb"), "dst")
-        .select(F.least("na", "nb").alias("src"), F.greatest("na", "nb").alias("dst"))
-        .orderBy("src", "dst")
-    )
-    if fmt == "parquet":
-        relabeled.write.mode("overwrite").parquet(path)
-    elif fmt == "snap":
-        from .io import write_snap
-
-        write_snap(relabeled.repartition(1).sortWithinPartitions("src", "dst"), path)
-    else:
-        raise ValueError(f"unknown fmt {fmt!r} (want 'parquet' or 'snap')")

@@ -9,6 +9,14 @@ scaled down by environment for the local[N] sandbox:
 - explicit broadcast threshold (vertex-side tables of iterative jobs are
   broadcast when small; hinted explicitly at call sites otherwise),
 - shuffle partitions sized from parallelism, overridable per job.
+
+``get_spark`` builds the session and ships this package to the workers;
+nothing else. It runs no job: the first query pays the JVM's and the
+Python workers' one-time start-up, as in any fresh Spark application.
+Two environment keys are read: ``SPARK_GRAFT_CPUS`` (local[N] cores when
+the caller passes none) and ``SPARK_GRAFT_DRIVER_MEM`` (driver heap,
+default 8g). JVM flags such as a heap pre-touch go through
+``extra_conf``.
 """
 
 from __future__ import annotations
@@ -23,21 +31,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def _mem_mib(size: str) -> float:
-    """JVM memory string ("8g", "512m", "1024k", plain bytes) → MiB."""
-    s = size.strip().lower()
-    units = {"t": 1024 * 1024, "g": 1024, "m": 1, "k": 1 / 1024}
-    if s and s[-1] in units:
-        return float(s[:-1]) * units[s[-1]]
-    return float(s) / (1024 * 1024)
-
-
 def get_spark(
     app_name: str = "sheep_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """local[cores] session with the defaults above; ``extra_conf``
+    entries are set last, so they override any of them."""
     cores = cores or default_parallelism()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
 
@@ -57,82 +58,11 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
-    extra_conf = dict(extra_conf or {})
-    # Opt-in heap pre-touch (SPARK_GRAFT_XMS_PRETOUCH=10g): commit+touch
-    # that much heap at JVM launch. This sandbox backs fresh pages at
-    # ~20 MB/s/thread (measured — a real host faults orders of magnitude
-    # faster), so an untouched heap bleeds page-fault sys-time into the
-    # first stages that grow it; pre-touching moves that one-time cost to
-    # session startup, where a long-lived production driver pays it once.
-    # Clamped to the driver heap (-Xms > -Xmx aborts the JVM at launch)
-    # and MERGED into any caller-supplied extraJavaOptions (ADVICE r4).
-    pretouch = os.environ.get("SPARK_GRAFT_XMS_PRETOUCH")
-    if pretouch:
-        if _mem_mib(pretouch) > _mem_mib(driver_mem):
-            import warnings
-
-            warnings.warn(
-                f"SPARK_GRAFT_XMS_PRETOUCH={pretouch} exceeds driver memory "
-                f"{driver_mem}; clamping -Xms to {driver_mem}",
-                stacklevel=2,
-            )
-            pretouch = driver_mem
-        flags = f"-Xms{pretouch} -XX:+AlwaysPreTouch"
-        caller = extra_conf.pop("spark.driver.extraJavaOptions", "")
-        extra_conf["spark.driver.extraJavaOptions"] = f"{flags} {caller}".strip()
-    for k, v in extra_conf.items():
+    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _ship_package(spark)
-    _warm_session(spark)
     return spark
-
-
-_WARMED: set[str] = set()
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """One-time per-session warmup (r6, guide §1.2/§4.5): run one tiny
-    job through each lazily-initialized subsystem — codegen/classloader,
-    shuffle machinery, the parquet reader+writer, the driver's Arrow
-    collect path, and the Python worker pool (numpy/pandas imported once
-    per worker) — so those fixed costs land at session startup instead
-    of inside the first real query. A long-lived production driver pays
-    these exactly once; a per-query benchmark otherwise charges them all
-    to whichever query runs first. Costs ~10-15 s per NEW session on a
-    4-core VM (groupBy job 4.6-5.4 s, Python worker pool 2.6-3.0 s,
-    parquet write+read ~2.0 s, Arrow collect 0.5 s); no data or results
-    are cached. Opt out with SPARK_GRAFT_NO_WARMUP=1."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1":
-        return
-    app = spark.sparkContext.applicationId
-    if app in _WARMED:
-        return
-    _WARMED.add(app)
-    from pyspark.sql import functions as F
-
-    df = spark.range(1024).select("id", (F.col("id") % 7).alias("k"))
-    df.groupBy("k").agg(F.count("*")).collect()  # codegen + shuffle init
-    df.limit(64).toArrow()  # driver-side Arrow allocator
-
-    def _w(batches):
-        import numpy  # noqa: F401  (the Arrow kernels' imports)
-        import pandas  # noqa: F401
-
-        yield from batches
-
-    n = spark.sparkContext.defaultParallelism
-    spark.range(n).repartition(n).mapInArrow(_w, "id long").count()  # worker pool
-    path = os.path.join(
-        tempfile.gettempdir(), f"sheep_warm_{os.getpid()}_{app.replace(':', '_')}.parquet"
-    )
-    try:
-        spark.range(16).write.mode("overwrite").parquet(path)
-        spark.read.parquet(path).count()  # parquet writer + reader init
-    finally:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
 
 
 def _ship_package(spark: SparkSession) -> None:

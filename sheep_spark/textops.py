@@ -231,21 +231,6 @@ def _minhash_wide(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
     return with_arr.select("doc_id", *cols)
 
 
-def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """(doc_id, seed, minhash): k-permutation MinHash over word shingles;
-    permutation i = lexicographic order of md5(i || ' ' || token).
-
-    Long layout unpivoted from the shuffle-free wide form (_minhash_wide)
-    — the whole signature matrix is computed map-side, no exchange.
-    """
-    wide = _minhash_wide(documents, k)
-    stack_args = ", ".join(f"{i}, m{i}" for i in range(k))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({k}, {stack_args}) AS (seed, minhash)"),
-    ).select("doc_id", F.col("seed").cast("int").alias("seed"), "minhash")
-
-
 def minhash_lsh_pairs(
     documents: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS, threshold: float = 0.5
 ) -> DataFrame:

@@ -32,6 +32,8 @@ equivalent of sheep's MPI_Reduce custom op, expressed as ``mapInArrow``
 stages. Each task remaps its slice to dense local ids
 (_eliminate_arrow), so per-task state is O(vertices in the slice), not
 O(global V) as in sheep's per-rank JNode arrays (jnode.cpp:203-250).
+Merging two partials (merge_trees.cpp) needs no function of its own:
+it is ``build_parent_edges`` over the union of their tree edges.
 
 The forest's trees are exactly the graph's connected components, so
 ``analytics.connected_components`` reuses ``_eliminate`` (below the same
@@ -49,6 +51,9 @@ the analogue of sheep rank 0 broadcasting its flat arrays
 so an empty upload still has types) and comes back through
 ``collect_int64_columns``/``collect_native_columns`` (one Arrow collect
 that raises ValueError on a null).
+
+Nothing here times itself; a caller that wants phase walls times the
+calls (the benchmark's span tracer wraps these functions by name).
 """
 
 from __future__ import annotations
@@ -65,7 +70,6 @@ TREE_SCHEMA = pa.schema([("jnid", pa.int64()), ("parent", pa.int64()),
                          ("pst_weight", pa.int64())])
 
 def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
-               timings: dict | None = None,
                weights_out: dict | None = None) -> tuple[np.ndarray, np.ndarray]:
     """Union-find elimination sweep over pos-space (lo, hi) edges.
 
@@ -78,14 +82,14 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
 
     Two paths, one contract. With the C library loaded, one compiled
     call (_csweep.sheep_sort_sweep) counting-sorts the edges by hi and
-    sweeps them; ``timings`` gets its sort_s/sweep_s phases. Otherwise
-    an interpreted sweep over a stable argsort runs — the reference
-    oracle for the compiled one. Both raise ValueError when an id falls
-    outside [0, n_vertices) or a call has 2^31 or more vertices or
-    edges (the compiled kernel's state is int32). ``weights_out`` (dict)
-    receives ``pre_weight`` = bincount(hi) and ``pst_weight`` =
-    bincount(lo) over n_vertices; without it neither is allocated or
-    computed (CC and the map/reduce merge rounds discard them).
+    sweeps them. Otherwise an interpreted sweep over a stable argsort
+    runs — the reference oracle for the compiled one. Both raise
+    ValueError when an id falls outside [0, n_vertices) or a call has
+    2^31 or more vertices or edges (the compiled kernel's state is
+    int32). ``weights_out`` (dict) receives ``pst_weight`` =
+    bincount(lo) over n_vertices; without it the weight is neither
+    allocated nor computed (CC and the map/reduce merge rounds discard
+    it).
     """
     from . import _csweep
 
@@ -101,17 +105,9 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
         cap = min(len(lo), n_vertices)
         kid_out = np.empty(cap, dtype=np.int64)
         par_out = np.empty_like(kid_out)
-        pre_w = pst_w = None
+        pst_w = None if weights_out is None else np.empty(n_vertices, dtype=np.int64)
+        n_out = ss_fn(lo, hi, n_vertices, kid_out, par_out, pst_w)
         if weights_out is not None:
-            pre_w = np.empty(n_vertices, dtype=np.int64)
-            pst_w = np.empty(n_vertices, dtype=np.int64)
-        n_out, sort_s, sweep_s = ss_fn(lo, hi, n_vertices,
-                                       kid_out, par_out, pre_w, pst_w)
-        if timings is not None:
-            timings["sort_s"] = round(sort_s, 2)
-            timings["sweep_s"] = round(sweep_s, 2)
-        if weights_out is not None:
-            weights_out["pre_weight"] = pre_w
             weights_out["pst_weight"] = pst_w
         return kid_out[:n_out], par_out[:n_out]
 
@@ -122,7 +118,6 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
             "pos-space input expected"
         )
     if weights_out is not None:
-        weights_out["pre_weight"] = np.bincount(hi, minlength=n_vertices).astype(np.int64)
         weights_out["pst_weight"] = np.bincount(lo, minlength=n_vertices).astype(np.int64)
     order = np.argsort(hi, kind="stable")
     lo = lo[order]
@@ -145,15 +140,14 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
     return kid_out[:n_out], par_out[:n_out]
 
 
-def _eliminate_arrow(batches: Iterator[pa.RecordBatch],
-                     n_vertices: int) -> Iterator[pa.RecordBatch]:
+def _eliminate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Per-task kernel wrapper: remap the slice's vertices to dense local
     ids before the sweep, map tree edges back after. The sweep depends
     only on the ORDER of jnids (sort + comparisons), and np.unique's
     sorted relabel is order-preserving, so results are exact — while
     per-task state shrinks from O(global V) to O(vertices present in the
     slice). At 10^9 global vertices a 2M-edge slice costs ~32 MB, not
-    16 GB (``n_vertices`` is kept only for API stability)."""
+    16 GB."""
     los, his = [], []
     for b in batches:
         los.append(b.column(0).to_numpy(zero_copy_only=False))
@@ -173,7 +167,6 @@ def _eliminate_arrow(batches: Iterator[pa.RecordBatch],
 
 def build_parent_edges(
     edges_pos_df: DataFrame,
-    n_vertices: int,
     n_partials: int | None = None,
     fan_in: int = 8,
     n_edges: int | None = None,
@@ -198,16 +191,13 @@ def build_parent_edges(
 
     # every stage runs the same _eliminate kernel on slice-local ids:
     # stage 1 sweeps raw edges, each merge round the union of fan_in forests
-    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _eliminate_arrow(it, n_vertices)
-
     t = edges_pos_df.select("lo", "hi").repartition(n_partials).mapInArrow(
-        kernel, TREE_EDGE_SCHEMA
+        _eliminate_arrow, TREE_EDGE_SCHEMA
     )
     p = n_partials
     while p > 1:
         p = max(1, p // fan_in)
-        t = t.repartition(p).mapInArrow(kernel, TREE_EDGE_SCHEMA)
+        t = t.repartition(p).mapInArrow(_eliminate_arrow, TREE_EDGE_SCHEMA)
     return t
 
 
@@ -228,15 +218,12 @@ def upload_columns(spark, columns: dict, schema: pa.Schema) -> DataFrame:
     return spark.createDataFrame(pa.table(columns, schema=schema))
 
 
-def _collect_columns(df: DataFrame, cols: tuple[str, ...], timings: dict | None,
+def _collect_columns(df: DataFrame, cols: tuple[str, ...],
                      widen: bool) -> tuple[np.ndarray, ...]:
     """Arrow-collect the named columns (toArrow, no pandas copy) as
     C-contiguous numpy arrays, widened to int64 when ``widen``. A null
     in any column raises ValueError naming it: numpy has no integer
     null, so it would otherwise arrive as a bogus id."""
-    import time
-
-    t0 = time.monotonic()
     tbl = df.select(*cols).toArrow()
     for c in cols:
         nulls = tbl.column(c).null_count
@@ -246,45 +233,34 @@ def _collect_columns(df: DataFrame, cols: tuple[str, ...], timings: dict | None,
                 "graph endpoints and ids must be non-null"
             )
     out = tuple(tbl.column(c).to_numpy(zero_copy_only=False) for c in cols)
-    out = tuple(
+    return tuple(
         a.astype(np.int64, copy=False) if widen else np.ascontiguousarray(a) for a in out
     )
-    if timings is not None:
-        timings["collect_s"] = round(time.monotonic() - t0, 2)
-    return out
 
 
-def collect_int64_columns(df: DataFrame, cols: tuple[str, ...],
-                          timings: dict | None = None) -> tuple[np.ndarray, ...]:
+def collect_int64_columns(df: DataFrame, cols: tuple[str, ...]) -> tuple[np.ndarray, ...]:
     """Collect the named columns as int64 numpy arrays: every driver
     read of ids or the tree (tree build, degree-sequence rank, jxn, CC,
     ``partitioner.tree_to_arrays``, fennel, ``io.write_xs1``)."""
-    return _collect_columns(df, cols, timings, widen=True)
+    return _collect_columns(df, cols, widen=True)
 
 
-def collect_native_columns(df: DataFrame, cols: tuple[str, ...],
-                           timings: dict | None = None) -> tuple[np.ndarray, ...]:
+def collect_native_columns(df: DataFrame, cols: tuple[str, ...]) -> tuple[np.ndarray, ...]:
     """Like collect_int64_columns but keeps each column's NATIVE width:
     an int32 transfer (the narrow funnel cast) arrives as int32 numpy —
     no widening pass, half the driver-side footprint. Consumers that
     need int64 widen at their own entry (the fused C kernel reads
     either width directly)."""
-    return _collect_columns(df, cols, timings, widen=False)
+    return _collect_columns(df, cols, widen=False)
 
 
-def build_tree_arrays(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
-                      timings: dict | None = None) -> dict:
+def build_tree_arrays(lo: np.ndarray, hi: np.ndarray, n_vertices: int) -> dict:
     """Driver kernel from pre-collected pos-space arrays → jnid-indexed
-    {parent (-1 roots), pst_weight, pre_weight} numpy arrays. The fused
-    pipeline (graph.driver_sequence_arrays) feeds this directly, then
-    FFD-packs the returned arrays without any DataFrame round-trip."""
-    import time
-
-    t0 = time.monotonic()
+    {parent (-1 roots), pst_weight} numpy arrays. The fused pipeline
+    (graph.driver_sequence_arrays) feeds this directly, then FFD-packs
+    the returned arrays without any DataFrame round-trip."""
     weights: dict = {}
-    kid, par = _eliminate(lo, hi, n_vertices, timings=timings, weights_out=weights)
-    if timings is not None:
-        timings["kernel_s"] = round(time.monotonic() - t0, 2)
+    kid, par = _eliminate(lo, hi, n_vertices, weights_out=weights)
     parent_full = np.full(n_vertices, -1, dtype=np.int64)
     parent_full[kid] = par
     return {"parent": parent_full, **weights}
@@ -302,19 +278,17 @@ def tree_df_from_arrays(spark, arrays: dict) -> DataFrame:
     }, TREE_SCHEMA)
 
 
-def _build_tree_df_driver(edges_pos_df: DataFrame, n_vertices: int,
-                          timings: dict | None = None) -> DataFrame:
+def _build_tree_df_driver(edges_pos_df: DataFrame, n_vertices: int) -> DataFrame:
     """Driver-strategy tree: one collect, one kernel, bincount weights,
     one upload."""
-    lo, hi = collect_int64_columns(edges_pos_df, ("lo", "hi"), timings)
-    arrays = build_tree_arrays(lo, hi, n_vertices, timings)
+    lo, hi = collect_int64_columns(edges_pos_df, ("lo", "hi"))
+    arrays = build_tree_arrays(lo, hi, n_vertices)
     return tree_df_from_arrays(edges_pos_df.sparkSession, arrays)
 
 
 def build_tree(
     edges_pos_df: DataFrame, n_vertices: int, n_partials: int | None = None,
     n_edges: int | None = None, strategy: str = "auto",
-    timings: dict | None = None,
 ) -> DataFrame:
     """``tree(jnid, parent, pst_weight)`` (TREE_SCHEMA) over jnid = 0..V-1.
 
@@ -347,11 +321,9 @@ def build_tree(
         # whole tree ships back as ONE upload — no 2E-row groupBy or
         # V-sized joins JVM-side, and no need to persist the input (it
         # is scanned exactly once).
-        return _build_tree_df_driver(edges_pos_df, n_vertices, timings=timings)
+        return _build_tree_df_driver(edges_pos_df, n_vertices)
     edges_pos_df = edges_pos_df.persist()
-    parents = build_parent_edges(
-        edges_pos_df, n_vertices, n_partials, n_edges=n_edges
-    )
+    parents = build_parent_edges(edges_pos_df, n_partials, n_edges=n_edges)
     parents = parents.withColumnRenamed("lo", "jnid").withColumnRenamed("hi", "parent")
     pst = edges_pos_df.groupBy(F.col("lo").alias("jnid")).agg(F.count("*").alias("pst_weight"))
     base = spark.range(n_vertices).select(F.col("id").alias("jnid"))
@@ -399,14 +371,6 @@ def serial_tree_oracle(edges: list[tuple[int, int]], pos: dict[int, int]) -> tup
             else:  # POSTORDER
                 pst[x] += 1
     return parent, pst
-
-
-def merge_parent_edges(tree_a: DataFrame, tree_b: DataFrame, n_vertices: int) -> DataFrame:
-    """Public pairwise tree merge (merge_trees.cpp:37-100 / JNodeTable::
-    merge, jnode.cpp:174-201): union the two partials' tree edges and
-    re-run the elimination kernel. Associative by construction."""
-    both = tree_a.select("lo", "hi").unionAll(tree_b.select("lo", "hi"))
-    return build_parent_edges(both, n_vertices, n_partials=1)
 
 
 def save_tree(tree_df: DataFrame, path: str) -> None:

@@ -71,48 +71,6 @@ def test_naive_partition_ranges(spark):
         assert r.part == (r.pos * k) // n
 
 
-def test_isomorphic_ids_dense(spark):
-    edges = random_graph(50, 100, seed=5)
-    sym, verts, vmeta = build_all(spark, edges, 3)
-    iso = partitioner.isomorphic_ids(vmeta).collect()
-    new_ids = sorted(r.new_vid for r in iso)
-    assert new_ids == list(range(len(iso)))
-
-
-def test_write_isomorphic_matches_python_port(spark, tmp_path):
-    """writeIsomorphicGraph parity (partition.cpp:528-586): relabel by
-    stable (part, pos) order, each undirected edge once, new-lo first."""
-    from sheep_spark import graph, partitioner
-    from tests.conftest import degree_pos, edges_df, random_graph
-
-    edges = random_graph(40, 80, seed=17)
-    sym = edges_df(spark, edges)
-    verts = graph.vertices_from_edges(sym)
-    assign = partitioner.naive_partition(verts, 3)
-    vmeta = partitioner.vertex_meta(verts, assign).persist()
-
-    path = str(tmp_path / "iso")
-    partitioner.write_isomorphic(sym, vmeta, path, fmt="parquet")
-    got = sorted((r.src, r.dst) for r in spark.read.parquet(path).collect())
-
-    # python port: stable sort vids by (part, pos) → new id = index
-    pos = degree_pos(edges)
-    meta = {r.vid: r.part for r in vmeta.collect()}
-    order = sorted(pos, key=lambda v: (meta[v], pos[v]))
-    new_id = {v: i for i, v in enumerate(order)}
-    want = sorted(
-        (min(new_id[a], new_id[b]), max(new_id[a], new_id[b])) for a, b in edges
-    )
-    assert got == want
-
-    # text interop sink produces the same edges
-    partitioner.write_isomorphic(sym, vmeta, str(tmp_path / "iso_snap"), fmt="snap")
-    from sheep_spark import io as sio
-
-    snap = sorted((r.src, r.dst) for r in sio.read_snap(spark, str(tmp_path / "iso_snap")).collect())
-    assert snap == want
-
-
 def test_down_reassign_equals_bruteforce_diff(spark):
     """Bounded-shuffle reassignment must emit exactly the edges whose
     down-assignment differs between the old and new partition vectors."""
@@ -135,123 +93,6 @@ def test_down_reassign_equals_bruteforce_diff(spark):
     }
     assert moves == expected
     assert len(moves) > 0  # the k-change really moved something
-
-
-def test_apply_down_reassign_rewrites_only_touched_dirs(spark, tmp_path):
-    """End-to-end bounded reassignment: applying the delta to a
-    partitionBy sink must (a) produce exactly the new full assignment,
-    (b) drop fully-drained part directories, (c) leave untouched part
-    directories byte-identical."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tests.conftest import edges_df, random_graph
-
-    from sheep_spark import graph, partitioner
-
-    edges = random_graph(100, 250, seed=19)
-    sym = edges_df(spark, edges)
-    verts = graph.vertices_from_edges(sym)
-    vm_old = partitioner.vertex_meta(verts, partitioner.naive_partition(verts, 5))
-    path = str(tmp_path / "parts")
-    partitioner.write_partitioned(partitioner.down_assign(sym, vm_old), path)
-
-    # scenario A: small perturbation — move the 8 lowest-pos vertices to
-    # part 1; only their old parts and part 1 are touched
-    assign_b = vm_old.select(
-        "vid", F.when(F.col("pos") < 8, F.lit(1)).otherwise(F.col("part")).cast("int").alias("part")
-    )
-    vm_b = partitioner.vertex_meta(verts, assign_b)
-
-    def dir_sig(p):
-        d = f"{path}/part={p}"
-        if not os.path.isdir(d):
-            return None
-        return sorted((f, os.path.getsize(f"{d}/{f}")) for f in os.listdir(d) if not f.startswith("."))
-
-    untouched_before = {p: dir_sig(p) for p in range(5)}
-    moves = partitioner.down_reassign(sym, vm_old, vm_b)
-    touched = {r.part_old for r in moves.select("part_old").distinct().collect()} | {
-        r.part_new for r in moves.select("part_new").distinct().collect()
-    }
-    stats = partitioner.apply_down_reassign(spark, path, moves)
-    assert stats["parts_rewritten"] == len(touched) < 5
-    got = {(r.src, r.dst, r.part) for r in spark.read.parquet(path).collect()}
-    want = {(r.src, r.dst, r.part) for r in partitioner.down_assign(sym, vm_b).collect()}
-    assert got == want
-    for p in range(5):
-        if p not in touched:
-            assert dir_sig(p) == untouched_before[p], p
-
-    # scenario B: shrink k 5 -> 3 — parts 3 and 4 drain entirely and
-    # their directories must disappear
-    vm_new = partitioner.vertex_meta(verts, partitioner.naive_partition(verts, 3))
-    moves2 = partitioner.down_reassign(sym, vm_b, vm_new)
-    partitioner.apply_down_reassign(spark, path, moves2)
-    got2 = {(r.src, r.dst, r.part) for r in spark.read.parquet(path).collect()}
-    want2 = {(r.src, r.dst, r.part) for r in partitioner.down_assign(sym, vm_new).collect()}
-    assert got2 == want2
-    assert dir_sig(3) is None and dir_sig(4) is None
-
-
-def test_apply_down_reassign_crash_recovery(spark, tmp_path):
-    """ADVICE r3: the rewrite is staged — a crash after the staging
-    commit (mid-overwrite) is repaired idempotently by
-    recover_down_reassign; an uncommitted staging dir (no manifest) is
-    dropped without touching the sink."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tests.conftest import edges_df, random_graph
-
-    from sheep_spark import graph, partitioner
-
-    sym = edges_df(spark, random_graph(80, 200, seed=23))
-    verts = graph.vertices_from_edges(sym)
-    vm_old = partitioner.vertex_meta(verts, partitioner.naive_partition(verts, 4))
-    path = str(tmp_path / "parts")
-    partitioner.write_partitioned(partitioner.down_assign(sym, vm_old), path)
-
-    assign_new = vm_old.select(
-        "vid", F.when(F.col("pos") < 10, F.lit(2)).otherwise(F.col("part")).cast("int").alias("part")
-    )
-    vm_new = partitioner.vertex_meta(verts, assign_new)
-    moves = partitioner.down_reassign(sym, vm_old, vm_new).persist()
-    touched = sorted(
-        {r.part_old for r in moves.select("part_old").distinct().collect()}
-        | {r.part_new for r in moves.select("part_new").distinct().collect()}
-    )
-    assert touched
-
-    # --- simulate the crash window: staging + manifest committed, sink
-    # not yet overwritten (exactly the state after apply's staging step)
-    staging, manifest = partitioner._reassign_staging_paths(path)
-    new_full = partitioner.down_assign(sym, vm_new)
-    new_touched = new_full.where(F.col("part").isin([int(p) for p in touched]))
-    new_touched.write.mode("overwrite").partitionBy("part").parquet(staging)
-    with open(manifest, "w") as f:
-        json.dump({"touched": [int(p) for p in touched]}, f)
-
-    got = partitioner.recover_down_reassign(spark, path)
-    assert got and got["recovered"] and got["parts_rewritten"] == len(touched)
-    have = {(r.src, r.dst, r.part) for r in spark.read.parquet(path).collect()}
-    want = {(r.src, r.dst, r.part) for r in new_full.collect()}
-    assert have == want
-    assert not os.path.exists(staging) and not os.path.exists(manifest)
-    # idempotent: nothing in flight now
-    assert partitioner.recover_down_reassign(spark, path) is None
-
-    # --- uncommitted staging (no manifest) must be dropped, sink intact
-    os.makedirs(f"{staging}/part=0", exist_ok=True)
-    before = {(r.src, r.dst, r.part) for r in spark.read.parquet(path).collect()}
-    assert partitioner.recover_down_reassign(spark, path) is None
-    assert not os.path.exists(staging)
-    after = {(r.src, r.dst, r.part) for r in spark.read.parquet(path).collect()}
-    assert after == before
-    moves.unpersist()
 
 
 def test_cffd_matches_interpreted_ffd():

@@ -93,27 +93,6 @@ def test_upload_schema_pinned(spark, site, empty):
     assert (df.count() == 0) == empty
 
 
-def test_reassign_empty_frame_schema(spark, tmp_path, monkeypatch):
-    """apply_down_reassign uploads an empty (src, dst, part) frame when no
-    touched part exists in the sink yet (growing k)."""
-    sink = str(tmp_path / "parts")
-    partitioner.write_partitioned(
-        spark.createDataFrame([(1, 2, 0)], "src long, dst long, part int"), sink)
-    uploads = []
-    real = tree.upload_columns
-
-    def spy(*args):
-        uploads.append(real(*args))
-        return uploads[-1]
-
-    monkeypatch.setattr(tree, "upload_columns", spy)
-    moves = spark.createDataFrame(
-        [(3, 4, 5, 6)], "src long, dst long, part_old int, part_new int")
-    partitioner.apply_down_reassign(spark, sink, moves)
-    assert [df.schema for df in uploads] == [_struct(("src", L), ("dst", L), ("part", I))]
-    assert uploads[0].count() == 0
-
-
 def test_empty_graph_partition_chain(spark):
     """An empty edge table runs build_tree → sheep_partition → vertex_meta
     → evaluate → down_assign to typed empty frames and zero metrics."""

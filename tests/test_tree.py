@@ -194,7 +194,7 @@ def test_sort_sweep_matches_interpreted_and_emits_bincounts():
     emit the exact (kid -> parent) mapping of the interpreted sweep
     (equal-hi order differs — counting sort keeps input order, the
     interpreted path a stable argsort — but same-hi edges commute), and
-    both paths' pre_weight/pst_weight must equal the numpy bincounts.
+    both paths' pst_weight must equal the numpy bincount of lo.
     Covers multigraphs with duplicate edges, a disconnected graph, the
     empty input, and the shared rejection envelope."""
     if _csweep.loaded() is None:
@@ -213,14 +213,13 @@ def test_sort_sweep_matches_interpreted_and_emits_bincounts():
         ki, pi = _interpreted(tree._eliminate, lo, hi, n, weights_out=wi)
         assert dict(zip(k.tolist(), p.tolist())) == dict(zip(ki.tolist(), pi.tolist()))
         for weights in (w, wi):
-            assert np.array_equal(weights["pre_weight"], np.bincount(hi, minlength=n))
             assert np.array_equal(weights["pst_weight"], np.bincount(lo, minlength=n))
 
     # empty input
     w = {}
     k, p = tree._eliminate(np.array([], np.int64), np.array([], np.int64), 7,
                            weights_out=w)
-    assert len(k) == 0 and np.array_equal(w["pre_weight"], np.zeros(7, np.int64))
+    assert len(k) == 0 and np.array_equal(w["pst_weight"], np.zeros(7, np.int64))
 
     # one envelope on both paths: out-of-range ids and calls of 2^31 or
     # more vertices raise ValueError (the size check fires before any
@@ -237,8 +236,8 @@ def test_sort_sweep_matches_interpreted_and_emits_bincounts():
 
 @pytest.mark.parametrize("run", [_compiled, _interpreted], ids=["compiled", "interpreted"])
 def test_weightless_sweep_equals_weighted(run):
-    """Without ``weights_out`` the sweep skips the pre/pst weights (the C
-    kernel gets NULL weight pointers) and must return exactly the
+    """Without ``weights_out`` the sweep skips the pst weight (the C
+    kernel gets a NULL weight pointer) and must return exactly the
     (kid, parent) arrays of a weighted call, on both paths."""
     rng = np.random.default_rng(47)
     for n, m in [(1, 0), (5, 2), (80, 500), (2000, 20000)]:

@@ -54,24 +54,6 @@ def test_tree_save_load_and_repartition(spark, tmp_path):
         assert assign.count() == n
 
 
-def test_merge_parent_edges_associative(spark):
-    edges = random_graph(90, 180, seed=8)
-    pos = degree_pos(edges)
-    n = len(pos)
-    half = len(edges) // 2
-    sym_a = edges_df(spark, edges[:half])
-    sym_b = edges_df(spark, edges[half:])
-    verts_all = spark.createDataFrame(list(pos.items()), "vid long, pos long")
-    ep_a = graph.edges_pos(sym_a, verts_all.withColumn("degree", verts_all.pos))
-    ep_b = graph.edges_pos(sym_b, verts_all.withColumn("degree", verts_all.pos))
-    ta = tree.build_parent_edges(ep_a, n, n_partials=2)
-    tb = tree.build_parent_edges(ep_b, n, n_partials=2)
-    merged = {(r.lo, r.hi) for r in tree.merge_parent_edges(ta, tb, n).collect()}
-    parent_o, _ = tree.serial_tree_oracle(edges, pos)
-    want = {(j, p) for j, p in enumerate(parent_o) if p is not None}
-    assert merged == want
-
-
 def test_fennel_baseline(spark):
     from tests.conftest import SF_DIR
 
