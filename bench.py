@@ -134,8 +134,6 @@ def _warm_session(spark) -> None:
 
 
 def run_sf_suite(spark) -> dict:
-    from pyspark.sql import functions as F
-
     from sheep_spark import analytics, ann, evaluate, graph, partitioner, textops, tree
 
     q: dict[str, float] = {}

@@ -6,7 +6,6 @@ r6 mint_vertex_ids change (driver rank under a cap) altered.
     python capture_extract_plans.py <repo_root> <out_file>
 """
 import io
-import os
 import sys
 from contextlib import redirect_stdout
 

@@ -63,24 +63,22 @@ def _superstep_planning(spark):
         spark.conf.set(key, prev)
 
 
-def _prepare_edges(edges_sym: DataFrame, n_partitions: int | None = None,
+def _prepare_edges(edges_sym: DataFrame,
                    src_partition: bool = False) -> tuple[DataFrame, bool]:
     """(edges, owned): ``owned`` is True when WE persisted the frame and
-    must unpersist it. A caller-persisted input is reused AS-IS (r6,
-    guide §2.4/§5): the old unconditional ``repartition(n, "src")`` +
-    ``persist`` re-shuffled and double-cached an edge table the caller
-    already cached — pure overhead when the per-superstep join
-    broadcasts the O(V) state side, and the caller owns the layout
-    decision when it persisted the table itself. ``src_partition=True``
-    restores the old behavior for the regime where the state side is
-    too big to broadcast: there every superstep joins edges⋈state by
-    key, and a src-hash-partitioned cache lets each superstep reuse one
-    exchange instead of re-shuffling the E-sized table."""
-    spark = edges_sym.sparkSession
+    must unpersist it. A caller-persisted input is reused as-is: when
+    the per-superstep join broadcasts the O(V) state side the edge
+    table's layout does not matter, and the caller owns the layout
+    decision when it persisted the table itself. Otherwise, and always
+    under ``src_partition=True`` (the state side is too big to
+    broadcast, so every superstep joins edges⋈state by key), the table
+    is hash-partitioned on src into ``spark.sql.shuffle.partitions``
+    parts and cached, so each superstep reuses one exchange instead of
+    re-shuffling the E-sized table."""
     sl = edges_sym.storageLevel
     if (sl.useMemory or sl.useDisk) and not src_partition:
         return edges_sym, False
-    n = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = int(edges_sym.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return edges_sym.repartition(n, "src").persist(), True
 
 

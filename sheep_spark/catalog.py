@@ -22,14 +22,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 def _is_path(ref: str) -> bool:
     return "/" in ref or os.path.exists(ref)
 

@@ -26,7 +26,6 @@ join on vid (both sides hash-partitioned once).
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd

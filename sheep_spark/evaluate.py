@@ -22,39 +22,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# multiplicative hashes for the ECV(hash) owner rule:
-# cormen (partition.cpp:423-427): k * floor((sqrt(5)-1)/2 * 2^32) mod 2^32
-# knuth  (partition.cpp:414-421): k * 2654435761 mod 2^32
+# ECV(hash) owner rule: the endpoint with the smaller cormen hash
+# (partition.cpp:423-427), k * floor((sqrt(5)-1)/2 * 2^32) mod 2^32
 _CORMEN_S = 2654435769
-_KNUTH_S = 2654435761
-_HASH_CONSTS = {"cormen": _CORMEN_S, "knuth": _KNUTH_S}
 
 
-def _mult_hash(col, hash_fn: str):
-    return F.pmod(col * F.lit(_HASH_CONSTS[hash_fn]), F.lit(2**32))
+def _cormen_hash(col):
+    return F.pmod(col * F.lit(_CORMEN_S), F.lit(2**32))
 
 
-def joined_edges(edges_sym: DataFrame, vmeta: DataFrame, n_vertices: int | None = None,
-                 once: DataFrame | None = None) -> DataFrame:
-    """Symmetrized edges annotated with (pos, part) of both endpoints.
-    The broadcast hint is size-guarded (graph.maybe_broadcast); pass
-    ``n_vertices`` to skip the guard's count job in hot paths.
+def joined_edges(edges: DataFrame, vmeta: DataFrame, n_vertices: int | None = None) -> DataFrame:
+    """Directed edge rows annotated with (pos, part) of both endpoints.
 
-    ``once`` (r6, guide §2.3): callers holding the CANONICAL half (each
-    undirected edge exactly once, src < dst) pass it here; the join then
-    runs over E/2 rows — one scan of the canonical source and TWO
-    broadcast probes per undirected edge instead of four — and both
-    directed perspectives are re-created afterwards by exploding a
-    2-struct array per row. The exploded rows are exactly the doubled
-    view's rows, so every downstream aggregation is unchanged."""
+    ``edges`` is the doubled table or its canonical half (src < dst):
+    the join runs over its ``src < dst`` rows only — E/2 rows, two
+    broadcast probes per undirected edge — and both directed
+    perspectives are re-created afterwards by exploding a 2-struct
+    array per row, so the result holds exactly the doubled view's rows
+    either way. The broadcast hint is size-guarded
+    (graph.maybe_broadcast); pass ``n_vertices`` to skip the guard's
+    count job in hot paths."""
     from .graph import maybe_broadcast
 
     v = maybe_broadcast(vmeta, n_rows=n_vertices)
     a = v.select(F.col("vid").alias("src"), F.col("pos").alias("pos_a"), F.col("part").alias("part_a"))
     b = v.select(F.col("vid").alias("dst"), F.col("pos").alias("pos_b"), F.col("part").alias("part_b"))
-    if once is None:
-        return edges_sym.join(a, "src").join(b, "dst")
-    j = once.join(a, "src").join(b, "dst")
+    j = edges.where(F.col("src") < F.col("dst")).join(a, "src").join(b, "dst")
     both = F.array(
         F.struct(
             F.col("src"), F.col("dst"),
@@ -78,18 +71,17 @@ ALL_METRICS = (
 )
 
 
-def evaluate(edges_sym: DataFrame, vmeta: DataFrame, hash_fn: str = "cormen",
-             num_parts: int | None = None, metrics=None,
-             once: DataFrame | None = None) -> dict:
-    """Partition-quality metric dict. Two paths:
+def evaluate(edges: DataFrame, vmeta: DataFrame, metrics=None) -> dict:
+    """Partition-quality metric dict over ``edges`` — the doubled table
+    or its canonical half (src < dst), see ``joined_edges``.
 
-    ≤62 parts (every real sheep config): ONE job over the edge-join, a
+    The number of parts in ``vmeta`` picks one of two plans. Up to 62
+    parts (every real sheep config): ONE job over the edge-join, a
     per-vertex bitmask aggregation carrying the scalar counts and the
     per-part ownership counts as extra aggregates. It does NOT cache
     the join: with the vertex side broadcast the join is a pure
     map-side hash probe, cheaper at scale than materializing a
-    9-column E-sized cache (measured at 35M edges:
-    the r2 cached 3-job form cost 222 s cold; see BASELINE.md).
+    9-column E-sized cache (see BASELINE.md).
 
     ``metrics`` selects a subset of ALL_METRICS (default: all). The
     headline quality gate only needs ``("edges_cut", "ecv_down",
@@ -97,10 +89,11 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, hash_fn: str = "cormen",
     work than the full suite). ``n_edges`` (and ``ecv_down_per_edge``
     when ecv_down is requested) are always included.
 
-    >62 parts: the cached join feeds a metric-tagged union + two-stage
-    distinct (the hub-skew-safe general form) and one explode scan for
-    the edge balances. vertex_balance comes from the O(V) part
-    histogram on both paths.
+    Above 62 parts a part no longer fits a bit of a long: the cached
+    join feeds a metric-tagged union + two-stage distinct (the
+    hub-skew-safe general form) and one explode scan for the edge
+    balances. vertex_balance comes from the O(V) part histogram on both
+    plans.
     """
     requested = tuple(metrics) if metrics is not None else ALL_METRICS
     unknown = set(requested) - set(ALL_METRICS)
@@ -109,7 +102,7 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, hash_fn: str = "cormen",
     down_owner = F.when(F.col("pos_a") < F.col("pos_b"), F.col("part_a")).otherwise(F.col("part_b"))
     up_owner = F.when(F.col("pos_a") > F.col("pos_b"), F.col("part_a")).otherwise(F.col("part_b"))
     hash_owner = F.when(
-        _mult_hash(F.col("src"), hash_fn) < _mult_hash(F.col("dst"), hash_fn),
+        _cormen_hash(F.col("src")) < _cormen_hash(F.col("dst")),
         F.col("part_a"),
     ).otherwise(F.col("part_b"))
     owners = {"down": down_owner, "up": up_owner, "hash": hash_owner}
@@ -120,21 +113,19 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, hash_fn: str = "cormen",
     # broadcast guard's row count, AND vertex_balance.
     part_rows = vmeta.groupBy("part").agg(F.count("*").alias("c")).collect()
     n_vertices = sum(int(r["c"]) for r in part_rows)
-    if num_parts is None:
-        num_parts = max((int(r["part"]) for r in part_rows), default=-1) + 1
+    num_parts = max((int(r["part"]) for r in part_rows), default=-1) + 1
 
-    j = joined_edges(edges_sym, vmeta, n_vertices=n_vertices, once=once)
+    j = joined_edges(edges, vmeta, n_vertices=n_vertices)
 
     out: dict = {}
     ecv: dict = {}
     if num_parts <= 62:
-        # ONE pass over the edge-join (r6 — the r5 form ran a SECOND
-        # E-sized explode scan for the balances; guide §2.4): per
-        # (src, part), bit_or each requested ownership rule's part into
-        # a long mask (integer shiftleft — no floating point), popcount
-        # at the end; the scalar counts AND the per-rule ownership
-        # counts ride along as plain sums. Map-side partials absorb hub
-        # skew (the group value is a few longs regardless of degree).
+        # ONE pass over the edge-join: per (src, part), bit_or each
+        # requested ownership rule's part into a long mask (integer
+        # shiftleft — no floating point), popcount at the end; the
+        # scalar counts AND the per-rule ownership counts ride along as
+        # plain sums. Map-side partials absorb hub skew (the group
+        # value is a few longs regardless of degree).
         # The per-vertex rows then re-group by part (V→K rows, a tiny
         # second exchange inside the same job) and K rows are collected.
         #
@@ -143,8 +134,8 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, hash_fn: str = "cormen",
         # because ownership picks the src endpoint exactly when the
         # pos comparison favors it; and exactly one directed row of
         # each undirected edge satisfies the strict hash-winner
-        # predicate below (ties broken toward the larger vid, exactly
-        # the rule the old canonical-row explode applied).
+        # predicate below (ties broken toward the larger vid, the
+        # rule _balances applies to the src < dst row).
         mask_cols = {
             "vcom_a": F.expr("shiftleft(CAST(1 AS BIGINT), part_a)"),
             "vcom_b": F.expr("shiftleft(CAST(1 AS BIGINT), part_b)"),
@@ -175,8 +166,8 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, hash_fn: str = "cormen",
             sel.append((F.col("pos_a") > F.col("pos_b")).cast("long").alias("own_up"))
             aggs.append(F.sum("own_up").alias("n_up"))
         if "hash_balance" in edge_bal:
-            h_src = _mult_hash(F.col("src"), hash_fn)
-            h_dst = _mult_hash(F.col("dst"), hash_fn)
+            h_src = _cormen_hash(F.col("src"))
+            h_dst = _cormen_hash(F.col("dst"))
             sel.append(
                 ((h_src < h_dst) | ((h_src == h_dst) & (F.col("src") > F.col("dst"))))
                 .cast("long").alias("own_hash")
@@ -279,8 +270,8 @@ def _balances(j: DataFrame, owners: dict, wanted: list) -> dict:
     return {m: got.get(m, 0) for m in wanted}
 
 
-def evaluate_oracle(edges: list[tuple[int, int]], pos: dict[int, int], part: dict[int, int],
-                    hash_fn: str = "cormen") -> dict:
+def evaluate_oracle(edges: list[tuple[int, int]], pos: dict[int, int],
+                    part: dict[int, int]) -> dict:
     """Pure-python port of the evaluator semantics (partition.cpp:428-521)
     for tests: exact, per the reference's nested-loop definition."""
     adj: dict[int, set[int]] = {}
@@ -291,7 +282,7 @@ def evaluate_oracle(edges: list[tuple[int, int]], pos: dict[int, int], part: dic
         adj.setdefault(b, set()).add(a)
 
     def cormen(k: int) -> int:
-        return (k * _HASH_CONSTS[hash_fn]) % 2**32
+        return (k * _CORMEN_S) % 2**32
 
     edges_cut = vcom = ecv_down = ecv_up = ecv_hash = 0
     down_bal: dict[int, int] = {}

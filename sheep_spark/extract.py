@@ -101,21 +101,20 @@ def href_edges(pages: DataFrame) -> DataFrame:
     return pages.select("url", "html").mapInPandas(fn, EDGES_RAW_SCHEMA)
 
 
-def mint_vertex_ids(edges_raw: DataFrame,
-                    driver_rank_max: int = 30_000_000) -> DataFrame:
+def mint_vertex_ids(edges_raw: DataFrame) -> DataFrame:
     """url → dense vid by url sort order (deterministic). At 10^12-doc
     scale swap for xxhash64(url) sparse ids (collision odds ~V²/2⁶⁴) to
     skip the global sort; dense ids keep the tree kernels array-indexed.
 
-    Below ``driver_rank_max`` distinct urls the rank runs on the driver
-    (r6, same funnel rule as vertices_from_edges): one collect + python
-    sort replaces attach_rank's range-repartition, per-partition count
-    collect, window rank and eager checkpoint (~4 jobs). vids are
+    Up to graph.DRIVER_RANK_MAX distinct urls the rank runs on the
+    driver (the funnel rule of vertices_from_edges): one collect +
+    python sort replaces attach_rank's range-repartition, per-partition
+    count collect, window rank and eager checkpoint (~4 jobs). vids are
     IDENTICAL: python str comparison is code-point order, which equals
     Spark's byte-wise UTF-8 string order (UTF-8 is order-preserving)."""
     from pyspark.sql import functions as F
 
-    from .graph import attach_rank
+    from . import graph
 
     urls = (
         edges_raw.select(F.col("src_url").alias("url"))
@@ -123,8 +122,8 @@ def mint_vertex_ids(edges_raw: DataFrame,
         .distinct()
     )
     n = urls.count()
-    if n > driver_rank_max:
-        return attach_rank(urls, ["url"], out="vid").select("url", "vid")
+    if n > graph.DRIVER_RANK_MAX:
+        return graph.attach_rank(urls, ["url"], out="vid").select("url", "vid")
     import numpy as np
     import pyarrow as pa
 

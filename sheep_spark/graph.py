@@ -38,12 +38,20 @@ V_MOD = 4999
 # Above this row count a "small side" stops being broadcastable (~100s of
 # MB serialized) and the join must fall back to shuffle/sort-merge so both
 # sides co-partition on the key. Every vertex-table broadcast in the
-# engine routes through maybe_broadcast with this default.
+# engine routes through maybe_broadcast, which reads this at call time.
 BROADCAST_ROW_LIMIT = 10_000_000
 
+# At most this many vertices (or distinct urls, extract.mint_vertex_ids)
+# are ranked on the driver; above it attach_rank ranks them distributed.
+DRIVER_RANK_MAX = 30_000_000
 
-def maybe_broadcast(df: DataFrame, n_rows: int | None = None,
-                    limit: int = BROADCAST_ROW_LIMIT) -> DataFrame:
+# The driver sequence funnels index degree and pos arrays by vid when
+# every id lies in [0, DENSE_VID_LIMIT); sparser or negative ids are
+# relabelled through a sorted unique table instead.
+DENSE_VID_LIMIT = 500_000_000
+
+
+def maybe_broadcast(df: DataFrame, n_rows: int | None = None) -> DataFrame:
     """Broadcast hint only when the side is actually small.
 
     ``n_rows`` is the caller's (usually already-known) row count; when
@@ -51,7 +59,7 @@ def maybe_broadcast(df: DataFrame, n_rows: int | None = None,
     hint is dropped and Catalyst/AQE pick a shuffle join."""
     if n_rows is None:
         n_rows = df.count()
-    return F.broadcast(df) if n_rows <= limit else df
+    return F.broadcast(df) if n_rows <= BROADCAST_ROW_LIMIT else df
 
 
 def symmetrize_canonical(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -131,8 +139,7 @@ def attach_rank(df: DataFrame, order_cols: list[str], out: str = "pos") -> DataF
     return out_df
 
 
-def vertices_from_edges(edges_sym: DataFrame,
-                        driver_rank_max: int = 30_000_000) -> DataFrame:
+def vertices_from_edges(edges_sym: DataFrame) -> DataFrame:
     """``vertices(vid, degree, pos)`` — sheep's degreeSequence (sequence.h:52-63).
 
     degree = #distinct neighbors (the edge table is symmetrized + deduped,
@@ -140,7 +147,7 @@ def vertices_from_edges(edges_sym: DataFrame,
     pos    = rank under (degree asc, vid asc); pos == sheep's jnid.
     Zero-degree vertices never appear (graph_wrapper.h:61-62 skips them).
 
-    Below ``driver_rank_max`` vertices the rank runs on the driver
+    Up to DRIVER_RANK_MAX vertices the rank runs on the driver
     (toArrow collect + np.lexsort + one arrow upload — the analogue of
     the tree builder's rank-0 funnel, ~5× faster than the distributed
     two-phase rank at sandbox scale); above it, ``attach_rank``
@@ -151,7 +158,7 @@ def vertices_from_edges(edges_sym: DataFrame,
     deg = deg.persist()
     try:
         n = deg.count()
-        if n > driver_rank_max:
+        if n > DRIVER_RANK_MAX:
             # attach_rank materializes its output eagerly (localCheckpoint)
             # before returning, so the deg cache is consumed HERE, inside
             # the try — the finally unpersist never forces a recompute
@@ -169,8 +176,7 @@ def vertices_from_edges(edges_sym: DataFrame,
         deg.unpersist()
 
 
-def driver_sequence_arrays(canon: DataFrame, *, dense_vid_limit: int = 500_000_000,
-                           ids_fit_int32: bool = False) -> dict:
+def driver_sequence_arrays(canon: DataFrame, *, ids_fit_int32: bool = False) -> dict:
     """Fused rank-0 funnel over the canonical half: ONE Arrow collect →
     degrees, sequence pos, and pos-space edges as numpy arrays.
 
@@ -189,7 +195,9 @@ def driver_sequence_arrays(canon: DataFrame, *, dense_vid_limit: int = 500_000_0
 
     Returns dict(vid, degree, pos, lo, hi) of int64 arrays; vid/degree/
     pos are vertex-indexed (degree-sequence order NOT applied — vid
-    ascending), lo/hi are per-undirected-edge.
+    ascending), lo/hi are per-undirected-edge. Ids in
+    [0, DENSE_VID_LIMIT) index the degree table directly; any other id
+    set is relabelled through a sorted unique table.
 
     ``ids_fit_int32``: caller guarantees 0 <= id < 2^31 for every
     endpoint; the collect then casts JVM-side and ships half the bytes
@@ -199,7 +207,7 @@ def driver_sequence_arrays(canon: DataFrame, *, dense_vid_limit: int = 500_000_0
     test_fused_driver_funnel_int32_transfer).
     """
     src, dst = _collect_canon_endpoints(canon, ids_fit_int32)
-    return _sequence_from_endpoints(src, dst, dense_vid_limit)
+    return _sequence_from_endpoints(src, dst)
 
 
 def _collect_canon_endpoints(canon: DataFrame, ids_fit_int32: bool):
@@ -233,7 +241,7 @@ def _collect_canon_endpoints(canon: DataFrame, ids_fit_int32: bool):
     return src, dst
 
 
-def _sequence_from_endpoints(src, dst, dense_vid_limit: int) -> dict:
+def _sequence_from_endpoints(src, dst) -> dict:
     """The numpy body of driver_sequence_arrays (post-collect). Widens
     narrow-transfer int32 endpoints to int64 at entry so every returned
     array keeps its documented int64 dtype."""
@@ -242,7 +250,7 @@ def _sequence_from_endpoints(src, dst, dense_vid_limit: int) -> dict:
     src = np.asarray(src).astype(np.int64, copy=False)
     dst = np.asarray(dst).astype(np.int64, copy=False)
     m = int(max(src.max(), dst.max())) + 1 if len(src) else 0
-    if len(src) and src.min() >= 0 and dst.min() >= 0 and m <= dense_vid_limit:
+    if len(src) and src.min() >= 0 and dst.min() >= 0 and m <= DENSE_VID_LIMIT:
         # dense-id fast path: O(E + max_vid) bincounts, no sort of the
         # 2E concatenation
         deg_full = np.bincount(src, minlength=m) + np.bincount(dst, minlength=m)
@@ -270,8 +278,7 @@ def _sequence_from_endpoints(src, dst, dense_vid_limit: int) -> dict:
     return {"vid": vid, "degree": degree, "pos": pos, "lo": lo, "hi": hi}
 
 
-def driver_sequence_tree_arrays(canon: DataFrame, *, dense_vid_limit: int = 500_000_000,
-                                ids_fit_int32: bool = False) -> dict:
+def driver_sequence_tree_arrays(canon: DataFrame, *, ids_fit_int32: bool = False) -> dict:
     """Fused funnel AND tree: one Arrow collect → degrees, sequence
     pos, and the elimination-tree arrays, with the entire post-collect
     body in ONE compiled call when ids are dense and fit int32
@@ -285,8 +292,9 @@ def driver_sequence_tree_arrays(canon: DataFrame, *, dense_vid_limit: int = 500_
     (the fallback whenever the compiled kernel is unavailable or
     declines the input), asserted by
     tests/test_graph.py::test_fused_seq_tree_matches_staged. Same
-    envelope/caps as those two (DRIVER_TREE_MAX_EDGES gating is the
-    caller's, as before).
+    envelope as those two: the caller gates on DRIVER_TREE_MAX_EDGES.
+    Ids in [0, DENSE_VID_LIMIT) below 2^31 take the compiled call; any
+    other id set takes the sparse relabel of the fallback.
 
     Returns dict(vid, degree, pos, n_vertices, parent, pst_weight);
     parent is pos-indexed with -1 roots.
@@ -301,7 +309,7 @@ def driver_sequence_tree_arrays(canon: DataFrame, *, dense_vid_limit: int = 500_
     if st_fn is not None and len(src) and len(src) < 2**31:
         mn = int(min(src.min(), dst.min()))
         m = int(max(src.max(), dst.max())) + 1
-        if mn >= 0 and m <= dense_vid_limit and m < 2**31:
+        if mn >= 0 and m <= DENSE_VID_LIMIT and m < 2**31:
             res = st_fn(np.ascontiguousarray(src), np.ascontiguousarray(dst), m)
             if res is not None:
                 vid = np.flatnonzero(res["deg_full"])
@@ -315,7 +323,7 @@ def driver_sequence_tree_arrays(canon: DataFrame, *, dense_vid_limit: int = 500_
                     "n_vertices": n, "parent": parent_full,
                     "pst_weight": res["pst_w"],
                 }
-    arrs = _sequence_from_endpoints(src, dst, dense_vid_limit)
+    arrs = _sequence_from_endpoints(src, dst)
     n = len(arrs["vid"])
     arrays = build_tree_arrays(arrs["lo"], arrs["hi"], n)
     return {
@@ -333,24 +341,21 @@ def vertices_df_from_arrays(spark: SparkSession, vid, degree, pos) -> DataFrame:
     return upload_columns(spark, {"vid": vid, "degree": degree, "pos": pos}, VERTICES_SCHEMA)
 
 
-def edges_pos(edges_sym: DataFrame, vertices: DataFrame,
-              n_vertices: int | None = None,
-              once: DataFrame | None = None) -> DataFrame:
+def edges_pos(edges: DataFrame, vertices: DataFrame,
+              n_vertices: int | None = None) -> DataFrame:
     """Each undirected edge once, in sequence space: (lo, hi) with lo < hi
     being the endpoint *positions*. This is the input to the tree builder
     and the down-assignment rule (partition.cpp:505, :623).
 
-    The vertex table is broadcast only under BROADCAST_ROW_LIMIT
-    (maybe_broadcast); beyond that sort-merge/shuffle-hash join
-    co-partitions on vid. Callers holding the cached canonical half
-    (symmetrize_canonical) pass it as ``once`` to skip the doubled-view
-    scan+filter.
+    ``edges`` is the doubled table or its canonical half (src < dst);
+    either way the join runs over the ``src < dst`` rows only. The vertex
+    table is broadcast only under BROADCAST_ROW_LIMIT (maybe_broadcast);
+    beyond that sort-merge/shuffle-hash join co-partitions on vid.
     """
     v = maybe_broadcast(vertices.select("vid", "pos"), n_rows=n_vertices)
-    if once is None:
-        once = edges_sym.where(F.col("src") < F.col("dst"))
     j = (
-        once.join(v.withColumnRenamed("vid", "src").withColumnRenamed("pos", "pos_src"), "src")
+        edges.where(F.col("src") < F.col("dst"))
+        .join(v.withColumnRenamed("vid", "src").withColumnRenamed("pos", "pos_src"), "src")
         .join(v.withColumnRenamed("vid", "dst").withColumnRenamed("pos", "pos_dst"), "dst")
     )
     return j.select(

@@ -1,7 +1,6 @@
 """T2/T6 — width-limited elimination trees with fill (jxn) tables.
 
-Closes the last SURVEY §2 gap (VERDICT r3 "What's missing" #1): the
-reference's ``-w`` mode builds, per eliminated vertex, the *fill
+The reference's ``-w`` mode builds, per eliminated vertex, the *fill
 neighborhood* ``jxn`` — the merge of its kids' jxns with its own
 post-neighbors, minus itself (lib/jnode.h:230-254 ``newUnion``,
 lib/merge.h:46-155 k-way ``heuristic_merge``) — fails the insert when
@@ -15,12 +14,14 @@ and ``fill = Σ (width − pst_weight − 1)`` (lib/jnode.cpp Facts).
 Spark-first shape: the elimination game is sequential by definition —
 the reference runs it single-node too, memory-bounded (jtree.h
 ``memory_limit``) — so this is a driver kernel fed by one arrow collect
-of the pos-space edge list, the same rank-0 funnel as
-``tree.build_tree(strategy='driver')``, returning the annotated tree in
-one upload. The partitioner path never builds jxn (reference default
-jopts, jtree.h:86-90); this module serves the treewidth / fill
-experiments of the reference's ``-w`` flag, at the same single-node
-scale envelope the reference gives it.
+of the pos-space edge list, the same rank-0 funnel as the driver path
+of ``tree.build_tree``, returning the annotated tree in one upload.
+``build_jxn_tree``'s facts carry the treewidth of the order
+(``facts["width"]``, find_max_width in jtree.h Options). The
+partitioner path never builds jxn (reference default jopts,
+jtree.h:86-90); this module serves the treewidth / fill experiments of
+the reference's ``-w`` flag, at the same single-node scale envelope the
+reference gives it.
 """
 
 from __future__ import annotations
@@ -240,12 +241,3 @@ def build_jxn_tree(
         "width": width,
     }, JXN_TREE_SCHEMA)
     return df, facts
-
-
-def treewidth_of_sequence(edges_pos_df: DataFrame, n_vertices: int) -> int:
-    """find_max_width (jtree.h Options): the treewidth of the degree-
-    ascending elimination order = max width of the unlimited jxn run.
-    (Reference convention: width counts the bag size, i.e. the usual
-    graph-theoretic treewidth bound is ``width − 1``.)"""
-    _, facts = build_jxn_tree(edges_pos_df, n_vertices, width_limit=None)
-    return facts["width"]

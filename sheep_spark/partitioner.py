@@ -218,34 +218,38 @@ def random_partition(vertices: DataFrame, num_parts: int, seed: int = 42) -> Dat
     )
 
 
+# fennel_partition collects the directed edge table to the driver; it
+# refuses a table longer than this.
+FENNEL_MAX_DRIVER_EDGES = 20_000_000
+
+
 def fennel_partition(
     edges_sym: DataFrame,
     vertices: DataFrame,
     num_parts: int,
     balance_factor: float = 1.03,
-    edge_balanced: bool = True,
-    max_driver_edges: int = 20_000_000,
 ) -> DataFrame:
-    """Greedy streaming FENNEL (partition.cpp:282-329; KDD14 objective
-    when edge_balanced): place each vertex (vid ascending, the
-    reference's node-iterator order) in argmax(neighbors_in_part −
-    a·((size+w)^1.5 − size^1.5)) under the hard cap max_component.
+    """Greedy streaming FENNEL (partition.cpp:282-329, the KDD14
+    edge-balanced objective): place each vertex (vid ascending, the
+    reference's node-iterator order; weight w = its degree) in
+    argmax(neighbors_in_part − a·((size+w)^1.5 − size^1.5)) under the
+    hard cap max_component = (directed edges / k) · balance_factor.
 
     Like the reference, this is the *comparison baseline*: a sequential
     stream, executed on the driver over collected adjacency — test-scale
     only (the reference notes its edge-stream variant was "too slow to
-    be worthwhile", partition.cpp:333-335). The sheep tree partitioner
-    is the scale path.
+    be worthwhile", partition.cpp:333-335), so more than
+    FENNEL_MAX_DRIVER_EDGES directed edges raise ValueError. The sheep
+    tree partitioner is the scale path.
     """
     spark = edges_sym.sparkSession
     n_directed = edges_sym.count()
-    if n_directed > max_driver_edges:
+    if n_directed > FENNEL_MAX_DRIVER_EDGES:
         raise ValueError(
             f"fennel_partition collects the edge table to the driver "
-            f"({n_directed} directed edges > cap {max_driver_edges}). It is "
-            "the serial comparison baseline, like the reference's; use "
-            "sheep_partition (tree + FFD) as the at-scale partitioner, or "
-            "raise max_driver_edges explicitly if you have the driver RAM."
+            f"({n_directed} directed edges > cap {FENNEL_MAX_DRIVER_EDGES}). It "
+            "is the serial comparison baseline, like the reference's; use "
+            "sheep_partition (tree + FFD) as the at-scale partitioner."
         )
     src, dst = tree.collect_int64_columns(edges_sym, ("src", "dst"))
     if not len(src):  # no edges, no vertices to place
@@ -254,13 +258,8 @@ def fennel_partition(
     m_directed = float(len(src))
     k = float(num_parts)
     y = 1.5
-    a = (
-        n_nodes * (k / m_directed) ** y
-        if edge_balanced
-        else m_directed * (k ** (y - 1.0)) / (n_nodes**y)
-    )
-    total = m_directed if edge_balanced else float(n_nodes)
-    max_component = (total / num_parts) * balance_factor
+    a = n_nodes * (k / m_directed) ** y
+    max_component = (m_directed / num_parts) * balance_factor
 
     adj: dict[int, list[int]] = {}
     for s, d in zip(src.tolist(), dst.tolist()):
@@ -269,7 +268,7 @@ def fennel_partition(
     parts: dict[int, int] = {}
     part_size = np.zeros(num_parts)
     for x in sorted(adj):
-        x_weight = float(len(adj[x])) if edge_balanced else 1.0
+        x_weight = float(len(adj[x]))
         value = np.zeros(num_parts)
         for ynbr in adj[x]:
             p = parts.get(ynbr)
@@ -319,10 +318,12 @@ def down_assign(edges_sym: DataFrame, vmeta: DataFrame,
                 n_vertices: int | None = None) -> DataFrame:
     """``edge_parts(src, dst, part)`` — each undirected edge exactly once
     (src < dst by vid, partition.cpp:615-617), owned by the part of its
-    lower-pos endpoint (partition.cpp:623). The vertex side routes
-    through maybe_broadcast, so an over-limit vmeta falls back to a
-    shuffle join rather than a driver-sized broadcast; pass
-    ``n_vertices`` (vmeta's row count) to skip the guard's count job."""
+    lower-pos endpoint (partition.cpp:623). ``edges_sym`` is the doubled
+    table or its canonical half; only its src < dst rows are read. The
+    vertex side routes through maybe_broadcast, so an over-limit vmeta
+    falls back to a shuffle join rather than a driver-sized broadcast;
+    pass ``n_vertices`` (vmeta's row count) to skip the guard's count
+    job."""
     from .graph import maybe_broadcast
 
     v = maybe_broadcast(vmeta, n_rows=n_vertices)
@@ -362,7 +363,8 @@ def down_reassign(
     difference between rewriting every partition directory and
     rewriting only the touched ones. Applying the delta to a sink is the
     caller's step; the engine ships none (``q_down_reassign`` reads the
-    delta itself).
+    delta itself). Like ``down_assign`` it takes the doubled table or
+    its canonical half.
     """
     from .graph import maybe_broadcast
 

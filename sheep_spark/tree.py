@@ -20,16 +20,16 @@ C library loaded, else one interpreted numpy sweep, which is also the
 reference oracle beside ``serial_tree_oracle``. Both take ids and edge
 counts below 2^31 and raise ValueError on anything else.
 
-Two strategies call it. The driver strategy (at most
-DRIVER_TREE_MAX_EDGES edges) collects the edges once and sweeps them in
-one call, the analogue of sheep's rank-0 funnel. The map/reduce strategy
-uses the identity that a partial tree *is* an edge set
+Two paths call it, chosen by the edge count alone. At most
+DRIVER_TREE_MAX_EDGES edges are collected once and swept in one call,
+the analogue of sheep's rank-0 funnel. Above that cap the map/reduce
+path uses the identity that a partial tree *is* an edge set
 {(kid_root → parent)} and that sheep's merge of partials is the partial
 build run on the union of those edge sets: repartition the edge list,
-sweep each partition into ≤V-1 tree edges, and repeat with fan-in F
-until one partition remains — a log_F-depth reduction, the DataFrame
-equivalent of sheep's MPI_Reduce custom op, expressed as ``mapInArrow``
-stages. Each task remaps its slice to dense local ids
+sweep each partition into ≤V-1 tree edges, and repeat with fan-in
+MERGE_FAN_IN until one partition remains — a log-depth reduction, the
+DataFrame equivalent of sheep's MPI_Reduce custom op, expressed as
+``mapInArrow`` stages. Each task remaps its slice to dense local ids
 (_eliminate_arrow), so per-task state is O(vertices in the slice), not
 O(global V) as in sheep's per-rank JNode arrays (jnode.cpp:203-250).
 Merging two partials (merge_trees.cpp) needs no function of its own:
@@ -41,7 +41,7 @@ DRIVER_TREE_MAX_EDGES cap) as its one-pass union-find.
 
 pst_weight needs no kernel: it counts later neighbors (jtree.cpp:47-49),
 i.e. ``bincount(lo)`` on the driver or ``groupBy(lo).count()`` over the
-deduped pos-space edge list. Either strategy yields the one tree table,
+deduped pos-space edge list. Either path yields the one tree table,
 ``TREE_SCHEMA = (jnid, parent, pst_weight)``, parent NULL for roots.
 
 This module also holds the engine's one driver↔JVM transfer layer,
@@ -70,7 +70,7 @@ TREE_SCHEMA = pa.schema([("jnid", pa.int64()), ("parent", pa.int64()),
                          ("pst_weight", pa.int64())])
 
 def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
-               weights_out: dict | None = None) -> tuple[np.ndarray, np.ndarray]:
+               pst_out: np.ndarray | None = None) -> tuple[np.ndarray, np.ndarray]:
     """Union-find elimination sweep over pos-space (lo, hi) edges.
 
     Returns (kid, parent) tree-edge arrays. Exact semantics of
@@ -86,10 +86,10 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
     runs — the reference oracle for the compiled one. Both raise
     ValueError when an id falls outside [0, n_vertices) or a call has
     2^31 or more vertices or edges (the compiled kernel's state is
-    int32). ``weights_out`` (dict) receives ``pst_weight`` =
-    bincount(lo) over n_vertices; without it the weight is neither
-    allocated nor computed (CC and the map/reduce merge rounds discard
-    it).
+    int32). ``pst_out``, a C-contiguous int64 array of n_vertices
+    (anything else raises ValueError), is filled with ``pst_weight`` =
+    bincount(lo); with None the weight is not computed (CC and the
+    map/reduce merge rounds have no use for it).
     """
     from . import _csweep
 
@@ -98,6 +98,9 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
             f"elimination kernel takes fewer than 2^31 vertices and edges per "
             f"call, got {n_vertices} vertices and {len(lo)} edges"
         )
+    if pst_out is not None and (pst_out.dtype != np.int64 or pst_out.shape != (n_vertices,)
+                                or not pst_out.flags.c_contiguous):
+        raise ValueError(f"pst_out must be a C-contiguous int64 array of {n_vertices} slots")
     lo = np.ascontiguousarray(lo, dtype=np.int64)
     hi = np.ascontiguousarray(hi, dtype=np.int64)
     ss_fn = _csweep.loaded()
@@ -105,10 +108,7 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
         cap = min(len(lo), n_vertices)
         kid_out = np.empty(cap, dtype=np.int64)
         par_out = np.empty_like(kid_out)
-        pst_w = None if weights_out is None else np.empty(n_vertices, dtype=np.int64)
-        n_out = ss_fn(lo, hi, n_vertices, kid_out, par_out, pst_w)
-        if weights_out is not None:
-            weights_out["pst_weight"] = pst_w
+        n_out = ss_fn(lo, hi, n_vertices, kid_out, par_out, pst_out)
         return kid_out[:n_out], par_out[:n_out]
 
     if len(lo) and (min(lo.min(), hi.min()) < 0
@@ -117,8 +117,8 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
             f"an edge endpoint falls outside [0, {n_vertices}) — "
             "pos-space input expected"
         )
-    if weights_out is not None:
-        weights_out["pst_weight"] = np.bincount(lo, minlength=n_vertices).astype(np.int64)
+    if pst_out is not None:
+        pst_out[:] = np.bincount(lo, minlength=n_vertices)
     order = np.argsort(hi, kind="stable")
     lo = lo[order]
     hi = hi[order]
@@ -165,38 +165,28 @@ def _eliminate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
     )
 
 
-def build_parent_edges(
-    edges_pos_df: DataFrame,
-    n_partials: int | None = None,
-    fan_in: int = 8,
-    n_edges: int | None = None,
-) -> DataFrame:
+# Partials merged per reduce round of the map/reduce build.
+MERGE_FAN_IN = 8
+
+
+def build_parent_edges(edges_pos_df: DataFrame, n_partials: int) -> DataFrame:
     """Map/reduce elimination-tree build → DataFrame (lo=kid jnid, hi=parent jnid).
 
     Stage 1 ("map", sheep's per-worker JTree ctor): n_partials partial
     trees, one per shuffle partition. Stages 2.. ("reduce",
     sheep's merge_trees rounds / MPI_Reduce): coalesce partials by
-    fan_in and re-run the same kernel on their union until one remains.
-
-    ``n_edges`` (a hint, no job run) scales n_partials so a stage-1
-    slice stays ~2M edges, so each task's sweep stays short (even on
-    the interpreted fallback); at 1.5B edges that means ~750 partials,
-    not defaultParallelism.
+    MERGE_FAN_IN and re-run the same kernel on their union until one
+    remains. The tree does not depend on n_partials (merge
+    associativity, jnode.cpp:174-201).
     """
-    spark = edges_pos_df.sparkSession
-    if n_partials is None:
-        n_partials = spark.sparkContext.defaultParallelism
-        if n_edges is not None:
-            n_partials = max(n_partials, int(n_edges // 2_000_000) + 1)
-
     # every stage runs the same _eliminate kernel on slice-local ids:
-    # stage 1 sweeps raw edges, each merge round the union of fan_in forests
+    # stage 1 sweeps raw edges, each merge round the union of its forests
     t = edges_pos_df.select("lo", "hi").repartition(n_partials).mapInArrow(
         _eliminate_arrow, TREE_EDGE_SCHEMA
     )
     p = n_partials
     while p > 1:
-        p = max(1, p // fan_in)
+        p = max(1, p // MERGE_FAN_IN)
         t = t.repartition(p).mapInArrow(_eliminate_arrow, TREE_EDGE_SCHEMA)
     return t
 
@@ -259,11 +249,11 @@ def build_tree_arrays(lo: np.ndarray, hi: np.ndarray, n_vertices: int) -> dict:
     {parent (-1 roots), pst_weight} numpy arrays. The fused pipeline
     (graph.driver_sequence_arrays) feeds this directly, then FFD-packs
     the returned arrays without any DataFrame round-trip."""
-    weights: dict = {}
-    kid, par = _eliminate(lo, hi, n_vertices, weights_out=weights)
+    pst = np.empty(n_vertices, dtype=np.int64)
+    kid, par = _eliminate(lo, hi, n_vertices, pst_out=pst)
     parent_full = np.full(n_vertices, -1, dtype=np.int64)
     parent_full[kid] = par
-    return {"parent": parent_full, **weights}
+    return {"parent": parent_full, "pst_weight": pst}
 
 
 def tree_df_from_arrays(spark, arrays: dict) -> DataFrame:
@@ -278,52 +268,33 @@ def tree_df_from_arrays(spark, arrays: dict) -> DataFrame:
     }, TREE_SCHEMA)
 
 
-def _build_tree_df_driver(edges_pos_df: DataFrame, n_vertices: int) -> DataFrame:
-    """Driver-strategy tree: one collect, one kernel, bincount weights,
-    one upload."""
-    lo, hi = collect_int64_columns(edges_pos_df, ("lo", "hi"))
-    arrays = build_tree_arrays(lo, hi, n_vertices)
-    return tree_df_from_arrays(edges_pos_df.sparkSession, arrays)
-
-
-def build_tree(
-    edges_pos_df: DataFrame, n_vertices: int, n_partials: int | None = None,
-    n_edges: int | None = None, strategy: str = "auto",
-) -> DataFrame:
+def build_tree(edges_pos_df: DataFrame, n_vertices: int,
+               n_edges: int | None = None) -> DataFrame:
     """``tree(jnid, parent, pst_weight)`` (TREE_SCHEMA) over jnid = 0..V-1.
 
     parent is NULL for roots (reference INVALID_JNID, jnode.h:43);
     pst_weight(j) = #neighbors of the vertex at pos j with greater pos
     (jtree.cpp:47-49) — the only node weight the partitioner packs
-    (get_weight's default flags, partition.h:51-52). Both strategies
-    return this one schema.
+    (get_weight's default flags, partition.h:51-52).
+
+    The edge count picks the path: ``n_edges`` when the caller knows it
+    (no job run), else one ``count()``. At most DRIVER_TREE_MAX_EDGES
+    edges take the driver funnel — one collect, one kernel call with
+    the pst weight as its byproduct, one upload, and the input scanned
+    exactly once. Above it the map/reduce build runs with enough
+    partials that a stage-1 slice stays ~2M edges (so each task's sweep
+    stays short, even on the interpreted fallback) and pst_weight is a
+    ``groupBy(lo)``. Both paths give the same tree.
     """
+    if n_edges is None:
+        n_edges = edges_pos_df.count()
     spark = edges_pos_df.sparkSession
-    # strategy: 'driver' = single-sweep rank-0 analogue (fastest under
-    # DRIVER_TREE_MAX_EDGES), 'mapreduce' = distributed partials+merge,
-    # 'auto' = driver iff the edge count fits the cap. Without a hint,
-    # measure instead of guessing (r6, guide §1/§2.4): one count() job —
-    # cheap next to either build — replaces the old silent fall-through
-    # to the multi-stage map/reduce path, which cost ~6× more than the
-    # driver funnel on cap-sized graphs. Trees are identical either way
-    # (strategy parity is pytest-asserted).
-    if strategy == "auto":
-        if n_edges is None and n_partials is None:
-            n_edges = edges_pos_df.count()
-        strategy = (
-            "driver"
-            if n_edges is not None and n_edges <= DRIVER_TREE_MAX_EDGES and n_partials is None
-            else "mapreduce"
-        )
-    if strategy == "driver":
-        # Fully driver-computed: the edges are already collected for the
-        # sweep, so pst_weight is np.bincount (milliseconds) and the
-        # whole tree ships back as ONE upload — no 2E-row groupBy or
-        # V-sized joins JVM-side, and no need to persist the input (it
-        # is scanned exactly once).
-        return _build_tree_df_driver(edges_pos_df, n_vertices)
+    if n_edges <= DRIVER_TREE_MAX_EDGES:
+        lo, hi = collect_int64_columns(edges_pos_df, ("lo", "hi"))
+        return tree_df_from_arrays(spark, build_tree_arrays(lo, hi, n_vertices))
     edges_pos_df = edges_pos_df.persist()
-    parents = build_parent_edges(edges_pos_df, n_partials, n_edges=n_edges)
+    n_partials = max(spark.sparkContext.defaultParallelism, n_edges // 2_000_000 + 1)
+    parents = build_parent_edges(edges_pos_df, n_partials)
     parents = parents.withColumnRenamed("lo", "jnid").withColumnRenamed("hi", "parent")
     pst = edges_pos_df.groupBy(F.col("lo").alias("jnid")).agg(F.count("*").alias("pst_weight"))
     base = spark.range(n_vertices).select(F.col("id").alias("jnid"))
@@ -460,15 +431,3 @@ def tree_facts_full(tree_df: DataFrame) -> dict:
         "halo_id": int(halo[0]) if len(halo) else None,
         "core_id": int(core[0]) if len(core) else None,
     }
-
-
-def tree_facts(tree_df: DataFrame) -> dict:
-    """Subset of JNodeTable::Facts (jnode.cpp:256-290) computable without
-    the jxn machinery: vertex/edge counts, root count, max pst width."""
-    row = tree_df.agg(
-        F.count("*").alias("vert_cnt"),
-        F.sum("pst_weight").alias("edge_cnt"),
-        F.sum(F.when(F.col("parent").isNull(), 1).otherwise(0)).alias("root_cnt"),
-        (F.max("pst_weight") + 1).alias("max_pst_width"),
-    ).collect()[0]
-    return row.asDict()

@@ -4,7 +4,8 @@ be called (perfbench/workloads.py:EXPECTED_CALLS). A rename or deletion
 on the library side must fail here, not inside the benchmark. No Spark
 session is needed: the modules are only imported and inspected.
 
-The package's environment knobs are pinned here too, read from the
+The package's environment knobs are pinned here too, and the package
+and its scripts are checked for unused imports, both read from the
 source with ``ast``."""
 
 import ast
@@ -93,3 +94,44 @@ def test_package_env_keys_inventory():
                 else:
                     keys.add(f"<non-literal key at {fn}:{node.lineno}>")
     assert keys == ENV_KEYS
+
+
+def _unused_imports(path):
+    """``path:line: name`` for each import its scope never reads: a
+    module-level import must be read somewhere in the module, a
+    function-level one inside that function. Lines marked ``noqa``
+    (imports made for their side effects) are skipped."""
+    with open(path) as f:
+        src = f.read()
+    lines = src.splitlines()
+    found = []
+
+    def check(scope):
+        used = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+        stack = list(ast.iter_child_nodes(scope))
+        while stack:
+            node = stack.pop()
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                check(node)
+                continue
+            stack.extend(ast.iter_child_nodes(node))
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(node, "module", None) == "__future__" or "noqa" in lines[node.lineno - 1]:
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name not in used:
+                    found.append(f"{os.path.relpath(path)}:{node.lineno}: {name}")
+
+    check(ast.parse(src, path))
+    return found
+
+
+def test_no_unused_imports():
+    repo = os.path.dirname(PERFBENCH)
+    paths = [os.path.join(repo, f) for f in ("bench.py", "__spark_entry__.py")]
+    for sub in ("sheep_spark", "scripts"):
+        for root, _dirs, files in os.walk(os.path.join(repo, sub)):
+            paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    assert [u for p in sorted(paths) for u in _unused_imports(p)] == []

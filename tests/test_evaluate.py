@@ -23,26 +23,23 @@ def test_spark_evaluator_matches_python_port(spark):
 
 
 def test_canonical_once_path_matches_doubled(spark):
-    """evaluate(once=canonical) — the r6 single-scan explode form — must
-    equal the doubled-view path AND the python port, for the full suite
-    and the fast subset."""
-    from pyspark.sql import functions as F
-
+    """evaluate over the canonical half (each undirected edge once,
+    src < dst) must equal evaluate over the doubled table AND the python
+    port, for the full suite and the fast subset."""
     edges = random_graph(70, 160, seed=33)
     pos = degree_pos(edges)
     rng = random.Random(9)
     part = {v: rng.randrange(5) for v in pos}
-    sym = edges_df(spark, edges)
-    canon = sym.where(F.col("src") < F.col("dst"))
+    canon = graph.symmetrize_canonical(spark.createDataFrame(edges, "src long, dst long"))
+    sym = graph.doubled_view(canon)
     verts = graph.vertices_from_edges(sym)
     assign = spark.createDataFrame(list(part.items()), "vid long, part int")
     vmeta = partitioner.vertex_meta(verts, assign)
 
     want = evaluate.evaluate_oracle(edges, pos, part)
-    got_canon = evaluate.evaluate(sym, vmeta, once=canon)
-    assert got_canon == want
+    assert evaluate.evaluate(canon, vmeta) == evaluate.evaluate(sym, vmeta) == want
     fast = ("edges_cut", "ecv_down", "down_balance")
-    got_fast = evaluate.evaluate(sym, vmeta, metrics=fast, once=canon)
+    got_fast = evaluate.evaluate(canon, vmeta, metrics=fast)
     assert all(got_fast[k] == want[k] for k in fast)
 
 
@@ -56,27 +53,6 @@ def test_evaluator_single_part_zero_cut(spark):
     assert m["vcom_vol"] == 0
     assert m["ecv_down"] == 0
     assert m["down_balance"] == m["n_edges"]
-
-
-def test_knuth_hash_variant_matches_port(spark):
-    """ECV(hash) under the knuth constant (partition.cpp:414-421) — the
-    reference's second multiplicative hash — vs the python port."""
-    from tests.conftest import degree_pos, edges_df, random_graph
-
-    edges = random_graph(50, 120, seed=77)
-    sym = edges_df(spark, edges)
-    verts = graph.vertices_from_edges(sym)
-    assign = partitioner.naive_partition(verts, 4)
-    vmeta = partitioner.vertex_meta(verts, assign).persist()
-    got = evaluate.evaluate(sym, vmeta, hash_fn="knuth")
-    pos = degree_pos(edges)
-    part = {r.vid: r.part for r in assign.collect()}
-    want = evaluate.evaluate_oracle(edges, pos, part, hash_fn="knuth")
-    for k in ("ecv_hash", "hash_balance"):
-        assert got[k] == want[k], k
-    # and the two constants genuinely differ on this graph's ownership
-    base = evaluate.evaluate_oracle(edges, pos, part, hash_fn="cormen")
-    assert ("ecv_hash", got["ecv_hash"]) != ("ecv_hash", None) and base["n_edges"] == want["n_edges"]
 
 
 def test_metrics_subset_fast_mode(spark):
@@ -110,14 +86,17 @@ def test_metrics_subset_fast_mode(spark):
 
 
 def test_bitmask_and_distinct_paths_agree(spark):
-    """The k<=62 bitmask single-pass and the general tagged-distinct path
-    must produce identical metrics (num_parts=100 forces the fallback)."""
-    from tests.conftest import edges_df, random_graph
-
-    edges = random_graph(40, 90, seed=3)
+    """The part count picks the plan: up to 62 parts the single-pass
+    bitmask, above that the tagged-distinct form. Both must equal the
+    python port — here on one graph split into 5 parts and into 70
+    (every part id in use, so the distinct plan runs)."""
+    edges = random_graph(140, 420, seed=3)
+    pos = degree_pos(edges)
     sym = edges_df(spark, edges)
     verts = graph.vertices_from_edges(sym)
-    vmeta = partitioner.vertex_meta(verts, partitioner.naive_partition(verts, 5)).persist()
-    fast = evaluate.evaluate(sym, vmeta)
-    slow = evaluate.evaluate(sym, vmeta, num_parts=100)
-    assert fast == slow
+    for k in (5, 70):
+        part = {v: i % k for i, v in enumerate(sorted(pos))}
+        assert len(set(part.values())) == k
+        assign = spark.createDataFrame(list(part.items()), "vid long, part int")
+        vmeta = partitioner.vertex_meta(verts, assign)
+        assert evaluate.evaluate(sym, vmeta) == evaluate.evaluate_oracle(edges, pos, part), k

@@ -59,6 +59,20 @@ def test_pages_to_graph_pipeline(spark):
     assert edges.where(F.col("src") == F.col("dst")).count() == 0
 
 
+def test_mint_vertex_ids_driver_and_distributed_agree(spark, monkeypatch):
+    """The driver url sort (small-V funnel) and attach_rank's distributed
+    rank must mint the same url → vid map, non-ASCII urls included
+    (python code-point order == Spark's UTF-8 byte order)."""
+    urls = [f"http://h{i % 7}.example/{'é' if i % 3 else 'z'}{i}" for i in range(60)]
+    rows = [(urls[i], urls[(i * 11 + 5) % 60]) for i in range(60)] + [(urls[0], "http://ü.example/")]
+    raw = spark.createDataFrame(rows, extract.EDGES_RAW_SCHEMA)
+    driver = sorted(map(tuple, extract.mint_vertex_ids(raw).collect()))
+    monkeypatch.setattr(graph, "DRIVER_RANK_MAX", 0)  # every input is above the cap
+    distributed = sorted(map(tuple, extract.mint_vertex_ids(raw).collect()))
+    assert distributed == driver
+    assert [v for _u, v in driver] == list(range(61))
+
+
 def test_sheep_beats_naive_on_zipf_pages_graph(spark):
     """The hub-skewed corpus graph is where degree-ordered partitioning
     earns its keep: sheep's tree partition must beat naive pos-chunks on
@@ -70,7 +84,7 @@ def test_sheep_beats_naive_on_zipf_pages_graph(spark):
     edges = edges.persist()
     verts = graph.vertices_from_edges(edges).persist()
     n = verts.count()
-    t = tree.build_tree(graph.edges_pos(edges, verts), n, n_partials=4)
+    t = tree.build_tree(graph.edges_pos(edges, verts), n)
     m_sheep = evaluate.evaluate(
         edges, partitioner.vertex_meta(verts, partitioner.sheep_partition(t, verts, 4))
     )

@@ -48,17 +48,14 @@ def test_tpch_graph_deterministic(spark):
     )
 
 
-def test_degree_sequence_driver_and_distributed_agree(spark):
+def test_degree_sequence_driver_and_distributed_agree(spark, monkeypatch):
     """The driver lexsort rank (small-V funnel) and the distributed
     two-phase rank must produce identical (vid, degree, pos) rows."""
-    from tests.conftest import edges_df, random_graph
-
-    from sheep_spark import graph
-
     edges = random_graph(150, 400, seed=31)
     sym = edges_df(spark, edges)
     a = graph.vertices_from_edges(sym)  # n << cap → driver path
-    b = graph.vertices_from_edges(sym, driver_rank_max=0)  # force distributed
+    monkeypatch.setattr(graph, "DRIVER_RANK_MAX", 0)  # every input is above the cap
+    b = graph.vertices_from_edges(sym)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -66,14 +63,12 @@ def test_fused_driver_funnel_matches_staged_path(spark):
     """driver_sequence_arrays (one collect + numpy) must reproduce the
     staged vertices_from_edges + edges_pos + build_tree pipeline exactly
     — vertices, pos-space edges, tree, and vmeta alike. Exercised on
-    both the dense-vid fast path and the sparse relabel path."""
-    import numpy as np
-
-    from sheep_spark import graph, partitioner, tree
-    from tests.conftest import random_graph
+    both the dense-vid fast path and the sparse relabel path (ids of
+    2^33 and up lie past graph.DENSE_VID_LIMIT)."""
+    from sheep_spark import partitioner, tree
 
     base = random_graph(500, 2000, seed=77)
-    for shift, label in ((0, "dense"), (10**12, "sparse")):
+    for shift, label in ((0, "dense"), (2**33, "sparse")):
         edges = [(a + shift, b + shift) for a, b in base]
         raw = spark.createDataFrame(edges, "src long, dst long")
         canon = graph.symmetrize_canonical(raw).persist()
@@ -85,14 +80,11 @@ def test_fused_driver_funnel_matches_staged_path(spark):
         staged_epos = sorted(
             (r["lo"], r["hi"]) for r in graph.edges_pos(sym, verts).collect()
         )
-        t_staged = tree.build_tree(
-            graph.edges_pos(sym, verts), n, strategy="driver"
-        )
+        # the canonical half gives the same pos-space edges as the doubled view
+        assert sorted(map(tuple, graph.edges_pos(canon, verts).collect())) == staged_epos
+        t_staged = tree.build_tree(graph.edges_pos(sym, verts), n)
 
-        # fused path (force the sparse branch via dense_vid_limit=1)
-        arrs = graph.driver_sequence_arrays(
-            canon, dense_vid_limit=1 if label == "sparse" else 500_000_000
-        )
+        arrs = graph.driver_sequence_arrays(canon)
         assert len(arrs["vid"]) == n
         fused_verts = {
             (int(v), int(d), int(p))

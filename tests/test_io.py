@@ -27,16 +27,15 @@ def test_xs1_write_rejects_ids_outside_uint32(spark, tmp_path, bad):
 
 
 def test_snap_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([(1, 2), (3, 4)], "src long, dst long")
-    p = str(tmp_path / "snap")
-    io.write_snap(df, p)
-    back = io.read_snap(spark, p)
+    p = tmp_path / "g.net"
+    p.write_text("".join(f"{a} {b}\n" for a, b in [(1, 2), (3, 4)]))
+    back = io.read_snap(spark, str(p))
     assert sorted((r.src, r.dst) for r in back.collect()) == [(1, 2), (3, 4)]
 
 
 def test_xs1_fixture_end_to_end_matches_oracles(spark, tmp_path):
     """The flagship flow on an XS1 file written here: read → symmetrize
-    → vertices → build_tree(n_partials=8) → sheep_partition(k=2) →
+    → vertices → build_tree → sheep_partition(k=2) →
     evaluate, each result pinned to the pure-python oracles. The ids
     leave gaps (isolated ids never appear), one id has only a self loop
     and one edge is repeated reversed, so the engine must skip all three
@@ -59,7 +58,7 @@ def test_xs1_fixture_end_to_end_matches_oracles(spark, tmp_path):
     pos = degree_pos(simple)
     assert {r.vid: r.pos for r in verts.collect()} == pos
 
-    t = tree.build_tree(graph.edges_pos(sym, verts), n, n_partials=8)
+    t = tree.build_tree(graph.edges_pos(sym, verts), n)
     parent_o, pst_o = tree.serial_tree_oracle(records, pos)
     got = sorted((r.jnid, r.parent, r.pst_weight) for r in t.collect())
     assert got == [(j, parent_o[j], pst_o[j]) for j in range(n)]
@@ -104,8 +103,8 @@ def test_hep_th_end_to_end_partition_quality(spark):
     sym = graph.symmetrize(raw).persist()
     verts = graph.vertices_from_edges(sym).persist()
     n = verts.count()
-    t = tree.build_tree(graph.edges_pos(sym, verts), n, n_partials=8)
-    facts = tree.tree_facts(t)
+    t = tree.build_tree(graph.edges_pos(sym, verts), n)
+    facts = tree.tree_facts_full(t)
     assert facts["vert_cnt"] == 7610
     assert facts["edge_cnt"] == 15751
 
@@ -127,35 +126,6 @@ def test_partitioned_sink(spark, tmp_path):
     assert back.where(F.col("part") == 1).count() == 2
 
 
-def test_sequence_text_roundtrip(spark, tmp_path):
-    """writeTextSequence/readTextSequence interop (sequence.h:153-170):
-    line N holds the vid at pos N."""
-    from sheep_spark import graph, io
-    from tests.conftest import degree_pos, edges_df, random_graph
-
-    edges = random_graph(30, 60, seed=5)
-    verts = graph.vertices_from_edges(edges_df(spark, edges))
-    path = str(tmp_path / "seq_txt")
-    io.write_sequence_text(verts, path)
-    got = {r.pos: r.vid for r in io.read_sequence_text(spark, path).collect()}
-    pos = degree_pos(edges)
-    assert got == {p: v for v, p in pos.items()}
-
-
-def test_partition_vector_text_roundtrip(spark, tmp_path):
-    from sheep_spark import graph, io, partitioner
-    from tests.conftest import edges_df, random_graph
-
-    edges = random_graph(30, 60, seed=6)
-    verts = graph.vertices_from_edges(edges_df(spark, edges))
-    vmeta = partitioner.vertex_meta(verts, partitioner.naive_partition(verts, 3))
-    path = str(tmp_path / "parts_txt")
-    io.write_partition_vector_text(vmeta, path)
-    got = {r.pos: r.part for r in io.read_partition_vector(spark, path).collect()}
-    want = {r.pos: r.part for r in vmeta.collect()}
-    assert got == want
-
-
 def test_read_snap_tabs_and_multispace(spark, tmp_path):
     p = tmp_path / "tabs.net"
     p.write_text("# comment\n1\t2\n3   4\n 5 6\n")
@@ -174,44 +144,3 @@ def test_read_snap_garbage_fails_loudly(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="none parsed"):
         io.read_snap(spark, str(p))
-
-
-def test_metis_adj_export(spark, tmp_path):
-    """graph2adj parity: header V/E/010; line i = degree + 1-based
-    sequence-index neighbors of the vertex at pos i."""
-    from tests.conftest import degree_pos, edges_df, random_graph
-
-    edges = random_graph(20, 35, seed=9)
-    sym = edges_df(spark, edges)
-    verts = graph.vertices_from_edges(sym)
-    path = str(tmp_path / "g.adj")
-    io.write_metis_adj(sym, verts, path)
-
-    pos = degree_pos(edges)
-    adj = {v: set() for v in pos}
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    lines = open(path).read().splitlines()
-    nv, ne, fmt = lines[0].split()
-    assert (int(nv), int(ne), fmt) == (len(pos), len(edges), "010")
-    by_pos = sorted(pos, key=lambda v: pos[v])
-    for i, v in enumerate(by_pos):
-        toks = [int(x) for x in lines[1 + i].split()]
-        assert toks[0] == len(adj[v])
-        assert sorted(toks[1:]) == sorted(pos[n] + 1 for n in adj[v])
-
-
-def test_tree_dot_export(spark, tmp_path):
-    from tests.conftest import edges_df
-
-    sym = edges_df(spark, [(0, 1), (1, 2), (3, 4)])
-    verts = graph.vertices_from_edges(sym)
-    t = tree.build_tree(graph.edges_pos(sym, verts), verts.count())
-    path = str(tmp_path / "t.dot")
-    io.write_tree_dot(t, path)
-    text = open(path).read()
-    assert text.startswith("digraph {") and text.rstrip().endswith("}")
-    n_edges = text.count("->")
-    n_roots = sum(1 for r in t.collect() if r["parent"] is None)
-    assert n_edges == verts.count() - n_roots

@@ -78,7 +78,7 @@ def test_tree_matches_plain_builder(spark):
     epos = spark.createDataFrame(edges, "lo long, hi long")
     t_plain = {
         r["jnid"]: (r["parent"], r["pst_weight"])
-        for r in tree.build_tree(epos, 80, strategy="driver").collect()
+        for r in tree.build_tree(epos, 80).collect()
     }
     df, _ = jxn.build_jxn_tree(epos, 80)
     t_jxn = {
@@ -133,10 +133,3 @@ def test_width_limit_defers_and_chains():
     assert tail_widths == list(range(len(deferred), 0, -1))
     assert facts["root_cnt"] == 1  # the chain roots everything
     assert facts["edge_cnt"] == len(edges)
-
-
-def test_treewidth_of_sequence_api(spark):
-    edges = pos_space_edges(40, 90, seed=11)
-    epos = spark.createDataFrame(edges, "lo long, hi long")
-    widths, _, _ = elimination_game(edges, 40)
-    assert jxn.treewidth_of_sequence(epos, 40) == max(widths)

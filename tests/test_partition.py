@@ -10,7 +10,7 @@ def build_all(spark, edges, k):
     verts = graph.vertices_from_edges(sym)
     ep = graph.edges_pos(sym, verts)
     n = verts.count()
-    t = tree.build_tree(ep, n, n_partials=4)
+    t = tree.build_tree(ep, n)
     assign = partitioner.sheep_partition(t, verts, k)
     vmeta = partitioner.vertex_meta(verts, assign)
     return sym, verts, vmeta
@@ -48,7 +48,7 @@ def test_down_assign_semantics(spark, k):
 def test_sheep_beats_random_on_ecv_down(spark):
     edges, verts = graph.graph_from_tpch(spark, SF_DIR)
     ep = graph.edges_pos(edges, verts)
-    t = tree.build_tree(ep, verts.count(), n_partials=4)
+    t = tree.build_tree(ep, verts.count())
     for k in (8,):
         assign = partitioner.sheep_partition(t, verts, k)
         m_sheep = evaluate.evaluate(edges, partitioner.vertex_meta(verts, assign))

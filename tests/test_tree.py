@@ -107,34 +107,42 @@ def test_msf_select_dense_graph_selects_at_most_v_minus_1():
         assert _sweep_pairs(sl, sh, n, run) == full
 
 
-def spark_tree(spark, edges, n_partials):
+def spark_tree(spark, edges):
     sym = edges_df(spark, edges)
     verts = graph.vertices_from_edges(sym)
     ep = graph.edges_pos(sym, verts)
     n = verts.count()
-    t = tree.build_tree(ep, n, n_partials=n_partials)
+    t = tree.build_tree(ep, n)
     rows = sorted(t.collect(), key=lambda r: r.jnid)
     parent = [r.parent for r in rows]
     pst = [r.pst_weight for r in rows]
     return parent, pst
 
 
+def _parents_from_edges(parent_edges, n):
+    """(lo=kid, hi=parent) tree edges → jnid-indexed parents, None roots."""
+    parent = [None] * n
+    for r in parent_edges.collect():
+        parent[r.lo] = r.hi
+    return parent
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3])
 @pytest.mark.parametrize("n_partials", [1, 4, 16])
 def test_distributed_tree_equals_serial_oracle(spark, seed, n_partials):
-    """Merge associativity (jnode.cpp:174-201): the distributed build must
+    """Merge associativity (jnode.cpp:174-201): the map/reduce build must
     equal the serial jtree.cpp:34-55 semantics for ANY partial count."""
     edges = random_graph(80, 160, seed=seed)
     pos = degree_pos(edges)
-    parent_o, pst_o = tree.serial_tree_oracle(edges, pos)
-    parent_s, pst_s = spark_tree(spark, edges, n_partials)
-    assert parent_s == parent_o
-    assert pst_s == pst_o
+    parent_o, _ = tree.serial_tree_oracle(edges, pos)
+    sym = edges_df(spark, edges)
+    ep = graph.edges_pos(sym, graph.vertices_from_edges(sym))
+    assert _parents_from_edges(tree.build_parent_edges(ep, n_partials), len(pos)) == parent_o
 
 
 def test_tree_structural_invariants(spark):
     edges = random_graph(120, 200, seed=9)
-    parent, pst = spark_tree(spark, edges, 4)
+    parent, pst = spark_tree(spark, edges)
     n = len(parent)
     # parent strictly later in the sequence (elimination goes upward)
     assert all(p is None or p > j for j, p in enumerate(parent))
@@ -161,7 +169,7 @@ def test_disconnected_graph(spark):
     edges = [(0, 1), (1, 2), (10, 11), (12, 13), (11, 12)]
     pos = degree_pos(edges)
     parent_o, pst_o = tree.serial_tree_oracle(edges, pos)
-    parent_s, pst_s = spark_tree(spark, edges, 4)
+    parent_s, pst_s = spark_tree(spark, edges)
     assert parent_s == parent_o and pst_s == pst_o
     assert sum(1 for p in parent_s if p is None) == 2
 
@@ -207,23 +215,22 @@ def test_sort_sweep_matches_interpreted_and_emits_bincounts():
         keep = a != b
         lo = np.minimum(a, b)[keep].astype(np.int64)
         hi = np.maximum(a, b)[keep].astype(np.int64)
-        w: dict = {}
-        wi: dict = {}
-        k, p = tree._eliminate(lo, hi, n, weights_out=w)
-        ki, pi = _interpreted(tree._eliminate, lo, hi, n, weights_out=wi)
+        w = np.full(n, -1, np.int64)
+        wi = np.full(n, -1, np.int64)
+        k, p = tree._eliminate(lo, hi, n, pst_out=w)
+        ki, pi = _interpreted(tree._eliminate, lo, hi, n, pst_out=wi)
         assert dict(zip(k.tolist(), p.tolist())) == dict(zip(ki.tolist(), pi.tolist()))
         for weights in (w, wi):
-            assert np.array_equal(weights["pst_weight"], np.bincount(lo, minlength=n))
+            assert np.array_equal(weights, np.bincount(lo, minlength=n))
 
     # empty input
-    w = {}
-    k, p = tree._eliminate(np.array([], np.int64), np.array([], np.int64), 7,
-                           weights_out=w)
-    assert len(k) == 0 and np.array_equal(w["pst_weight"], np.zeros(7, np.int64))
+    w = np.full(7, -1, np.int64)
+    k, p = tree._eliminate(np.array([], np.int64), np.array([], np.int64), 7, pst_out=w)
+    assert len(k) == 0 and np.array_equal(w, np.zeros(7, np.int64))
 
-    # one envelope on both paths: out-of-range ids and calls of 2^31 or
-    # more vertices raise ValueError (the size check fires before any
-    # allocation, so a tiny array suffices)
+    # one envelope on both paths: out-of-range ids, calls of 2^31 or
+    # more vertices and a misshapen pst_out raise ValueError (the size
+    # check fires before any allocation, so a tiny array suffices)
     one, five, neg = (np.array([v], np.int64) for v in (0, 5, -1))
     for run in (_compiled, _interpreted):
         with pytest.raises(ValueError, match=r"outside \[0, 3\)"):
@@ -232,13 +239,17 @@ def test_sort_sweep_matches_interpreted_and_emits_bincounts():
             run(tree._eliminate, neg, np.array([2], np.int64), 3)
         with pytest.raises(ValueError, match=r"2\^31"):
             run(tree._eliminate, one, np.array([1], np.int64), 2**31)
+        # the C kernel writes n_vertices weights through pst_out's pointer
+        for bad in (np.zeros(2, np.int64), np.zeros(3, np.int32), np.zeros(6, np.int64)[::2]):
+            with pytest.raises(ValueError, match="pst_out"):
+                run(tree._eliminate, one, np.array([1], np.int64), 3, pst_out=bad)
 
 
 @pytest.mark.parametrize("run", [_compiled, _interpreted], ids=["compiled", "interpreted"])
 def test_weightless_sweep_equals_weighted(run):
-    """Without ``weights_out`` the sweep skips the pst weight (the C
-    kernel gets a NULL weight pointer) and must return exactly the
-    (kid, parent) arrays of a weighted call, on both paths."""
+    """Without ``pst_out`` the sweep skips the pst weight (the C kernel
+    gets a NULL weight pointer) and must return exactly the (kid,
+    parent) arrays of a weighted call, on both paths."""
     rng = np.random.default_rng(47)
     for n, m in [(1, 0), (5, 2), (80, 500), (2000, 20000)]:
         a = rng.integers(0, n, size=m)
@@ -246,11 +257,11 @@ def test_weightless_sweep_equals_weighted(run):
         keep = a != b
         lo = np.minimum(a, b)[keep].astype(np.int64)
         hi = np.maximum(a, b)[keep].astype(np.int64)
-        w: dict = {}
-        k_w, p_w = run(tree._eliminate, lo, hi, n, weights_out=w)
+        w = np.full(n, -1, np.int64)
+        k_w, p_w = run(tree._eliminate, lo, hi, n, pst_out=w)
         k, p = run(tree._eliminate, lo, hi, n)
         assert np.array_equal(k, k_w) and np.array_equal(p, p_w)
-        assert np.array_equal(w["pst_weight"], np.bincount(lo, minlength=n))
+        assert np.array_equal(w, np.bincount(lo, minlength=n))
 
 
 ADVERSARIAL_SHAPES = {
@@ -267,13 +278,14 @@ ADVERSARIAL_SHAPES = {
 
 
 @pytest.mark.parametrize("shape", list(ADVERSARIAL_SHAPES))
-def test_every_tree_path_equals_serial_oracle(spark, shape):
+def test_every_tree_path_equals_serial_oracle(spark, monkeypatch, shape):
     """Every way the engine builds a tree — the compiled sort-sweep, the
-    interpreted sweep, the fused driver funnel, and the map/reduce build
-    at 2 and 4 partials — must equal serial_tree_oracle on adversarial
-    shapes: empty, one edge, star, path, clique, a multigraph with
-    duplicate edges and a self loop, disconnected components, and
-    sparse ~10^12 ids."""
+    interpreted sweep, the fused driver funnel, build_tree's driver path,
+    and its map/reduce path (the cap patched below every input) plus a
+    2-partial ``build_parent_edges`` — must equal serial_tree_oracle on
+    adversarial shapes: empty, one edge, star, path, clique, a
+    multigraph with duplicate edges and a self loop, disconnected
+    components, and sparse ~10^12 ids."""
     raw = ADVERSARIAL_SHAPES[shape]
     simple = sorted({(min(a, b), max(a, b)) for a, b in raw if a != b})
     pos = degree_pos(simple)
@@ -299,8 +311,10 @@ def test_every_tree_path_equals_serial_oracle(spark, shape):
     sym = edges_df(spark, raw)
     verts = graph.vertices_from_edges(sym)
     ep = graph.edges_pos(sym, verts)
-    for n_partials in (2, 4):
-        t = tree.build_tree(ep, n, n_partials=n_partials, strategy="mapreduce")
-        rows_t = sorted(t.collect(), key=lambda r: r.jnid)
-        assert [r.parent for r in rows_t] == parent_o, (shape, n_partials)
-        assert [r.pst_weight for r in rows_t] == pst_o, (shape, n_partials)
+    for path in ("driver", "mapreduce"):
+        if path == "mapreduce":
+            monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", -1)
+        rows_t = sorted(tree.build_tree(ep, n).collect(), key=lambda r: r.jnid)
+        assert [r.parent for r in rows_t] == parent_o, (shape, path)
+        assert [r.pst_weight for r in rows_t] == pst_o, (shape, path)
+    assert _parents_from_edges(tree.build_parent_edges(ep, 2), n) == parent_o, shape

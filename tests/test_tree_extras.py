@@ -10,7 +10,7 @@ def test_tree_facts_full_matches_reference_semantics(spark):
     sym = edges_df(spark, edges)
     verts = graph.vertices_from_edges(sym)
     n = verts.count()
-    t = tree.build_tree(graph.edges_pos(sym, verts), n, n_partials=4)
+    t = tree.build_tree(graph.edges_pos(sym, verts), n)
     facts = tree.tree_facts_full(t)
 
     pos = degree_pos(edges)
@@ -44,7 +44,7 @@ def test_tree_save_load_and_repartition(spark, tmp_path):
     sym = edges_df(spark, edges)
     verts = graph.vertices_from_edges(sym)
     n = verts.count()
-    t = tree.build_tree(graph.edges_pos(sym, verts), n, n_partials=4)
+    t = tree.build_tree(graph.edges_pos(sym, verts), n)
     p = str(tmp_path / "tree.parquet")
     tree.save_tree(t, p)
     t2 = tree.load_tree(spark, p)
@@ -74,21 +74,18 @@ def test_fennel_baseline(spark):
     n_edges_directed = edges.count()
     assert max(loads.values()) <= (n_edges_directed / 4) * 1.03
 
-def test_driver_and_mapreduce_strategies_identical(spark):
-    """build_tree strategy='driver' (rank-0 single sweep) must equal the
-    distributed map/reduce path edge-for-edge."""
-    from sheep_spark import graph, tree
-    from tests.conftest import edges_df, random_graph
-
+def test_driver_and_mapreduce_strategies_identical(spark, monkeypatch):
+    """build_tree's driver path (rank-0 single sweep) must equal its
+    distributed map/reduce path edge-for-edge; the second build takes
+    map/reduce because the edge cap is patched below the input."""
     edges = random_graph(120, 400, seed=23)
     sym = edges_df(spark, edges)
     verts = graph.vertices_from_edges(sym)
     n = verts.count()
     epos = graph.edges_pos(sym, verts).persist()
-    a = tree.build_tree(epos, n, strategy="driver")
-    b = tree.build_tree(epos, n, n_partials=4, strategy="mapreduce")
-    ra = sorted(tuple(r) for r in a.collect())
-    rb = sorted(tuple(r) for r in b.collect())
+    ra = sorted(tuple(r) for r in tree.build_tree(epos, n).collect())
+    monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", len(edges) - 1)
+    rb = sorted(tuple(r) for r in tree.build_tree(epos, n).collect())
     assert ra == rb
 
 
