@@ -14,9 +14,9 @@ prep_synth_dedup when paid).
 Prints ONE JSON line with per-stage walls + per-edge rates. Stage
 boundaries are materialized (count/persist) so walls are attributable.
 
-Usage: python scripts/bench_scale_pipeline.py [--edges N] [--cores N]
-Env:   SPARK_GRAFT_PIPE_EDGES (directed target, default 70M → ~33M
-       undirected after dedup), SPARK_GRAFT_PIPE_CPUS (default 32).
+Usage: python scripts/bench_scale_pipeline.py
+Env:   SPARK_GRAFT_PIPE_EDGES (raw edge target, default 35M),
+       SPARK_GRAFT_PIPE_V (default 4M), SPARK_GRAFT_PIPE_CPUS (default 32).
 """
 
 from __future__ import annotations
@@ -32,6 +32,10 @@ EDGES = int(os.environ.get("SPARK_GRAFT_PIPE_EDGES", str(35_000_000)))
 V = int(os.environ.get("SPARK_GRAFT_PIPE_V", str(4_000_000)))
 CPUS = int(os.environ.get("SPARK_GRAFT_PIPE_CPUS", "32"))
 KS = [2, 8]
+# int64 slots of driver memory both legs touch before the clock, per raw
+# edge: ~600M slots (~4.8 GB) at the default 35M edges, scaled with a
+# smaller SPARK_GRAFT_PIPE_EDGES.
+POOL_SLOTS_PER_EDGE = 17
 
 
 def _pretouch_conf() -> dict:
@@ -83,7 +87,7 @@ def main() -> None:
     # reused; a long-lived production driver is always warm.
     import numpy as np
 
-    _pool = np.ones(600_000_000, dtype=np.int64)  # ~4.8 GB touched once
+    _pool = np.ones(POOL_SLOTS_PER_EDGE * EDGES, dtype=np.int64)  # touched once
     del _pool
 
     # Warm the Arrow TRANSFER path at full width too (r5): the first
@@ -330,7 +334,7 @@ def parity_main() -> None:
     spark.range(4 * CPUS).repartition(4 * CPUS).mapInArrow(_warm, "id long").count()
     import numpy as np
 
-    _pool = np.ones(600_000_000, dtype=np.int64)
+    _pool = np.ones(POOL_SLOTS_PER_EDGE * EDGES, dtype=np.int64)
     del _pool
 
     # warm the full-width Arrow transfer path (see main(): the first

@@ -13,6 +13,10 @@ once and labelled by one union-find pass with the elimination kernel
 (``tree._eliminate``) — no Spark rounds at all. Above it, large/small-star
 contraction runs as Spark rounds with ``max_iter`` and checkpoint/resume.
 
+Triangle counting orients each undirected edge once, low pos → high pos,
+through ``graph.edges_pos``, so like the partition path it takes the
+doubled table or its canonical half.
+
 Physical notes
 --------------
 - The superstep loops' edge table is hash-repartitioned on ``src``
@@ -387,25 +391,10 @@ def label_propagation(
     return labels, info
 
 
-def _oriented_edges(edges_sym: DataFrame, vertices: DataFrame) -> DataFrame:
-    """Each undirected edge once, oriented low-pos → high-pos (degree
-    ascending): (a, b) with pos a < b. NOT persisted — callers own the
-    cache lifecycle."""
-    from .graph import maybe_broadcast
-
-    v = maybe_broadcast(vertices.select("vid", "pos"))
-    return (
-        edges_sym.join(v.withColumnRenamed("vid", "src").withColumnRenamed("pos", "pa"), "src")
-        .join(v.withColumnRenamed("vid", "dst").withColumnRenamed("pos", "pb"), "dst")
-        .where(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("a"), F.col("pb").alias("b"))
-    )
-
-
 def _tris(e: DataFrame) -> DataFrame:
-    e1 = e.select(F.col("a"), F.col("b"))
-    e2 = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
+    e1 = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
+    e2 = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
+    e3 = e.select(F.col("lo").alias("ta"), F.col("hi").alias("tc"))
     wedges = e1.join(e2, "b")
     tris = wedges.join(e3, (F.col("a") == F.col("ta")) & (F.col("c") == F.col("tc")))
     return tris.select("a", "b", "c")
@@ -416,9 +405,14 @@ def triangle_count(edges_sym: DataFrame, vertices: DataFrame) -> int:
     degree-ascending order as sheep's sequence (sequence.h:52-63) bounds
     the wedge intermediate exactly like down-assignment bounds ECV.
 
-    The oriented edge cache (scanned 3× by the wedge joins) is released
-    in ``finally``; triangle rows stream into the count, never stored."""
-    e = _oriented_edges(edges_sym, vertices).persist()
+    ``edges_sym`` is the doubled table or its canonical half (src < dst),
+    like the other edge consumers: ``graph.edges_pos`` orients each
+    undirected edge once, low pos → high pos. That oriented cache
+    (scanned 3× by the wedge joins) is released in ``finally``; triangle
+    rows stream into the count, never stored."""
+    from .graph import edges_pos
+
+    e = edges_pos(edges_sym, vertices).persist()
     try:
         row = _tris(e).agg(F.coalesce(F.count("*"), F.lit(0)).alias("n")).collect()[0]
         return int(row["n"])

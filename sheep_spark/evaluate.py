@@ -1,12 +1,11 @@
 """Partition-quality evaluators — sheep's exhaustive metric suite
 (lib/partition.cpp:428-521) as DataFrame aggregations.
 
-All metrics share one physical shape: join the symmetrized edge table to
-per-vertex (pos, part) on both endpoints, derive an owner part per edge,
-then a two-stage distinct-count per vertex. The two-stage form
-(distinct pairs → count per vertex) keeps hub vertices skew-safe: the
-heavy groupBy key only ever carries ≤ #parts rows after the first
-partial aggregation.
+All metrics share one physical shape: join the edge table to per-vertex
+(pos, part) on both endpoints, derive an owner part per edge, then OR
+each vertex's parts into a bitset of ⌈#parts/64⌉ longs and count its
+bits. The OR is a map-side partial aggregate, so hub vertices stay
+skew-safe: a heavy groupBy key carries a few longs whatever its degree.
 
 Metrics (names match the reference's printout):
 - edges_cut  : undirected edges with endpoints in different parts (:452)
@@ -18,6 +17,9 @@ Metrics (names match the reference's printout):
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,19 +37,14 @@ def joined_edges(edges: DataFrame, vmeta: DataFrame, n_vertices: int | None = No
     """Directed edge rows annotated with (pos, part) of both endpoints.
 
     ``edges`` is the doubled table or its canonical half (src < dst):
-    the join runs over its ``src < dst`` rows only — E/2 rows, two
-    broadcast probes per undirected edge — and both directed
-    perspectives are re-created afterwards by exploding a 2-struct
-    array per row, so the result holds exactly the doubled view's rows
-    either way. The broadcast hint is size-guarded
-    (graph.maybe_broadcast); pass ``n_vertices`` to skip the guard's
-    count job in hot paths."""
-    from .graph import maybe_broadcast
+    ``graph.join_endpoints`` joins its E/2 ``src < dst`` rows, and both
+    directed perspectives are re-created afterwards by exploding a
+    2-struct array per row, so the result holds exactly the doubled
+    view's rows either way. Pass ``n_vertices`` to skip the broadcast
+    guard's count job in hot paths."""
+    from .graph import join_endpoints
 
-    v = maybe_broadcast(vmeta, n_rows=n_vertices)
-    a = v.select(F.col("vid").alias("src"), F.col("pos").alias("pos_a"), F.col("part").alias("part_a"))
-    b = v.select(F.col("vid").alias("dst"), F.col("pos").alias("pos_b"), F.col("part").alias("part_b"))
-    j = edges.where(F.col("src") < F.col("dst")).join(a, "src").join(b, "dst")
+    j = join_endpoints(edges, vmeta, ("pos", "part"), n_vertices)
     both = F.array(
         F.struct(
             F.col("src"), F.col("dst"),
@@ -71,29 +68,42 @@ ALL_METRICS = (
 )
 
 
+def _part_bits(p: str, n_words: int) -> list:
+    """Part column ``p`` as a one-hot bitset of ``n_words`` longs: word w
+    holds bit ``p % 64`` when ``p DIV 64 = w``. A single word is the
+    plain ``1 << p``. (SQL shiftleft: the shift amount may be a column;
+    the python F.shiftleft wrapper only takes a literal.)"""
+    if n_words == 1:
+        return [F.expr(f"shiftleft(CAST(1 AS BIGINT), {p})")]
+    return [
+        F.expr(f"IF({p} DIV 64 = {w}, shiftleft(CAST(1 AS BIGINT), {p} % 64), CAST(0 AS BIGINT))")
+        for w in range(n_words)
+    ]
+
+
+def _distinct_minus_one(words: list):
+    """Σ popcount over a vertex's OR-reduced bitset words, minus one."""
+    return reduce(operator.add, [F.bit_count(w) for w in words]) - 1
+
+
 def evaluate(edges: DataFrame, vmeta: DataFrame, metrics=None) -> dict:
     """Partition-quality metric dict over ``edges`` — the doubled table
     or its canonical half (src < dst), see ``joined_edges``.
 
-    The number of parts in ``vmeta`` picks one of two plans. Up to 62
-    parts (every real sheep config): ONE job over the edge-join, a
-    per-vertex bitmask aggregation carrying the scalar counts and the
-    per-part ownership counts as extra aggregates. It does NOT cache
-    the join: with the vertex side broadcast the join is a pure
-    map-side hash probe, cheaper at scale than materializing a
-    9-column E-sized cache (see BASELINE.md).
+    ONE job over the edge-join for any number of parts: a per-(vertex,
+    part) aggregation that ORs each vertex's neighbour / owner parts
+    into a bitset of ⌈k/64⌉ longs (popcount − 1 is the vertex's
+    distinct-part count) and carries the scalar counts and per-part
+    ownership counts as plain sums. It does NOT cache the join: with
+    the vertex side broadcast the join is a map-side hash probe,
+    cheaper at scale than materializing an E-sized cache (see
+    BASELINE.md). vertex_balance comes from the O(V) part histogram.
 
     ``metrics`` selects a subset of ALL_METRICS (default: all). The
     headline quality gate only needs ``("edges_cut", "ecv_down",
-    "down_balance")`` — that subset runs the minimal jobs (~3× less
-    work than the full suite). ``n_edges`` (and ``ecv_down_per_edge``
-    when ecv_down is requested) are always included.
-
-    Above 62 parts a part no longer fits a bit of a long: the cached
-    join feeds a metric-tagged union + two-stage distinct (the
-    hub-skew-safe general form) and one explode scan for the edge
-    balances. vertex_balance comes from the O(V) part histogram on both
-    plans.
+    "down_balance")`` — that subset aggregates the fewest columns.
+    ``n_edges`` (and ``ecv_down_per_edge`` when ecv_down is requested)
+    are always included. Part ids must be non-negative.
     """
     requested = tuple(metrics) if metrics is not None else ALL_METRICS
     unknown = set(requested) - set(ALL_METRICS)
@@ -109,165 +119,85 @@ def evaluate(edges: DataFrame, vmeta: DataFrame, metrics=None) -> dict:
     ecv_wanted = [m for m in ("vcom_vol", "ecv_down", "ecv_up", "ecv_hash") if m in requested]
     edge_bal = [m for m in ("down_balance", "up_balance", "hash_balance") if m in requested]
 
-    # ONE tiny O(V) job yields the part histogram → num_parts, the
-    # broadcast guard's row count, AND vertex_balance.
+    # ONE tiny O(V) job yields the part histogram → the bitset width,
+    # the broadcast guard's row count, AND vertex_balance.
     part_rows = vmeta.groupBy("part").agg(F.count("*").alias("c")).collect()
     n_vertices = sum(int(r["c"]) for r in part_rows)
+    if any(int(r["part"]) < 0 for r in part_rows):
+        raise ValueError("evaluate: part ids must be non-negative")
     num_parts = max((int(r["part"]) for r in part_rows), default=-1) + 1
+    n_words = max(1, -(-num_parts // 64))
 
     j = joined_edges(edges, vmeta, n_vertices=n_vertices)
 
-    out: dict = {}
-    ecv: dict = {}
-    if num_parts <= 62:
-        # ONE pass over the edge-join: per (src, part), bit_or each
-        # requested ownership rule's part into a long mask (integer
-        # shiftleft — no floating point), popcount at the end; the
-        # scalar counts AND the per-rule ownership counts ride along as
-        # plain sums. Map-side partials absorb hub skew (the group
-        # value is a few longs regardless of degree).
-        # The per-vertex rows then re-group by part (V→K rows, a tiny
-        # second exchange inside the same job) and K rows are collected.
-        #
-        # Balance identities (exact, not approximations): a down/up-
-        # owned directed row's owner part IS part_a — the group key —
-        # because ownership picks the src endpoint exactly when the
-        # pos comparison favors it; and exactly one directed row of
-        # each undirected edge satisfies the strict hash-winner
-        # predicate below (ties broken toward the larger vid, the
-        # rule _balances applies to the src < dst row).
-        mask_cols = {
-            "vcom_a": F.expr("shiftleft(CAST(1 AS BIGINT), part_a)"),
-            "vcom_b": F.expr("shiftleft(CAST(1 AS BIGINT), part_b)"),
-        }
-        sel = [
-            "src",
-            F.col("part_a").alias("part"),
-            ((F.col("src") < F.col("dst")) & (F.col("part_a") != F.col("part_b")))
-            .cast("long").alias("cut"),
-        ]
-        aggs = [F.count("*").alias("n_directed"), F.sum("cut").alias("edges_cut")]
-        if "vcom_vol" in ecv_wanted:
-            sel += [mask_cols["vcom_a"].alias("ma"), mask_cols["vcom_b"].alias("mb")]
-            aggs.append((F.bit_count(F.bit_or("ma").bitwiseOR(F.bit_or("mb"))) - 1).alias("vcom_vol"))
-        jj = j
-        for name, owner in owners.items():
-            key = f"ecv_{name}"
-            if key in ecv_wanted:
-                # SQL shiftleft: the shift amount may be a column (the
-                # python F.shiftleft wrapper only takes a literal)
-                jj = jj.withColumn(f"{name}_p", owner)
-                sel.append(F.expr(f"shiftleft(CAST(1 AS BIGINT), {name}_p)").alias(f"m_{name}"))
-                aggs.append((F.bit_count(F.bit_or(f"m_{name}")) - 1).alias(key))
-        if "down_balance" in edge_bal:
-            sel.append((F.col("pos_a") < F.col("pos_b")).cast("long").alias("own_down"))
-            aggs.append(F.sum("own_down").alias("n_down"))
-        if "up_balance" in edge_bal:
-            sel.append((F.col("pos_a") > F.col("pos_b")).cast("long").alias("own_up"))
-            aggs.append(F.sum("own_up").alias("n_up"))
-        if "hash_balance" in edge_bal:
-            h_src = _cormen_hash(F.col("src"))
-            h_dst = _cormen_hash(F.col("dst"))
-            sel.append(
-                ((h_src < h_dst) | ((h_src == h_dst) & (F.col("src") > F.col("dst"))))
-                .cast("long").alias("own_hash")
-            )
-            aggs.append(F.sum("own_hash").alias("n_hash"))
-        per_vertex = jj.select(*sel).groupBy("src", "part").agg(*aggs)
-        final = [F.sum("n_directed").alias("n_directed"), F.sum("edges_cut").alias("edges_cut")]
-        final += [F.sum(m).alias(m) for m in ecv_wanted]
-        bal_col = {"down_balance": "n_down", "up_balance": "n_up", "hash_balance": "n_hash"}
-        final += [F.sum(bal_col[m]).alias(bal_col[m]) for m in edge_bal]
-        rows = per_vertex.groupBy("part").agg(*final).collect()
-        out["n_edges"] = sum(int(r["n_directed"] or 0) for r in rows) // 2
-        if "edges_cut" in requested:
-            out["edges_cut"] = sum(int(r["edges_cut"] or 0) for r in rows)
-        for m in ecv_wanted:
-            ecv[m] = sum(int(r[m] or 0) for r in rows)
-        for m in edge_bal:
-            out[m] = max((int(r[bal_col[m]] or 0) for r in rows), default=0)
-    else:
-        # >62 parts: cached join + metric-tagged union + two-stage
-        # distinct (the persist pays when the same join feeds 5 scans)
-        j = j.persist()
-        try:
-            scalars = j.agg(
-                F.count("*").alias("n_directed"),
-                F.sum(
-                    ((F.col("src") < F.col("dst")) & (F.col("part_a") != F.col("part_b"))).cast("long")
-                ).alias("edges_cut"),
-            ).collect()[0]
-            out["n_edges"] = int(scalars["n_directed"]) // 2
-            if "edges_cut" in requested:
-                out["edges_cut"] = int(scalars["edges_cut"] or 0)
+    # ONE pass over the edge-join: per (src, part), bit_or each
+    # requested rule's part bitset, popcount at the end; the scalar
+    # counts AND the per-rule ownership counts ride along as plain
+    # sums. Map-side partials absorb hub skew (the group value is a
+    # few longs regardless of degree). The per-vertex rows then
+    # re-group by part (V→K rows, a tiny second exchange inside the
+    # same job) and K rows are collected.
+    #
+    # Balance identities (exact, not approximations): a down/up-owned
+    # directed row's owner part IS part_a — the group key — because
+    # ownership picks the src endpoint exactly when the pos comparison
+    # favors it; and exactly one directed row of each undirected edge
+    # satisfies the strict hash-winner predicate below (ties go to the
+    # larger vid, as the reference's rule does on the src < dst row).
+    sel = [
+        "src",
+        F.col("part_a").alias("part"),
+        ((F.col("src") < F.col("dst")) & (F.col("part_a") != F.col("part_b")))
+        .cast("long").alias("cut"),
+    ]
+    aggs = [F.count("*").alias("n_directed"), F.sum("cut").alias("edges_cut")]
+    if "vcom_vol" in ecv_wanted:
+        words = []
+        for w, (ma, mb) in enumerate(zip(_part_bits("part_a", n_words), _part_bits("part_b", n_words))):
+            sel += [ma.alias(f"ma{w}"), mb.alias(f"mb{w}")]
+            words.append(F.bit_or(f"ma{w}").bitwiseOR(F.bit_or(f"mb{w}")))
+        aggs.append(_distinct_minus_one(words).alias("vcom_vol"))
+    jj = j
+    for name, owner in owners.items():
+        key = f"ecv_{name}"
+        if key in ecv_wanted:
+            jj = jj.withColumn(f"{name}_p", owner)
+            bits = _part_bits(f"{name}_p", n_words)
+            sel += [m.alias(f"m_{name}{w}") for w, m in enumerate(bits)]
+            aggs.append(_distinct_minus_one([F.bit_or(f"m_{name}{w}") for w in range(n_words)]).alias(key))
+    if "down_balance" in edge_bal:
+        sel.append((F.col("pos_a") < F.col("pos_b")).cast("long").alias("own_down"))
+        aggs.append(F.sum("own_down").alias("n_down"))
+    if "up_balance" in edge_bal:
+        sel.append((F.col("pos_a") > F.col("pos_b")).cast("long").alias("own_up"))
+        aggs.append(F.sum("own_up").alias("n_up"))
+    if "hash_balance" in edge_bal:
+        h_src = _cormen_hash(F.col("src"))
+        h_dst = _cormen_hash(F.col("dst"))
+        sel.append(
+            ((h_src < h_dst) | ((h_src == h_dst) & (F.col("src") > F.col("dst"))))
+            .cast("long").alias("own_hash")
+        )
+        aggs.append(F.sum("own_hash").alias("n_hash"))
+    per_vertex = jj.select(*sel).groupBy("src", "part").agg(*aggs)
+    final = [F.sum("n_directed").alias("n_directed"), F.sum("edges_cut").alias("edges_cut")]
+    final += [F.sum(m).alias(m) for m in ecv_wanted]
+    bal_col = {"down_balance": "n_down", "up_balance": "n_up", "hash_balance": "n_hash"}
+    final += [F.sum(bal_col[m]).alias(bal_col[m]) for m in edge_bal]
+    rows = per_vertex.groupBy("part").agg(*final).collect()
 
-            def tagged(metric, p_col):
-                return j.select(F.lit(metric).alias("metric"), "src", p_col.alias("p"))
-
-            ecv_rows = None
-            if "vcom_vol" in ecv_wanted:
-                ecv_rows = tagged("vcom_vol", F.col("part_b")).unionAll(
-                    tagged("vcom_vol", F.col("part_a"))
-                )
-            for name, owner in owners.items():
-                key = f"ecv_{name}"
-                if key in ecv_wanted:
-                    t = tagged(key, owner)
-                    ecv_rows = t if ecv_rows is None else ecv_rows.unionAll(t)
-            if ecv_rows is not None:
-                per_vertex = (
-                    ecv_rows.distinct()
-                    .groupBy("metric", "src")
-                    .agg((F.count("*") - 1).alias("c"))
-                    .groupBy("metric")
-                    .agg(F.sum("c").alias("s"))
-                )
-                ecv = {r["metric"]: int(r["s"]) for r in per_vertex.collect()}
-
-            if edge_bal:
-                out.update(_balances(j, owners, edge_bal))
-        finally:
-            j.unpersist()
-
-    # vertex_balance falls out of the O(V) part histogram already
-    # collected above, on both paths
+    out: dict = {"n_edges": sum(int(r["n_directed"] or 0) for r in rows) // 2}
+    if "edges_cut" in requested:
+        out["edges_cut"] = sum(int(r["edges_cut"] or 0) for r in rows)
+    for m in edge_bal:
+        out[m] = max((int(r[bal_col[m]] or 0) for r in rows), default=0)
     if "vertex_balance" in requested:
         out["vertex_balance"] = max((int(r["c"]) for r in part_rows), default=0)
-
     for m in ecv_wanted:
-        out[m] = ecv.get(m, 0)
+        out[m] = sum(int(r[m] or 0) for r in rows)
     if "ecv_down" in requested:
         out["ecv_down_per_edge"] = out["ecv_down"] / max(out["n_edges"], 1)
     return out
-
-
-def _balances(j: DataFrame, owners: dict, wanted: list) -> dict:
-    """Per-part max edge load for each requested ownership rule, in one
-    explode scan of the (cached) >62-part join."""
-    conds = {
-        "down_balance": (F.col("pos_a") < F.col("pos_b"), owners["down"]),
-        "up_balance": (F.col("pos_a") > F.col("pos_b"), owners["up"]),
-        "hash_balance": (F.col("src") < F.col("dst"), owners["hash"]),
-    }
-    elems = [
-        F.when(cond, F.struct(F.lit(m).alias("metric"), owner.alias("part")))
-        for m, (cond, owner) in conds.items()
-        if m in wanted
-    ]
-    rows = (
-        j.select(F.explode(F.array(*elems)).alias("mp"))
-        .where(F.col("mp").isNotNull())
-        .select("mp.metric", "mp.part")
-    )
-    got = {
-        r["metric"]: int(r["m"])
-        for r in rows.groupBy("metric", "part")
-        .count()
-        .groupBy("metric")
-        .agg(F.max("count").alias("m"))
-        .collect()
-    }
-    return {m: got.get(m, 0) for m in wanted}
 
 
 def evaluate_oracle(edges: list[tuple[int, int]], pos: dict[int, int],

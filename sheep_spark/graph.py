@@ -62,6 +62,22 @@ def maybe_broadcast(df: DataFrame, n_rows: int | None = None) -> DataFrame:
     return F.broadcast(df) if n_rows <= BROADCAST_ROW_LIMIT else df
 
 
+def join_endpoints(edges: DataFrame, vertices: DataFrame, cols: tuple[str, ...],
+                   n_vertices: int | None = None) -> DataFrame:
+    """Each undirected edge once, as the ``src < dst`` rows of ``edges``
+    (the doubled table or its canonical half), with the ``vertices``
+    columns ``cols`` joined onto both endpoints as ``<col>_a`` (src) and
+    ``<col>_b`` (dst). The vertex side goes through maybe_broadcast;
+    pass ``n_vertices`` (its row count) to skip the guard's count job.
+    Every join of vertex state onto both edge endpoints goes through
+    here: edges_pos, evaluate.joined_edges, partitioner.down_assign and
+    down_reassign."""
+    v = maybe_broadcast(vertices.select("vid", *cols), n_rows=n_vertices)
+    a = v.select(F.col("vid").alias("src"), *[F.col(c).alias(f"{c}_a") for c in cols])
+    b = v.select(F.col("vid").alias("dst"), *[F.col(c).alias(f"{c}_b") for c in cols])
+    return edges.where(F.col("src") < F.col("dst")).join(a, "src").join(b, "dst")
+
+
 def symmetrize_canonical(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """The canonical half of ``symmetrize``: each undirected edge exactly
     once as (lo, hi), self loops dropped, deduped. Pipelines that cache
@@ -345,22 +361,15 @@ def edges_pos(edges: DataFrame, vertices: DataFrame,
               n_vertices: int | None = None) -> DataFrame:
     """Each undirected edge once, in sequence space: (lo, hi) with lo < hi
     being the endpoint *positions*. This is the input to the tree builder
-    and the down-assignment rule (partition.cpp:505, :623).
+    and the triangle count's degree orientation.
 
-    ``edges`` is the doubled table or its canonical half (src < dst);
-    either way the join runs over the ``src < dst`` rows only. The vertex
-    table is broadcast only under BROADCAST_ROW_LIMIT (maybe_broadcast);
-    beyond that sort-merge/shuffle-hash join co-partitions on vid.
+    ``edges`` is the doubled table or its canonical half (src < dst),
+    joined through ``join_endpoints``.
     """
-    v = maybe_broadcast(vertices.select("vid", "pos"), n_rows=n_vertices)
-    j = (
-        edges.where(F.col("src") < F.col("dst"))
-        .join(v.withColumnRenamed("vid", "src").withColumnRenamed("pos", "pos_src"), "src")
-        .join(v.withColumnRenamed("vid", "dst").withColumnRenamed("pos", "pos_dst"), "dst")
-    )
+    j = join_endpoints(edges, vertices, ("pos",), n_vertices)
     return j.select(
-        F.least("pos_src", "pos_dst").alias("lo"),
-        F.greatest("pos_src", "pos_dst").alias("hi"),
+        F.least("pos_a", "pos_b").alias("lo"),
+        F.greatest("pos_a", "pos_b").alias("hi"),
     )
 
 

@@ -319,19 +319,13 @@ def down_assign(edges_sym: DataFrame, vmeta: DataFrame,
     """``edge_parts(src, dst, part)`` — each undirected edge exactly once
     (src < dst by vid, partition.cpp:615-617), owned by the part of its
     lower-pos endpoint (partition.cpp:623). ``edges_sym`` is the doubled
-    table or its canonical half; only its src < dst rows are read. The
-    vertex side routes through maybe_broadcast, so an over-limit vmeta
-    falls back to a shuffle join rather than a driver-sized broadcast;
-    pass ``n_vertices`` (vmeta's row count) to skip the guard's count
-    job."""
-    from .graph import maybe_broadcast
+    table or its canonical half, joined to vmeta through
+    ``graph.join_endpoints``; pass ``n_vertices`` (vmeta's row count) to
+    skip its broadcast guard's count job."""
+    from .graph import join_endpoints
 
-    v = maybe_broadcast(vmeta, n_rows=n_vertices)
-    a = v.select(F.col("vid").alias("src"), F.col("pos").alias("pos_a"), F.col("part").alias("part_a"))
-    b = v.select(F.col("vid").alias("dst"), F.col("pos").alias("pos_b"), F.col("part").alias("part_b"))
-    once = edges_sym.where(F.col("src") < F.col("dst"))
     return (
-        once.join(a, "src").join(b, "dst")
+        join_endpoints(edges_sym, vmeta, ("pos", "part"), n_vertices)
         .select(
             "src",
             "dst",
@@ -366,14 +360,10 @@ def down_reassign(
     delta itself). Like ``down_assign`` it takes the doubled table or
     its canonical half.
     """
-    from .graph import maybe_broadcast
+    from .graph import join_endpoints, maybe_broadcast
 
-    v = maybe_broadcast(vmeta_new.select("vid", "pos"), n_rows=n_vertices)
-    a = v.select(F.col("vid").alias("src"), F.col("pos").alias("pos_a"))
-    b = v.select(F.col("vid").alias("dst"), F.col("pos").alias("pos_b"))
-    once = edges_sym.where(F.col("src") < F.col("dst"))
     owned = (
-        once.join(a, "src").join(b, "dst")
+        join_endpoints(edges_sym, vmeta_new, ("pos",), n_vertices)
         .select(
             "src",
             "dst",

@@ -2,7 +2,7 @@ import numpy as np
 import pytest
 
 from sheep_spark import _csweep, analytics, graph, tree
-from tests.conftest import degree_pos, edges_df, random_graph
+from tests.conftest import edges_df, random_graph
 
 
 def numpy_pagerank(edges, d=0.85, tol=1e-12, max_iter=2000):
@@ -162,10 +162,13 @@ def triangle_brute(edges):
 
 
 def test_triangle_count_exact(spark):
+    """Exact on the doubled table and on its canonical src < dst half."""
     edges = random_graph(40, 150, seed=23)
     sym = edges_df(spark, edges)
+    canon = graph.symmetrize_canonical(spark.createDataFrame(edges, "src long, dst long"))
     verts = graph.vertices_from_edges(sym)
-    assert analytics.triangle_count(sym, verts) == triangle_brute(edges)
+    for e in (sym, canon):
+        assert analytics.triangle_count(e, verts) == triangle_brute(edges)
 
 
 def python_lpa(edges, iters):

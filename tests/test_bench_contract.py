@@ -131,7 +131,7 @@ def _unused_imports(path):
 def test_no_unused_imports():
     repo = os.path.dirname(PERFBENCH)
     paths = [os.path.join(repo, f) for f in ("bench.py", "__spark_entry__.py")]
-    for sub in ("sheep_spark", "scripts"):
+    for sub in ("sheep_spark", "scripts", "tests"):
         for root, _dirs, files in os.walk(os.path.join(repo, sub)):
             paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
     assert [u for p in sorted(paths) for u in _unused_imports(p)] == []

@@ -1,5 +1,3 @@
-import numpy as np
-
 from sheep_spark import analytics, csr, graph, partitioner
 from tests.conftest import edges_df, random_graph
 

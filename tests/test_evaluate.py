@@ -1,5 +1,7 @@
 import random
 
+import pytest
+
 from sheep_spark import evaluate, graph, partitioner
 from tests.conftest import degree_pos, edges_df, random_graph
 
@@ -79,24 +81,49 @@ def test_metrics_subset_fast_mode(spark):
         assert set(got) == {"n_edges", *subset}, subset
         for k in got:
             assert got[k] == full[k], (subset, k)
-    import pytest
-
     with pytest.raises(ValueError):
         evaluate.evaluate(sym, vmeta, metrics=("nope",))
+    with pytest.raises(ValueError, match="non-negative"):
+        evaluate.evaluate(sym, vmeta.selectExpr("vid", "pos", "part - 1 AS part"))
 
 
-def test_bitmask_and_distinct_paths_agree(spark):
-    """The part count picks the plan: up to 62 parts the single-pass
-    bitmask, above that the tagged-distinct form. Both must equal the
-    python port — here on one graph split into 5 parts and into 70
-    (every part id in use, so the distinct plan runs)."""
-    edges = random_graph(140, 420, seed=3)
-    pos = degree_pos(edges)
-    sym = edges_df(spark, edges)
-    verts = graph.vertices_from_edges(sym)
-    for k in (5, 70):
-        part = {v: i % k for i, v in enumerate(sorted(pos))}
-        assert len(set(part.values())) == k
-        assign = spark.createDataFrame(list(part.items()), "vid long, part int")
-        vmeta = partitioner.vertex_meta(verts, assign)
-        assert evaluate.evaluate(sym, vmeta) == evaluate.evaluate_oracle(edges, pos, part), k
+@pytest.fixture(scope="module")
+def shapes_graph(spark):
+    """Four shapes — random, hub star, path, two components — as disjoint
+    components of one graph (vid offsets of 10^4, ≥ 200 vertices each),
+    with its doubled table and vertices built once."""
+    shapes = [
+        random_graph(260, 700, seed=3),
+        [(0, v) for v in range(1, 241)] + [(v, v + 1) for v in range(1, 240, 7)],
+        [(v, v + 1) for v in range(239)],
+        random_graph(120, 300, seed=5) + [(a + 1000, b + 1000) for a, b in random_graph(120, 300, seed=6)],
+    ]
+    shapes = [[(a + 10_000 * i, b + 10_000 * i) for a, b in e] for i, e in enumerate(shapes)]
+    edges = [e for shape in shapes for e in shape]
+    sym = edges_df(spark, edges).persist()
+    verts = graph.vertices_from_edges(sym).persist()
+    yield shapes, edges, sym, verts
+    verts.unpersist()
+    sym.unpersist()
+
+
+@pytest.mark.parametrize("k", [1, 2, 8, 62, 63, 64, 65, 128, 200])
+def test_every_part_count_matches_oracle(spark, shapes_graph, k):
+    """One plan for every part count: the bitset spans ⌈k/64⌉ words, so
+    the word boundaries (63/64/65, 128) and several words (200) must
+    give the python port's numbers, for the full suite and the CLI
+    subset, with every part id in use in every shape."""
+    shapes, edges, sym, verts = shapes_graph
+    part = {}
+    for shape in shapes:
+        vids = sorted(degree_pos(shape))
+        random.Random(k).shuffle(vids)
+        part.update((v, i % k) for i, v in enumerate(vids))
+        assert {part[v] for v in vids} == set(range(k))
+    assign = spark.createDataFrame(list(part.items()), "vid long, part int")
+    vmeta = partitioner.vertex_meta(verts, assign)
+    want = evaluate.evaluate_oracle(edges, degree_pos(edges), part)
+    assert evaluate.evaluate(sym, vmeta) == want
+    fast = ("edges_cut", "ecv_down", "down_balance")
+    got_fast = evaluate.evaluate(sym, vmeta, metrics=fast)
+    assert {m: got_fast[m] for m in fast} == {m: want[m] for m in fast}
