@@ -6,16 +6,16 @@ propagation, triangle counting. All are expressed as DataFrame joins +
 aggregations so Catalyst picks physical strategies; the per-superstep
 shuffle volume is what sheep's low-ECV(down) partitioning minimizes.
 
-Connected components has two paths, split by one ``count()`` of the
-canonical half against ``tree.DRIVER_TREE_MAX_EDGES`` (the envelope of
-the tree build's driver funnel). At or below it the half is collected
-once and labelled by one union-find pass with the elimination kernel
-(``tree._eliminate``) — no Spark rounds at all. Above it, large/small-star
-contraction runs as Spark rounds with ``max_iter`` and checkpoint/resume.
+Connected components is one union-find, the tree's own: its ``src <
+dst`` rows are labelled in one pass (``_components``), on the driver at
+or below ``tree.DRIVER_TREE_MAX_EDGES`` and, above it, in the last task
+of the tree's map/reduce forest build (``tree.build_parent_edges``). No
+Spark rounds run on either side.
 
-Triangle counting orients each undirected edge once, low pos → high pos,
-through ``graph.edges_pos``, so like the partition path it takes the
-doubled table or its canonical half.
+Connected components and triangle counting take the doubled table or
+its canonical half: CC reads the ``src < dst`` rows, and triangle
+counting orients each undirected edge once, low pos → high pos, through
+``graph.edges_pos``, like the partition path.
 
 Physical notes
 --------------
@@ -183,53 +183,21 @@ def pagerank(
     return state.select("vid", "rank"), info
 
 
-def _large_star(e: DataFrame) -> DataFrame:
-    """Large-star round (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"): for each vertex u, connect every LARGER
-    neighbor to m = min(Γ(u) ∪ {u}). Input/output: canonical parent
-    edges (src > dst). One groupBy + one join — both shuffles on the
-    vertex key."""
-    sym = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    mins = sym.groupBy("src").agg(F.least(F.col("src"), F.min("dst")).alias("m"))
-    return (
-        sym.join(mins, "src")
-        .where(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Small-star round: for each vertex u, connect every SMALLER
-    neighbor (and u itself) to m = min of the smaller neighborhood.
-    Input/output: canonical parent edges (src > dst)."""
-    mins = e.groupBy("src").agg(F.min("dst").alias("m"))
-    rewired = (
-        e.join(mins, "src")
-        .where(F.col("dst") != F.col("m"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-    )
-    self_edge = mins.select("src", F.col("m").alias("dst"))
-    return rewired.unionAll(self_edge).distinct()
-
-
-def _cc_driver(half: DataFrame) -> DataFrame:
-    """CC on the driver: one union-find pass over the collected
-    canonical half (src > dst) → labels(vid, component).
+def _components(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """One union-find pass over undirected (lo, hi) vid pairs with
+    lo < hi → (vids, component), component = min vid per component.
 
     Ids are relabelled to dense indices in vid order and swept by the
-    elimination kernel (tree._eliminate) as (min, max) index pairs; its
-    forest's trees are exactly the components (lib/unionfind.h:34-103).
-    Each node's root comes from pointer doubling over that forest, and
-    component = the minimum vid per root, i.e. the first index seen per
-    root. One collect, one kernel call, one ``tree.upload_columns``
-    (an empty graph yields typed empty labels)."""
-    src, dst = tree.collect_int64_columns(half, ("src", "dst"))
+    elimination kernel (tree._eliminate); its forest's trees are exactly
+    the components (lib/unionfind.h:34-103). Each node's root comes from
+    pointer doubling over that forest, and component = the minimum vid
+    per root, i.e. the first index seen per root. Empty input gives
+    empty int64 arrays."""
     # per-column uniques, then their union: a third of the transient
-    # driver memory of one unique(return_inverse) over both columns
-    vids = np.union1d(np.unique(dst), np.unique(src))
+    # memory of one unique(return_inverse) over both columns
+    vids = np.union1d(np.unique(lo), np.unique(hi))
     n = len(vids)
-    kid, par = tree._eliminate(np.searchsorted(vids, dst), np.searchsorted(vids, src), n)
+    kid, par = tree._eliminate(np.searchsorted(vids, lo), np.searchsorted(vids, hi), n)
     ptr = np.arange(n, dtype=np.int64)
     ptr[kid] = par
     while True:  # pointer doubling to each node's root
@@ -240,118 +208,55 @@ def _cc_driver(half: DataFrame) -> DataFrame:
     roots, first = np.unique(ptr, return_index=True)
     min_idx = np.empty(n, dtype=np.int64)
     min_idx[roots] = first
-    return tree.upload_columns(
-        half.sparkSession, {"vid": vids, "component": vids[min_idx[ptr]]}, LABELS_SCHEMA
-    )
+    return vids, vids[min_idx[ptr]]
 
 
-def connected_components(
-    edges_sym: DataFrame, max_iter: int = 50, checkpointer=None
-) -> tuple[DataFrame, dict]:
+def _components_arrow(batches):
+    """Last-task wrapper of ``_components`` for ``mapInArrow``: the
+    task's (lo, hi) forest edges → one (vid, component) batch."""
+    vids, comp = _components(*tree.concat_lo_hi(batches))
+    yield pa.RecordBatch.from_arrays([pa.array(vids), pa.array(comp)], schema=LABELS_SCHEMA)
+
+
+def connected_components(edges_sym: DataFrame) -> tuple[DataFrame, dict]:
     """Connected components → labels(vid, component), component = min
-    vid in the component, over the canonical half (src > dst) of the
-    edge table. Two paths, chosen by one ``count()`` of that half
-    against ``tree.DRIVER_TREE_MAX_EDGES`` (read at call time — the same
-    envelope as the tree build's driver funnel); ``info["path"]`` says
-    which ran.
+    vid in the component. Reads the ``src < dst`` rows, so it takes the
+    doubled table or its canonical half, like the other edge consumers;
+    a vertex whose only rows are self-loops gets no label.
 
-    ``"driver"`` (at or below the cap): collect the half once and run
-    one union-find pass with the elimination kernel — the reference's
-    in-memory union-find (lib/unionfind.h:34-103) itself. No rounds run,
-    so ``checkpointer`` is neither read nor written and ``max_iter`` is
-    unused; info reports iterations=1, changed=0, converged=True.
+    One algorithm, the reference's union-find (lib/unionfind.h:34-103),
+    labels on both sides of one ``count()`` against
+    ``tree.DRIVER_TREE_MAX_EDGES`` (read at call time — the envelope of
+    the tree build); ``info["path"]`` says which ran and
+    ``info["iterations"]`` is 1 on both.
 
-    ``"star"`` (above the cap): alternating large-star / small-star
-    contraction (Kiveris et al. 2014). Each round rewires every edge
-    toward the minimum of a local neighborhood; the edge set converges
-    to min-rooted stars in O(log² V) rounds worst-case (O(log V)
-    observed), INDEPENDENT of graph diameter — unlike naive min-label
-    propagation (O(diameter)) or single-sided min contraction, which
-    shrinks path graphs by only ~1 vertex per round. Rounds are
-    edge-sized shuffles keyed on vertices. Convergence = the canonical
-    edge set reaches a fixpoint (count + order-insensitive xxhash both
-    stable). Each round is saved to ``checkpointer`` and a run resumes
-    from its newest round.
+    ``"driver"`` (at or below the cap): collect the rows once, label
+    them with ``_components`` and upload the labels.
 
-    If ``max_iter`` rounds pass without a fixpoint (a deliberately
-    bounded run, e.g. kill/resume tests), a RuntimeWarning is emitted
-    and ``info["converged"]`` is False — callers must not treat the
-    labels as final (they previously got silently-wrong labels; ADVICE
-    r1). Partial labels are still a function of vid (min-aggregated).
+    ``"mapreduce"`` (above it): the rows go through the tree's own
+    map/reduce build (``tree.build_parent_edges``), whose forest has the
+    graph's components as its trees and ends in one partition of at
+    most V-1 edges; ``_components`` labels that forest in the same last
+    task (``coalesce(1)`` + ``mapInArrow``). This path has the tree
+    build's envelope: the last task holds the whole forest, and
+    ``tree._eliminate`` raises ValueError at 2^31 or more vertices. The
+    returned frame is lazy, so each action on it re-runs the build.
     """
-    half = edges_sym.where(F.col("src") > F.col("dst")).select("src", "dst")
-    if half.count() <= tree.DRIVER_TREE_MAX_EDGES:
-        info = {"iterations": 1, "changed": 0, "converged": True, "path": "driver"}
-        return _cc_driver(half), info
-
-    edges, edges_owned = _prepare_edges(edges_sym)
-    e = edges.where(F.col("src") > F.col("dst")).select("src", "dst")
-    start_iter = 0
-    if checkpointer is not None:
-        resumed = checkpointer.latest()
-        if resumed is not None:
-            start_iter, e = resumed[0] + 1, resumed[1].select("src", "dst")
-    e = e.localCheckpoint(eager=True)
-
-    def stats(df: DataFrame) -> tuple[int, int]:
-        # order-insensitive digest; decimal(38,0) so the sum of 2^63-scale
-        # hashes can't hit ANSI long overflow at any row count
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    prev = stats(e)
-    info = {"iterations": 0, "changed": prev[0], "converged": prev[0] == 0, "path": "star"}
-    # NOTE (r6): AQE stays ON here, unlike pagerank — CC's edge set
-    # shrinks every round and AQE's runtime join re-selection (small
-    # rounds become broadcast joins) beats the static plan: toggling it
-    # off measured 10.4 s vs 6 s for the sf0.1 CC query.
-    for it in range(start_iter, max_iter):
-        # lazy checkpoint: the stats() collect is the materializing
-        # action, so each round runs ONE job instead of two (r6)
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        cur = stats(e2)
-        e_prev, e = e, e2
-        info["iterations"] = it + 1
-        info["changed"] = cur[0]
-        if checkpointer is not None:
-            checkpointer.save(it, e, {"edges": cur[0]})
-        # digest equality is necessary but (at ~2^-64) not sufficient: on
-        # the terminating round only, confirm with an exact set compare
-        # (ADVICE r2 — a collision would return silently wrong labels)
-        if cur == prev and e2.exceptAll(e_prev).isEmpty():
-            info["converged"] = True
-            info["changed"] = 0  # fixpoint: the last round changed nothing
-            break
-        prev = cur
-    if edges_owned:
-        edges.unpersist()
-    if not info["converged"]:
-        import warnings
-
-        warnings.warn(
-            f"connected_components: no fixpoint after {max_iter} rounds "
-            f"({info['changed']} edges remain) — labels are PARTIAL; "
-            "raise max_iter or resume from the checkpoint",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    labels = (
-        e.select(F.col("src").alias("vid"), F.col("dst").alias("component"))
-        .unionAll(e.select(F.col("dst").alias("vid"), F.col("dst").alias("component")))
-        .groupBy("vid")
-        .agg(F.min("component").alias("component"))
-    )
-    return labels, info
+    half = edges_sym.where(F.col("src") < F.col("dst")).select(
+        F.col("src").alias("lo"), F.col("dst").alias("hi"))
+    n_edges = half.count()
+    spark = half.sparkSession
+    if n_edges <= tree.DRIVER_TREE_MAX_EDGES:
+        vids, comp = _components(*tree.collect_int64_columns(half, ("lo", "hi")))
+        labels = tree.upload_columns(spark, {"vid": vids, "component": comp}, LABELS_SCHEMA)
+        return labels, {"iterations": 1, "path": "driver"}
+    forest = tree.build_parent_edges(half, tree.partial_count(spark, n_edges))
+    labels = forest.coalesce(1).mapInArrow(_components_arrow, "vid long, component long")
+    return labels, {"iterations": 1, "path": "mapreduce"}
 
 
 def label_propagation(
-    edges_sym: DataFrame, max_iter: int = 10, init: DataFrame | None = None,
-    checkpointer=None,
+    edges_sym: DataFrame, max_iter: int = 10, checkpointer=None,
 ) -> tuple[DataFrame, dict]:
     """Synchronous LPA with a fully deterministic schedule: new label =
     most frequent neighbor label, ties broken by smallest label; a vertex
@@ -359,7 +264,7 @@ def label_propagation(
     (deterministic, oracle-friendly) rather than oscillation detection.
     """
     edges, edges_owned = _prepare_edges(edges_sym)
-    labels = init or edges.select(F.col("src").alias("vid")).distinct().withColumn(
+    labels = edges.select(F.col("src").alias("vid")).distinct().withColumn(
         "label", F.col("vid")
     )
     start_iter = 0

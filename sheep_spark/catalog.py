@@ -12,7 +12,7 @@ identical schema and the same call sites. On a real cluster, set
 
 and pass ``local.db.pages``-style refs; everything downstream —
 snapshot-based checkpoint lineage included — works unchanged because
-all access funnels through these two functions.
+all reads funnel through ``read_table``.
 """
 
 from __future__ import annotations
@@ -31,13 +31,3 @@ def read_table(spark: SparkSession, ref: str) -> DataFrame:
     if _is_path(ref):
         return spark.read.parquet(ref)
     return spark.read.table(ref)
-
-
-def write_table(df: DataFrame, ref: str, mode: str = "overwrite", partition_by=None) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if _is_path(ref):
-        writer.parquet(ref)
-    else:
-        writer.saveAsTable(ref)

@@ -36,8 +36,9 @@ Merging two partials (merge_trees.cpp) needs no function of its own:
 it is ``build_parent_edges`` over the union of their tree edges.
 
 The forest's trees are exactly the graph's connected components, so
-``analytics.connected_components`` reuses ``_eliminate`` (below the same
-DRIVER_TREE_MAX_EDGES cap) as its one-pass union-find.
+``analytics.connected_components`` is this same union-find on both
+sides of the DRIVER_TREE_MAX_EDGES cap: one ``_eliminate`` call on the
+driver at or below it, ``build_parent_edges`` above it.
 
 pst_weight needs no kernel: it counts later neighbors (jtree.cpp:47-49),
 i.e. ``bincount(lo)`` on the driver or ``groupBy(lo).count()`` over the
@@ -140,6 +141,17 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
     return kid_out[:n_out], par_out[:n_out]
 
 
+def concat_lo_hi(batches: Iterator[pa.RecordBatch]) -> tuple[np.ndarray, np.ndarray]:
+    """A ``mapInArrow`` task's two columns as int64 arrays (empty arrays
+    for a task with no batches)."""
+    los, his = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for b in batches:
+        los.append(b.column(0).to_numpy(zero_copy_only=False))
+        his.append(b.column(1).to_numpy(zero_copy_only=False))
+    return (np.concatenate(los).astype(np.int64, copy=False),
+            np.concatenate(his).astype(np.int64, copy=False))
+
+
 def _eliminate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Per-task kernel wrapper: remap the slice's vertices to dense local
     ids before the sweep, map tree edges back after. The sweep depends
@@ -148,14 +160,7 @@ def _eliminate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
     per-task state shrinks from O(global V) to O(vertices present in the
     slice). At 10^9 global vertices a 2M-edge slice costs ~32 MB, not
     16 GB."""
-    los, his = [], []
-    for b in batches:
-        los.append(b.column(0).to_numpy(zero_copy_only=False))
-        his.append(b.column(1).to_numpy(zero_copy_only=False))
-    if not los:
-        return
-    lo = np.concatenate(los).astype(np.int64, copy=False)
-    hi = np.concatenate(his).astype(np.int64, copy=False)
+    lo, hi = concat_lo_hi(batches)
     verts = np.unique(np.concatenate([lo, hi]))
     kid_l, par_l = _eliminate(
         np.searchsorted(verts, lo), np.searchsorted(verts, hi), len(verts)
@@ -189,6 +194,14 @@ def build_parent_edges(edges_pos_df: DataFrame, n_partials: int) -> DataFrame:
         p = max(1, p // MERGE_FAN_IN)
         t = t.repartition(p).mapInArrow(_eliminate_arrow, TREE_EDGE_SCHEMA)
     return t
+
+
+def partial_count(spark, n_edges: int) -> int:
+    """Stage-1 partials of a map/reduce build over ``n_edges`` edges:
+    enough that a slice stays ~2M edges (so each task's sweep stays
+    short, even on the interpreted fallback), and at least one per
+    default-parallelism slot."""
+    return max(spark.sparkContext.defaultParallelism, n_edges // 2_000_000 + 1)
 
 
 # Above this the collected edge list stops fitting comfortably on a
@@ -281,10 +294,9 @@ def build_tree(edges_pos_df: DataFrame, n_vertices: int,
     (no job run), else one ``count()``. At most DRIVER_TREE_MAX_EDGES
     edges take the driver funnel — one collect, one kernel call with
     the pst weight as its byproduct, one upload, and the input scanned
-    exactly once. Above it the map/reduce build runs with enough
-    partials that a stage-1 slice stays ~2M edges (so each task's sweep
-    stays short, even on the interpreted fallback) and pst_weight is a
-    ``groupBy(lo)``. Both paths give the same tree.
+    exactly once. Above it the map/reduce build runs with
+    ``partial_count`` partials and pst_weight is a ``groupBy(lo)``. Both
+    paths give the same tree.
     """
     if n_edges is None:
         n_edges = edges_pos_df.count()
@@ -293,8 +305,7 @@ def build_tree(edges_pos_df: DataFrame, n_vertices: int,
         lo, hi = collect_int64_columns(edges_pos_df, ("lo", "hi"))
         return tree_df_from_arrays(spark, build_tree_arrays(lo, hi, n_vertices))
     edges_pos_df = edges_pos_df.persist()
-    n_partials = max(spark.sparkContext.defaultParallelism, n_edges // 2_000_000 + 1)
-    parents = build_parent_edges(edges_pos_df, n_partials)
+    parents = build_parent_edges(edges_pos_df, partial_count(spark, n_edges))
     parents = parents.withColumnRenamed("lo", "jnid").withColumnRenamed("hi", "parent")
     pst = edges_pos_df.groupBy(F.col("lo").alias("jnid")).agg(F.count("*").alias("pst_weight"))
     base = spark.range(n_vertices).select(F.col("id").alias("jnid"))
@@ -356,12 +367,9 @@ def load_tree(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def save_sequence(vertices: DataFrame, path: str) -> None:
-    """Sequence sink (.seq, sequence.h:133-184 → parquet of vertices)."""
-    vertices.select("vid", "degree", "pos").write.mode("overwrite").parquet(path)
-
-
 def load_sequence(spark, path: str) -> DataFrame:
+    """Reopen a sequence (.seq, sequence.h:133-184 → parquet of vid,
+    degree, pos)."""
     return spark.read.parquet(path)
 
 

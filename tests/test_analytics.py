@@ -46,34 +46,7 @@ def test_connected_components_exact(spark):
     labels, info = analytics.connected_components(sym)
     got = {r.vid: r.component for r in labels.collect()}
     assert got == {0: 0, 1: 0, 2: 0, 5: 5, 6: 5, 7: 7, 8: 7, 9: 7, 20: 20, 21: 20}
-    assert info["changed"] == 0
-
-
-def test_connected_components_path_graph_logarithmic(spark, monkeypatch):
-    """Diameter-independence regression (ADVICE r1): a 400-vertex path has
-    diameter 399; star contraction must label it in O(log V) rounds, not
-    O(diameter). Single-sided min contraction shrinks paths ~1 vertex
-    per round and would blow the round budget here. Pinned to the star
-    path (cap 0): below the cap CC runs no rounds at all."""
-    monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", 0)
-    n = 400
-    sym = edges_df(spark, [(i, i + 1) for i in range(n - 1)])
-    labels, info = analytics.connected_components(sym, max_iter=25)
-    assert info["converged"] and info["iterations"] <= 25
-    got = {r.vid: r.component for r in labels.collect()}
-    assert got == {v: 0 for v in range(n)}
-
-
-def test_connected_components_unconverged_warns(spark, monkeypatch):
-    import warnings
-
-    monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", 0)  # the star path has rounds
-    sym = edges_df(spark, [(i, i + 1) for i in range(64)])
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        _, info = analytics.connected_components(sym, max_iter=1)
-    assert not info["converged"]
-    assert any(issubclass(x.category, RuntimeWarning) for x in w)
+    assert info == {"iterations": 1, "path": "driver"}
 
 
 def test_connected_components_random_vs_unionfind(spark):
@@ -85,8 +58,8 @@ def test_connected_components_random_vs_unionfind(spark):
 
 
 def _cc_oracle(rows):
-    """Plain union-find over the rows with src > dst — the canonical half
-    both CC paths read — → {vid: min vid of its component}."""
+    """Plain union-find over the rows with src < dst — the rows both CC
+    paths read — → {vid: min vid of its component}."""
     uf = {}
 
     def find(x):
@@ -95,7 +68,7 @@ def _cc_oracle(rows):
         return x
 
     for a, b in rows:
-        if a > b:
+        if a < b:
             ra, rb = find(a), find(b)
             uf[max(ra, rb)] = min(ra, rb)
     return {v: find(v) for v in uf}
@@ -120,30 +93,34 @@ CC_SHAPES = {
 }
 
 
+# The name is kept from when the above-cap path was star contraction; it
+# now checks the map/reduce union-find.
 @pytest.mark.parametrize("shape", sorted(CC_SHAPES))
 def test_connected_components_driver_and_star_match_unionfind(spark, monkeypatch, shape):
-    """Differential CC: the driver path (compiled sweep, then interpreted
-    sweep) and the star path (pinned by a cap of -1, so even the empty
-    input takes it) must each equal a plain union-find oracle."""
+    """Differential CC on the rows as given and on their canonical
+    src < dst half (graph.symmetrize_canonical): the driver path
+    (compiled sweep, then interpreted sweep) and the map/reduce path
+    (pinned by a cap of -1, so even the empty input takes it) must each
+    label both like a plain union-find oracle, in one pass."""
     rows = CC_SHAPES[shape]
-    df = spark.createDataFrame(rows, "src long, dst long")
-    want = _cc_oracle(rows)
+    raw = spark.createDataFrame(rows, "src long, dst long")
+    canon_rows = [(min(a, b), max(a, b)) for a, b in rows]
 
-    def run():
+    def run(df):
         labels, info = analytics.connected_components(df)
         assert labels.dtypes == [("vid", "bigint"), ("component", "bigint")]
-        return {r.vid: r.component for r in labels.collect()}, info
+        assert info["iterations"] == 1
+        return {r.vid: r.component for r in labels.collect()}, info["path"]
 
-    got, info = run()
-    assert info["path"] == "driver" and info["converged"] and info["iterations"] == 1
-    assert got == want
-    with monkeypatch.context() as mp:
-        mp.setattr(_csweep, "loaded", lambda: None)
-        assert run()[0] == want
-    monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", -1)
-    got, info = run()
-    assert info["path"] == "star" and info["converged"]
-    assert got == want
+    for df, form_rows in ((raw, rows), (graph.symmetrize_canonical(raw), canon_rows)):
+        want = _cc_oracle(form_rows)
+        assert run(df) == (want, "driver")
+        with monkeypatch.context() as mp:
+            mp.setattr(_csweep, "loaded", lambda: None)
+            assert run(df) == (want, "driver")
+        with monkeypatch.context() as mp:
+            mp.setattr(tree, "DRIVER_TREE_MAX_EDGES", -1)
+            assert run(df) == (want, "mapreduce")
 
 
 def triangle_brute(edges):
