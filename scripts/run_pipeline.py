@@ -44,7 +44,12 @@ def main() -> None:
         help="evaluate the full 10-metric suite (default: the headline "
         "edges_cut/ecv_down/down_balance subset — ~3x less work)",
     )
-    ap.add_argument("--checkpoint-dir", help="superstep checkpoint root (resumable)")
+    ap.add_argument(
+        "--checkpoint-dir",
+        help="PageRank superstep checkpoint root (resumable); checkpoints are "
+        "written only above analytics.DRIVER_ANALYTICS_MAX_EDGES undirected edges — "
+        "at or below it PageRank runs on the driver and has nothing to resume",
+    )
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
 
@@ -119,6 +124,7 @@ def main() -> None:
         report["pagerank"] = {
             "iterations": info["iterations"],
             "l1_delta": info["l1_delta"],
+            "path": info["path"],
             "wall_s": round(time.time() - t3, 2),
         }
 

@@ -123,6 +123,63 @@ def test_connected_components_driver_and_star_match_unionfind(spark, monkeypatch
             assert run(df) == (want, "mapreduce")
 
 
+def _undirected(rows):
+    """Each undirected edge of ``rows`` once, self loops dropped — the
+    graph graph.symmetrize keeps."""
+    return sorted({(min(a, b), max(a, b)) for a, b in rows if a != b})
+
+
+@pytest.mark.parametrize("shape", sorted(CC_SHAPES))
+def test_pagerank_driver_and_spark_match_oracle(spark, monkeypatch, shape):
+    """Differential PageRank over graph.symmetrize of each shape and
+    over graph.symmetrize_canonical: the driver path and the Spark path
+    (pinned by a cap of -1) each agree with numpy_pagerank at a fixed 5
+    supersteps to 1e-12 relative error, on the same vertex set. An empty
+    graph gives an empty typed frame and 0 iterations on both."""
+    edges = _undirected(CC_SHAPES[shape])
+    raw = spark.createDataFrame(CC_SHAPES[shape], "src long, dst long")
+    want = numpy_pagerank(edges, tol=0.0, max_iter=5) if edges else {}
+
+    def run(path):
+        for e in (graph.symmetrize(raw), graph.symmetrize_canonical(raw)):
+            check(path, *analytics.pagerank(e, tol=0.0, max_iter=5))
+
+    def check(path, ranks, info):
+        assert ranks.dtypes == [("vid", "bigint"), ("rank", "double")]
+        assert info["path"] == path
+        assert info["iterations"] == (5 if edges else 0)
+        assert info["n_vertices"] == len(want)
+        assert len(info["superstep_secs"]) == info["iterations"]
+        got = {r.vid: r.rank for r in ranks.collect()}
+        assert set(got) == set(want)
+        assert all(abs(got[v] - want[v]) <= 1e-12 * want[v] for v in want)
+
+    run("driver")
+    with monkeypatch.context() as mp:
+        mp.setattr(tree, "DRIVER_TREE_MAX_EDGES", -1)
+        run("spark")
+
+
+def test_pagerank_vertices_count_and_convergence_match_paths(spark, monkeypatch):
+    """With ``vertices`` given, n is its count on both paths, and the
+    driver path stops at the same superstep as the Spark path under a
+    tolerance. The Spark path is taken here by PageRank's own cap."""
+    edges = random_graph(60, 140, seed=19)
+    sym = edges_df(spark, edges)
+    verts = graph.vertices_from_edges(sym)
+    extra = spark.createDataFrame([(10**6, 1, 60)], "vid long, degree long, pos long")
+    runs = {}
+    for path, cap in (("driver", analytics.DRIVER_ANALYTICS_MAX_EDGES), ("spark", -1)):
+        with monkeypatch.context() as mp:
+            mp.setattr(analytics, "DRIVER_ANALYTICS_MAX_EDGES", cap)
+            ranks, info = analytics.pagerank(sym, verts.unionAll(extra), tol=1e-4, max_iter=100)
+            assert info["path"] == path and info["n_vertices"] == 61
+            runs[path] = ({r.vid: r.rank for r in ranks.collect()}, info["iterations"])
+    (d, d_it), (s_, s_it) = runs["driver"], runs["spark"]
+    assert d_it == s_it and set(d) == set(s_)
+    assert all(abs(d[v] - s_[v]) <= 1e-12 * s_[v] for v in d)
+
+
 def triangle_brute(edges):
     adj = {}
     for a, b in edges:
@@ -146,6 +203,40 @@ def test_triangle_count_exact(spark):
     verts = graph.vertices_from_edges(sym)
     for e in (sym, canon):
         assert analytics.triangle_count(e, verts) == triangle_brute(edges)
+
+
+@pytest.mark.parametrize("shape", sorted(CC_SHAPES))
+def test_triangle_count_every_path_matches_brute(spark, monkeypatch, shape):
+    """Differential triangle count on graph.symmetrize of each shape and
+    on graph.symmetrize_canonical: the driver path, the driver path
+    checking one wedge per batch, and the Spark path (cap -1) all equal
+    triangle_brute."""
+    raw = spark.createDataFrame(CC_SHAPES[shape], "src long, dst long")
+    sym = graph.symmetrize(raw)
+    verts = graph.vertices_from_edges(sym)
+    want = triangle_brute(_undirected(CC_SHAPES[shape]))
+    for e in (sym, graph.symmetrize_canonical(raw)):
+        assert analytics.triangle_count(e, verts) == want
+        with monkeypatch.context() as mp:
+            mp.setattr(analytics, "WEDGE_BATCH", 1)
+            assert analytics.triangle_count(e, verts) == want
+        with monkeypatch.context() as mp:
+            mp.setattr(tree, "DRIVER_TREE_MAX_EDGES", -1)
+            assert analytics.triangle_count(e, verts) == want
+
+
+@pytest.mark.parametrize("batch", [1, 5, 64, analytics.WEDGE_BATCH])
+def test_triangles_every_batch_size_matches_brute(monkeypatch, batch):
+    """_triangles gives triangle_brute's count on random graphs whatever
+    the wedge batch size, batch boundaries inside a row included."""
+    monkeypatch.setattr(analytics, "WEDGE_BATCH", batch)
+    rng = np.random.default_rng(7)
+    for _ in range(20):
+        n = int(rng.integers(1, 80))
+        edges = _undirected(zip(rng.integers(0, n, 300).tolist(), rng.integers(0, n, 300).tolist()))
+        lo = np.array([a for a, _ in edges], dtype=np.int64)
+        hi = np.array([b for _, b in edges], dtype=np.int64)
+        assert analytics._triangles(lo, hi, n) == triangle_brute(edges)
 
 
 def python_lpa(edges, iters):

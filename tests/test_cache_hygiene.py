@@ -38,13 +38,15 @@ def test_textops_pair_ops_release_dependency_caches(spark):
     assert _cache_manager_empty(spark)
 
 
-def test_triangle_count_releases_oriented_cache(spark):
+def test_triangle_count_releases_oriented_cache(spark, monkeypatch):
     """VERDICT r3 leak fix: triangle_count persists the oriented edge
-    table for the 3-scan wedge join, and must release it."""
+    table for the 3-scan wedge join, and must release it. That is the
+    Spark path, taken here with the driver cap set to -1."""
     from tests.conftest import edges_df, random_graph
 
-    from sheep_spark import analytics, graph
+    from sheep_spark import analytics, graph, tree
 
+    monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", -1)
     spark.catalog.clearCache()
     edges = edges_df(spark, random_graph(60, 150, seed=7))
     verts = graph.vertices_from_edges(edges)

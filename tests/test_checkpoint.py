@@ -1,15 +1,18 @@
-from sheep_spark import analytics
+from sheep_spark import analytics, tree
 from sheep_spark.checkpointing import Checkpointer
 from tests.conftest import edges_df, random_graph
 
 
-def test_pagerank_resume_matches_straight_run(spark, tmp_path):
+def test_pagerank_resume_matches_straight_run(spark, tmp_path, monkeypatch):
     """Kill after superstep i → resume from checkpoint → same scores
-    (FIXTURES.md F8)."""
+    (FIXTURES.md F8). Only the Spark path checkpoints, so the cap is set
+    to -1 to take it on this small graph."""
+    monkeypatch.setattr(tree, "DRIVER_TREE_MAX_EDGES", -1)
     edges = random_graph(50, 110, seed=31)
     sym = edges_df(spark, edges)
 
     straight, info = analytics.pagerank(sym, tol=1e-7, max_iter=12)
+    assert info["path"] == "spark"
     want = {r.vid: r.rank for r in straight.collect()}
 
     ck = Checkpointer(spark, str(tmp_path / "pr"), job="pagerank")

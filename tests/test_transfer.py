@@ -33,6 +33,7 @@ EXPECTED = {
     "vertex_meta_from_arrays": _struct(("vid", L), ("pos", L), ("part", I)),
     "fennel_partition": VID_PART,
     "connected_components": _struct(("vid", L), ("component", L)),
+    "pagerank": _struct(("vid", L), ("rank", T.DoubleType())),
     "mint_vertex_ids": _struct(("url", S), ("vid", L)),
     "build_jxn_tree": _struct(("jnid", L), ("pos", L), ("parent", L), ("pst_weight", L),
                               ("width", L)),
@@ -60,6 +61,12 @@ def _cc(spark, empty):
     return labels
 
 
+def _pagerank(spark, empty):
+    ranks, info = analytics.pagerank(_sym(spark, empty), max_iter=3)
+    assert info["path"] == "driver"
+    return ranks
+
+
 def _jxn(spark, empty):
     sym = _sym(spark, empty)
     verts = graph.vertices_from_edges(sym)
@@ -79,6 +86,7 @@ SITES = {
         spark, [10, 11, 12], [2, 0, 1], [0, 1, 1]),
     "fennel_partition": _fennel,
     "connected_components": _cc,
+    "pagerank": _pagerank,
     "mint_vertex_ids": lambda spark, e: extract.mint_vertex_ids(spark.createDataFrame(
         [] if e else [("a", "b"), ("b", "c")], "src_url string, dst_url string")),
     "build_jxn_tree": _jxn,
